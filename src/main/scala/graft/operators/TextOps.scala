@@ -214,13 +214,7 @@ object TextOps {
       if (callerCached) sigs0.select("doc_id", "minhash")
       else sigs0.select("doc_id", "minhash")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val capped = bandBuckets(sigs, bands, r)
-    val a = capped.select(col("band"), col("band_hash"), col("doc_id").as("a_id"))
-    val b = capped.select(col("band"), col("band_hash"), col("doc_id").as("b_id"))
-    val pairs = a.join(b, Seq("band", "band_hash"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id")
-      .distinct()
+    val pairs = bucketPairs(bandBuckets(sigs, bands, r), "doc_id").distinct()
     // release only a cache WE created; a caller-persisted input has a
     // caller-owned lifecycle
     if (!callerCached) graft.CacheHygiene.unpersistAfterNextAction(sigs)
@@ -230,6 +224,16 @@ object TextOps {
       .join(sigs.select(col("doc_id").as("b_id"), col("minhash").as("sig_b")),
         Seq("b_id"))
       .select("a_id", "b_id", "sig_a", "sig_b")
+  }
+
+  /** (a_id, b_id) pairs, a_id < b_id, of docs sharing a bucket of a
+    * capped (band, band_hash, `id`) frame — one row per shared bucket. */
+  private def bucketPairs(capped: DataFrame, id: String): DataFrame = {
+    val a = capped.select(col("band"), col("band_hash"), col(id).as("a_id"))
+    val b = capped.select(col("band"), col("band_hash"), col(id).as("b_id"))
+    a.join(b, Seq("band", "band_hash"))
+      .filter(col("a_id") < col("b_id"))
+      .select("a_id", "b_id")
   }
 
   /** (doc_id, band, band_hash) bucket rows derived from a signature
@@ -385,95 +389,109 @@ object TextOps {
     * delta never matches BEFORE any data read, survivors prune the
     * bucket partitions they hash to, and the few surviving
     * candidates' signatures come from only their hash partitions —
-    * the index is no longer scanned per batch. */
+    * the index is no longer scanned per batch. The probe runs once,
+    * here: the returned frame holds its rows (see
+    * [[incrementalNearDupsIndexedFromSigs]]). */
   def incrementalNearDupsIndexed(delta: DataFrame, root: String,
       threshold: Double = 0.5): DataFrame = {
-    val spark = delta.sparkSession
-    val m = graft.ops.MinhashStore.meta(spark, root)
+    val m = graft.ops.MinhashStore.meta(delta.sparkSession, root)
     val deltaSigs = minhashIndex(delta, m.bands * m.r)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val res = incrementalNearDupsIndexedFromSigs(deltaSigs, root, threshold)
-    // registered AFTER the probe's internal collect-jobs (which read
-    // deltaSigs and must not count as the releasing consumer) — and
-    // after the listener bus drains, or those jobs' late-delivered
-    // events still consume the hook's quota
-    org.apache.spark.sql.GraftShim.drainListenerBus(spark)
-    graft.CacheHygiene.unpersistAfterNextAction(deltaSigs)
-    res
+    try incrementalNearDupsIndexedFromSigs(deltaSigs, root, threshold)
+    finally { deltaSigs.unpersist(false); () }
   }
 
-  /** [[incrementalNearDupsIndexed]] with pre-computed (and
-    * caller-persisted) delta signatures. */
+  /** [[incrementalNearDupsIndexed]] with pre-computed delta signatures
+    * (persisting `deltaSigs` is the caller's concern: the probe reads
+    * it several times). Runs the probe to completion before returning:
+    * the probe keys (the capped delta buckets), the candidate pairs
+    * and their distinct store ids are each computed once, persisted
+    * where both a decision job and the final job read them, and
+    * released on return. The returned frame is a driver-local relation
+    * of the dup rows — at most one 24-byte row per delta doc, far
+    * smaller than the delta-bucket broadcast the probe already makes —
+    * so every later consumer reads rows, never the probe's lineage, and
+    * no cache outlives the call. */
   def incrementalNearDupsIndexedFromSigs(deltaSigs: DataFrame,
       root: String, threshold: Double = 0.5): DataFrame = {
     val spark = deltaSigs.sparkSession
     val m = graft.ops.MinhashStore.meta(spark, root)
     val perms = m.bands * m.r
-    // capped delta buckets — the same probe stream the parquet path
-    // broadcasts, so the matched postings (and thus candidates) are
-    // identical row for row
-    val probes = bandBuckets(deltaSigs, m.bands, m.r)
-      .withColumnRenamed("doc_id", "new_id")
-    val matched =
-      graft.ops.MinhashStore.matchedPostings(spark, root, probes)
-    val stats = graft.ops.MinhashStore.lastProbeStats.get()
-    val cross0 = capBuckets(matched, Seq("band", "band_hash", "new_id"))
-      .select(col("new_id"), col("doc_id").as("old_id"))
-      .distinct()
-    // when EVERY segment already fell back to its sig scan (dup-heavy
-    // delta), candidate-side pruning is pointless: fetch signatures
-    // lazily from the full store — no cross materialization job, no
-    // extra pass; the whole probe collapses to the pre-store plan
-    val allFellBack = stats != null && stats.segments > 0 &&
-      stats.fullScanSegments == stats.segments
-    val (cross, sigOld) =
-      if (allFellBack)
-        (cross0, graft.ops.MinhashStore.sigsAll(spark, root)
-          .select(col("doc_id").as("old_id"), col("minhash").as("sig_old")))
-      else {
-        val c = cross0
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // sigsFor's internal collect materializes `c` here; the final
-        // consumer action releases it (bus drained first — see
-        // incrementalNearDupsIndexed)
-        val so = graft.ops.MinhashStore
-          .sigsFor(spark, root, c.select(col("old_id")))
-          .select(col("doc_id").as("old_id"), col("minhash").as("sig_old"))
-        org.apache.spark.sql.GraftShim.drainListenerBus(spark)
-        graft.CacheHygiene.unpersistAfterNextAction(c)
-        (c, so)
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def hold(df: DataFrame): DataFrame = {
+      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      held += p
+      p
+    }
+    try {
+      // capped delta buckets — the same probe stream the parquet path
+      // broadcasts, so the matched postings (and thus candidates) are
+      // identical row for row; the within-delta pairs reuse it
+      val probes = hold(bandBuckets(deltaSigs, m.bands, m.r)
+        .withColumnRenamed("doc_id", "new_id"))
+      val probe = graft.ops.MinhashStore.matchedPostings(spark, root, probes)
+      // candidate (new_id, old_id) pairs, tagged by where old_id lives:
+      // the store (capped per bucket and delta doc over the matched
+      // postings, as on the scan path) or the delta itself (the later
+      // doc duplicates the earlier one) — one distinct, one signature
+      // fetch per side for both kinds
+      val cands0 = capBuckets(probe.postings, Seq("band", "band_hash", "new_id"))
+        .select(col("new_id"), col("doc_id").as("old_id"),
+          lit(false).as("in_delta"))
+        .unionByName(bucketPairs(probes, "new_id")
+          .select(col("b_id").as("new_id"), col("a_id").as("old_id"),
+            lit(true).as("in_delta")))
+        .distinct()
+      // when every segment the probe reads fell back to its sig scan
+      // (dup-heavy delta, or segments small next to the probe's spread),
+      // candidate-side pruning is pointless: their signatures come from
+      // those scans — no candidate decision job, no extra pass
+      val (cands, storeSigs) = probe.scannedSigs match {
+        case Some(sigs) => (cands0, sigs)
+        case None =>
+          val c = hold(cands0)
+          (c, graft.ops.MinhashStore.sigsFor(spark, root,
+            hold(c.filter(!col("in_delta")).select(col("old_id")).distinct())))
       }
-    val crossScored = sigOld
-      .join(broadcast(cross), Seq("old_id"))
-      .join(broadcast(deltaSigs.select(col("doc_id").as("new_id"),
-        col("minhash").as("sig_new"))), Seq("new_id"))
-      .select(col("new_id"), col("old_id"),
-        agreeFrac("sig_new", "sig_old", perms).as("est_jaccard"))
-    val within = lshCandidatePairs(deltaSigs, m.bands, m.r)
-      .select(col("b_id").as("new_id"), col("a_id").as("old_id"),
-        agreeFrac("sig_a", "sig_b", perms).as("est_jaccard"))
-    bestDupPerDoc(crossScored.unionByName(within), threshold)
+      def oldSigs(sigs: DataFrame, inDelta: Boolean): DataFrame =
+        sigs.select(col("doc_id").as("old_id"), col("minhash").as("sig_old"),
+          lit(inDelta).as("in_delta"))
+      val scored = oldSigs(storeSigs, inDelta = false)
+        .unionByName(oldSigs(deltaSigs, inDelta = true))
+        .join(broadcast(cands), Seq("old_id", "in_delta"))
+        .join(broadcast(deltaSigs.select(col("doc_id").as("new_id"),
+          col("minhash").as("sig_new"))), Seq("new_id"))
+        .select(col("new_id"), col("old_id"),
+          agreeFrac("sig_new", "sig_old", perms).as("est_jaccard"))
+      val dups = bestDupPerDoc(scored, threshold)
+      val rows = graft.BenchPhases.timed("mhstore.probe_rows") {
+        dups.collect()
+      }
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), dups.schema)
+    } finally { held.foreach(_.unpersist(false)) }
   }
 
   /** [[incrementalDedupRound]] against a [[graft.ops.MinhashStore]]:
-    * same three frames, O(delta) index I/O. Fold survivors forward
-    * with `MinhashStore.append(minhashIndex(survivors), root)` — a new
-    * merge-on-read segment, never a rewrite. */
+    * same three frames, O(delta) index I/O. The store probe runs once,
+    * inside this call ([[incrementalNearDupsIndexed]]): `dups` is a
+    * driver-local relation of its rows, every cache it used is
+    * released before this returns, and no listener is registered.
+    * `survivors` anti-joins the delta against those rows, so folding
+    * them forward with `MinhashStore.append(minhashIndex(survivors),
+    * root)` — a new merge-on-read segment, never a rewrite — re-reads
+    * the delta text but never the store. `updatedIndex` unions the
+    * store's segments as of this call with the surviving delta
+    * signatures, recomputed from the delta text if read. */
   def incrementalDedupRoundIndexed(delta: DataFrame, root: String,
       threshold: Double = 0.5): IncrementalDedupRound = {
     val spark = delta.sparkSession
     val m = graft.ops.MinhashStore.meta(spark, root)
-    val deltaSigs = minhashIndex(delta, m.bands * m.r)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dups = incrementalNearDupsIndexedFromSigs(deltaSigs, root, threshold)
+    val dups = incrementalNearDupsIndexed(delta, root, threshold)
     val survivors = delta.join(dups.select("doc_id"), Seq("doc_id"),
       "left_anti")
     val updatedIndex = graft.ops.MinhashStore.sigsAll(spark, root)
-      .unionByName(
-        deltaSigs.join(dups.select("doc_id"), Seq("doc_id"), "left_anti"))
-    org.apache.spark.sql.GraftShim.drainListenerBus(spark)
-    graft.CacheHygiene.unpersistAfterNextAction(deltaSigs,
-      releaseAfterConsumers = 2)
+      .unionByName(minhashIndex(delta, m.bands * m.r)
+        .join(dups.select("doc_id"), Seq("doc_id"), "left_anti"))
     IncrementalDedupRound(dups, survivors, updatedIndex)
   }
 
@@ -483,11 +501,15 @@ object TextOps {
     * ([[incrementalNearDups]]), keep the survivors, and fold ONLY the
     * survivors' signatures back into the index so tomorrow's delta
     * deduplicates against today's corpus without the index ever holding
-    * two rows for one near-dup cluster. Both returned frames are lazy;
-    * `updatedIndex` is `|index| + |surviving delta|` rows of
-    * (doc_id, minhash) — callers persist it (parquet / graft table)
-    * as the next round's input, an O(corpus) append-only sidecar of
-    * ~0.5 KB/doc. The indexed corpus TEXT is never re-read. */
+    * two rows for one near-dup cluster. [[incrementalDedupRound]]
+    * returns three lazy frames over one signature cache;
+    * [[incrementalDedupRoundIndexed]] returns `dups` already
+    * materialized (driver-local rows, caches released on return) and
+    * `survivors`/`updatedIndex` derived from those rows. `updatedIndex`
+    * is `|index| + |surviving delta|` rows of (doc_id, minhash) —
+    * callers persist it (parquet / graft table) as the next round's
+    * input, an O(corpus) append-only sidecar of ~0.5 KB/doc. The
+    * indexed corpus TEXT is never re-read. */
   case class IncrementalDedupRound(
       dups: DataFrame, survivors: DataFrame, updatedIndex: DataFrame)
 

@@ -4,6 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Persisted, probe-prunable MinHash near-dup index (r17 VERDICT #2).
@@ -90,12 +91,40 @@ object MinhashStore {
 
   final case class Meta(bands: Int, r: Int, segments: Seq[String])
 
-  /** Per-probe observability for specs and the refresh probe. */
+  /** One probe's shape, returned with its postings by
+    * [[matchedPostings]]. */
   final case class ProbeStats(segments: Int, probeKeys: Long,
       survivors: Long, partsTouched: Int, partsTotal: Int,
       fullScanSegments: Int)
+  /** [[matchedPostings]]'s result. `scannedSigs` is set when no segment
+    * the probe reads was pruned: every candidate then comes from a
+    * segment whose signatures the probe scans whole, so the candidates'
+    * signatures are those segments' signatures, fetched without a
+    * partition decision. */
+  final case class Probe(postings: DataFrame, stats: ProbeStats,
+      scannedSigs: Option[DataFrame])
+  /** The latest probe's stats, JVM-wide — an observability hook for
+    * specs and the refresh probe only; callers decide from the stats
+    * [[matchedPostings]] returns, which no other session can swap. */
   val lastProbeStats =
     new java.util.concurrent.atomic.AtomicReference[ProbeStats](null)
+
+  /** The layouts [[writeSegment]] writes. Reads pass them instead of
+    * inferring: inference costs one Spark job per directory read. */
+  private val SigsSchema = new StructType()
+    .add("doc_id", LongType).add("minhash", ArrayType(LongType))
+    .add("sp", IntegerType)
+  private val BucketsSchema = new StructType()
+    .add("doc_id", LongType).add("band", IntegerType)
+    .add("band_hash", LongType).add("p", IntegerType)
+
+  private def readSigs(spark: SparkSession, root: String,
+      seg: String): DataFrame =
+    spark.read.schema(SigsSchema).parquet(s"$root/$seg/sigs")
+
+  private def readBuckets(spark: SparkSession, root: String,
+      seg: String): DataFrame =
+    spark.read.schema(BucketsSchema).parquet(s"$root/$seg/buckets")
 
   private def fsOf(spark: SparkSession, root: String): (FileSystem, Path) = {
     val p = new Path(root)
@@ -172,20 +201,30 @@ object MinhashStore {
       // clock is their max, not their sum; at production sizes the
       // scheduler back-fills each job's straggler tail with the others'
       // tasks. Writes go to disjoint paths; the bloom is a treeAggregate
-      // — no shared mutable state crosses the threads.
+      // — no shared mutable state crosses the threads. The count runs on
+      // the physical rows: a Dataset count adds an aggregation exchange,
+      // one more job under AQE.
       val n = graft.BenchPhases.timed("mhstore.materialize") {
-        cached.count()
+        cached.queryExecution.toRdd.count()
       }
       val sp = sigParts(n)
       val p = parts(n * bands)
       val banded = cached.select(col("doc_id"),
         posexplode(graft.operators.TextOps.bandHashArray(bands, r))
           .as(Seq("band", "band_hash")))
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+      // the tag names this call's threads and Spark jobs, so a failure
+      // cancels the siblings' jobs, not only their driver threads
+      val tag = s"graft-mhstore-$seg"
+      val threads = new java.util.concurrent.atomic.AtomicInteger(0)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(3,
+        (r: Runnable) => new Thread(r, s"$tag-${threads.incrementAndGet()}"))
       val bloom = try {
         def task[T](body: => T): java.util.concurrent.Future[T] =
           pool.submit(new java.util.concurrent.Callable[T] {
-            override def call(): T = body
+            override def call(): T = {
+              spark.sparkContext.addJobTag(tag)
+              try body finally spark.sparkContext.removeJobTag(tag)
+            }
           })
         // explicit shuffle partition counts (= dir counts) keep the
         // exchanges scale-adaptive instead of riding the session's
@@ -218,15 +257,20 @@ object MinhashStore {
               .stat.bloomFilter("kh", math.max(1L, n * bands), BloomFpp)
           }
         }
-        // first failure cancels the siblings and waits them out, so no
-        // write outlives the build call
+        // the first failure — or an interrupt of this thread — cancels
+        // the siblings and waits them out, so no write outlives the
+        // call; the root cause propagates (FragmentStats.adoptStaged)
         try {
           sigsF.get(); bucketsF.get(); bloomF.get()
         } catch {
-          case e: java.util.concurrent.ExecutionException =>
+          case t: Throwable =>
+            spark.sparkContext.cancelJobsWithTag(tag)
             pool.shutdownNow()
             pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-            throw e.getCause
+            throw (t match {
+              case e: java.util.concurrent.ExecutionException => e.getCause
+              case other => other
+            })
         }
       } finally { pool.shutdown(); () }
       val out = fs.create(new Path(segDir, "bloom.bin"), true)
@@ -285,148 +329,144 @@ object MinhashStore {
     * minhash) index content, for compaction and full-scan consumers. */
   def sigsAll(spark: SparkSession, root: String): DataFrame =
     meta(spark, root).segments
-      .map(seg => spark.read.parquet(s"$root/$seg/sigs")
-        .select("doc_id", "minhash"))
+      .map(seg => readSigs(spark, root, seg).select("doc_id", "minhash"))
       .reduce(_ unionByName _)
 
   /** Index postings matching `probes` (new_id, band, band_hash):
     * returns (band, band_hash, new_id, doc_id) — doc_id the INDEX
-    * side — for every index doc
-    * sharing a (band, band_hash) bucket with a probe. Candidate
+    * side — for every index doc sharing a (band, band_hash) bucket
+    * with a probe, together with the probe's [[ProbeStats]]. Candidate
     * recall is EXACT (bloom has no false negatives; kh collisions are
     * resolved by the real (band, band_hash) join keys) while I/O is
     * O(matching buckets): per segment, bloom-surviving probes decide
-    * the partitions read — none survive, nothing is read. `probes`
-    * must be cheap to recompute (derived from a cached signature
-    * frame): this runs small collect-jobs over it per segment. */
+    * the partitions read — none survive, nothing is read. One
+    * collect-job over `probes` decides; the returned plan reads
+    * `probes` again, so the caller persists it and releases it after
+    * its last action over the postings. */
   def matchedPostings(spark: SparkSession, root: String,
-      probes: DataFrame): DataFrame = {
+      probes: DataFrame): Probe = {
     val (fs, rp) = fsOf(spark, root)
     val m = meta(spark, root)
+    val segInfos = m.segments.map(seg => (seg, segParts(fs, rp, seg)))
+    val blooms = m.segments.map(loadBloom(fs, rp, _)).toArray
+    val parts = segInfos.map(_._2._3.toLong).toArray
+    // (segment ordinal, bucket partition) for every segment whose
+    // bloom may hold kh — pmod as writeSegment partitions by
+    val hits = udf((kh: Long) => blooms.indices
+      .filter(i => blooms(i).mightContainLong(kh))
+      .map(i => (i, Math.floorMod(kh, parts(i)).toInt)))
+    val admitted = udf((kh: Long) => blooms.exists(_.mightContainLong(kh)))
     val keyed = probes.withColumn("kh", khCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var survivorsTotal = 0L
-      var touched = 0
-      var totalParts = 0
-      var fullScans = 0
-      val segInfos = m.segments.map { seg =>
-        (seg, segParts(fs, rp, seg), loadBloom(fs, rp, seg))
+    // ONE decision job, one branch for every segment: the probe keys
+    // explode to the (segment, partition) pairs their blooms admit, so
+    // the daily append chain adds no job and no plan branch per
+    // segment. The probe-key count rides along as an observation; the
+    // observed frame stays out of the returned plan (an Observation is
+    // one-shot; re-executing its node is undefined).
+    val kObs = org.apache.spark.sql.Observation()
+    val decidedRows = graft.BenchPhases.timed("mhstore.probe_decision") {
+      keyed.observe(kObs, count(lit(1)).as("k"))
+        .select(explode(hits(col("kh"))).as("h"))
+        .groupBy(col("h._1").as("si"), col("h._2").as("p"))
+        .agg(count(lit(1)).as("cnt"))
+        .collect()
+    }
+    // observability-only: a missed metric degrades to -1, never
+    // fails the probe or buys a dedicated count job
+    val probeKeys =
+      scala.util.Try(kObs.get("k").asInstanceOf[Long]).getOrElse(-1L)
+    val bySeg = decidedRows.groupBy(_.getInt(0))
+    var survivorsTotal = 0L
+    var touched = 0
+    val scanned = Seq.newBuilder[String]
+    var pruned = false
+    val indexSide = segInfos.zipWithIndex.flatMap {
+      case ((seg, (segRows, _, _)), i) =>
+      val byPart = bySeg.getOrElse(i, Array.empty)
+      val partIds = byPart.map(_.getInt(1)).sorted
+      survivorsTotal += byPart.map(_.getLong(2)).sum
+      touched += partIds.length
+      if (partIds.isEmpty) None
+      else if (partIds.length.toLong * TargetRowsPerPart > segRows) {
+        // COST-BASED fallback: each touched partition costs
+        // ~TargetRowsPerPart bucket records, so once the survivors
+        // spread past segRows/TargetRowsPerPart partitions, one scan
+        // of the segment's SIGNATURES (banded on the fly — exactly
+        // the pre-store probe's shape and cost, 32× narrower in
+        // records than the bucket table) is strictly cheaper. A
+        // dup-heavy delta therefore pays the old O(index) cost at
+        // worst, never 32× it.
+        scanned += seg
+        Some(readSigs(spark, root, seg)
+          .select(col("doc_id"), posexplode(
+            graft.operators.TextOps.bandHashArray(m.bands, m.r))
+            .as(Seq("band", "band_hash"))))
+      } else {
+        pruned = true
+        Some(readBuckets(spark, root, seg)
+          .filter(col("p").isin(partIds.toIndexedSeq.map(Integer.valueOf): _*))
+          .select("doc_id", "band", "band_hash"))
       }
-      // ONE decision job across every segment (r19 — VERDICT r18 #3):
-      // each segment's bloom-filter + partition-group branch unions
-      // into a single collected frame tagged by segment ordinal, so a
-      // multi-segment store (the daily append chain) pays one driver
-      // round-trip for all its partition decisions instead of one per
-      // segment. Branch 0 additionally carries the probe-key count as
-      // an observation — the observed frame stays out of the returned
-      // lazy plans (an Observation is one-shot; re-executing its node
-      // is undefined).
-      val kObs = org.apache.spark.sql.Observation()
-      val decided = segInfos.zipWithIndex.map {
-        case ((_, (_, _, p), bloom), i) =>
-          val might = udf((kh: Long) => bloom.mightContainLong(kh))
-          val src =
-            if (i == 0) keyed.observe(kObs, count(lit(1)).as("k"))
-            else keyed
-          src.filter(might(col("kh")))
-            .groupBy(pmod(col("kh"), lit(p.toLong)).cast("int").as("p"))
-            .agg(count(lit(1)).as("cnt"))
-            .select(lit(i).as("si"), col("p"), col("cnt"))
-      }.reduce(_ unionByName _)
-      val decidedRows = graft.BenchPhases.timed("mhstore.probe_decision") {
-        decided.collect()
-      }
-      // observability-only: a missed metric degrades to -1, never
-      // fails the probe or buys a dedicated count job
-      val probeKeys =
-        scala.util.Try(kObs.get("k").asInstanceOf[Long]).getOrElse(-1L)
-      val bySeg = decidedRows.groupBy(_.getInt(0))
-      val perSeg = segInfos.zipWithIndex.map {
-        case ((seg, (segRows, _, p), bloom), i) =>
-        totalParts += p
-        val byPart = bySeg.getOrElse(i, Array.empty)
-        val partIds = byPart.map(_.getInt(1)).sorted
-        survivorsTotal += byPart.map(_.getLong(2)).sum
-        touched += partIds.length
-        if (partIds.isEmpty) None
-        else if (partIds.length.toLong * TargetRowsPerPart > segRows) {
-          // COST-BASED fallback: each touched partition costs
-          // ~TargetRowsPerPart bucket records, so once the survivors
-          // spread past segRows/TargetRowsPerPart partitions, one scan
-          // of the segment's SIGNATURES (banded on the fly — exactly
-          // the pre-store probe's shape and cost, 32× narrower in
-          // records than the bucket table) is strictly cheaper. A
-          // dup-heavy delta therefore pays the old O(index) cost at
-          // worst, never 32× it.
-          fullScans += 1
-          Some(spark.read.parquet(s"$root/$seg/sigs")
-            .select(col("doc_id"), posexplode(
-              graft.operators.TextOps.bandHashArray(m.bands, m.r))
-              .as(Seq("band", "band_hash")))
-            .join(broadcast(keyed.select("new_id", "band", "band_hash")),
-              Seq("band", "band_hash")))
-        } else {
-          // this segment's bloom survivors, re-derived lazily from the
-          // cached probe frame for the returned plan (same rows the
-          // decision job grouped)
-          val might = udf((kh: Long) => bloom.mightContainLong(kh))
-          Some(
-            spark.read.parquet(s"$root/$seg/buckets")
-              .filter(col("p").isin(partIds.toIndexedSeq.map(Integer.valueOf): _*))
-              .join(broadcast(keyed.filter(might(col("kh")))
-                .select("new_id", "band", "band_hash")),
-                Seq("band", "band_hash")))
-        }
-      }
-      lastProbeStats.set(ProbeStats(m.segments.size, probeKeys,
-        survivorsTotal, touched, totalParts, fullScans))
-      val matched = perSeg.flatten
-      if (matched.isEmpty)
+    }
+    val scannedSegs = scanned.result()
+    val stats = ProbeStats(m.segments.size, probeKeys, survivorsTotal,
+      touched, parts.sum.toInt, scannedSegs.size)
+    lastProbeStats.set(stats)
+    val scannedSigs =
+      if (pruned) None
+      else Some(scannedSegs.map(readSigs(spark, root, _))
+        .reduceOption(_ unionByName _)
+        .getOrElse(readSigs(spark, root, m.segments.head).limit(0))
+        .select("doc_id", "minhash"))
+    // every read segment joins ONE broadcast of the probes some bloom
+    // admits: a probe no bloom admits matches nothing, and a probe
+    // admitted elsewhere finds no row of its bucket here
+    val postings =
+      if (indexSide.isEmpty)
         // empty frame with the contract's schema
-        spark.read.parquet(s"$root/${m.segments.head}/buckets").limit(0)
+        readBuckets(spark, root, m.segments.head).limit(0)
           .select(col("band"), col("band_hash"),
             lit(0L).as("new_id"), col("doc_id"))
-      else matched.reduce(_ unionByName _)
+      else indexSide.reduce(_ unionByName _)
+        .join(broadcast(keyed.filter(admitted(col("kh")))
+          .select("new_id", "band", "band_hash")), Seq("band", "band_hash"))
         .select("band", "band_hash", "new_id", "doc_id")
-    } finally { keyed.unpersist(false); () }
+    Probe(postings, stats, scannedSigs)
   }
 
-  /** Signatures for a bounded candidate id frame (`old_id` column),
-    * read from only the sig partitions those ids hash to. */
+  /** Signatures for a bounded candidate id frame (`old_id` column,
+    * distinct), read from only the sig partitions those ids hash to.
+    * One collect-job over `ids` decides the partitions; the returned
+    * plan reads `ids` again, so the caller persists it and releases it
+    * after its last action over the result. */
   def sigsFor(spark: SparkSession, root: String,
       ids: DataFrame): DataFrame = {
     val (fs, rp) = fsOf(spark, root)
     val m = meta(spark, root)
     val wanted = ids.select(col("old_id").cast("long").as("doc_id"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val segInfos = m.segments.map(seg => (seg, segParts(fs, rp, seg)._2))
-      // ONE partition-decision job across every segment (r19 — VERDICT
-      // r18 #3): union the per-segment distinct-sp branches, tagged by
-      // segment ordinal, instead of one collect per segment
-      val decided = graft.BenchPhases.timed("mhstore.sig_decision") {
-        segInfos.zipWithIndex.map { case ((_, sp), i) =>
-          wanted.select(lit(i).as("si"),
-            pmod(xxhash64(col("doc_id")), lit(sp.toLong))
-              .cast("int").as("sp"))
-            .distinct()
-        }.reduce(_ unionByName _).collect()
-      }
-      val bySeg = decided.groupBy(_.getInt(0))
-      segInfos.zipWithIndex.map { case ((seg, sp), i) =>
-        val partIds = bySeg.getOrElse(i, Array.empty).map(_.getInt(1)).sorted
-        val path = s"$root/$seg/sigs"
-        val base =
-          if (partIds.isEmpty) spark.read.parquet(path).limit(0)
-          else if (partIds.length > sp * FallbackPartFraction)
-            spark.read.parquet(path)
-          else spark.read.parquet(path)
-            .filter(col("sp").isin(partIds.toIndexedSeq.map(Integer.valueOf): _*))
-        base.join(broadcast(wanted), Seq("doc_id"))
-          .select("doc_id", "minhash")
-      }.reduce(_ unionByName _)
-    } finally { wanted.unpersist(false); () }
+    val segInfos = m.segments.map(seg => (seg, segParts(fs, rp, seg)._2))
+    // ONE partition-decision job across every segment (r19 — VERDICT
+    // r18 #3): union the per-segment distinct-sp branches, tagged by
+    // segment ordinal, instead of one collect per segment
+    val decided = graft.BenchPhases.timed("mhstore.sig_decision") {
+      segInfos.zipWithIndex.map { case ((_, sp), i) =>
+        wanted.select(lit(i).as("si"),
+          pmod(xxhash64(col("doc_id")), lit(sp.toLong))
+            .cast("int").as("sp"))
+          .distinct()
+      }.reduce(_ unionByName _).collect()
+    }
+    val bySeg = decided.groupBy(_.getInt(0))
+    segInfos.zipWithIndex.map { case ((seg, sp), i) =>
+      val partIds = bySeg.getOrElse(i, Array.empty).map(_.getInt(1)).sorted
+      val sigs = readSigs(spark, root, seg)
+      val base =
+        if (partIds.isEmpty) sigs.limit(0)
+        else if (partIds.length > sp * FallbackPartFraction) sigs
+        else sigs.filter(
+          col("sp").isin(partIds.toIndexedSeq.map(Integer.valueOf): _*))
+      base.join(broadcast(wanted), Seq("doc_id"))
+        .select("doc_id", "minhash")
+    }.reduce(_ unionByName _)
   }
 }

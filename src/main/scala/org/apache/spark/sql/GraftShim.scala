@@ -124,19 +124,6 @@ object GraftShim {
       case _ => ()
     }
 
-  /** Block until the shared SparkListener bus has delivered every
-    * queued event. QueryExecutionListener events arrive ASYNCHRONOUSLY:
-    * an operator that runs internal driver actions over a persisted
-    * frame and THEN registers a CacheHygiene release hook can have the
-    * internal actions' late-delivered events consume the hook's quota,
-    * releasing the cache before the caller's real action (observed:
-    * 4× source re-read in the MinhashStore probe). Draining first makes
-    * "registered after my actions" mean what it says. Test/driver-side
-    * helper — never on a hot path. */
-  def drainListenerBus(spark: SparkSession): Unit =
-    try spark.sparkContext.listenerBus.waitUntilEmpty(10000L)
-    catch { case _: Throwable => () }
-
   /** The analyzed logical plan of a DataFrame (for optimizer rules that
     * splice DataFrame-built subplans into a plan under rewrite). */
   def planOf(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

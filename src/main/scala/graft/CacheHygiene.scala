@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicBoolean
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -50,10 +51,9 @@ object CacheHygiene {
     * sessions whose batch query mix is also that busy.
     *
     * `releaseAfterConsumers` (default 1) delays the release until that
-    * many DISTINCT consuming actions completed — for operators that
-    * return several lazy frames reading the same cache
-    * ([[graft.operators.TextOps.incrementalDedupRound]] returns three;
-    * releasing after the first made later frames recompute). */
+    * many DISTINCT consuming actions completed — for operators whose
+    * cache several actions read ([[graft.ops.TextIndex]]'s postings and
+    * meta writes; releasing after the first made later ones recompute). */
   def unpersistAfterNextAction(cached: DataFrame,
       releaseAfterConsumers: Int = 1): Unit = {
     val manager = cached.sparkSession.listenerManager
@@ -64,7 +64,15 @@ object CacheHygiene {
     val fired = new AtomicBoolean(false)
     val unmatched = new java.util.concurrent.atomic.AtomicInteger(0)
     val consumed = new java.util.concurrent.atomic.AtomicInteger(0)
+    val registeredMs = System.currentTimeMillis()
     val listener: QueryExecutionListener = new QueryExecutionListener {
+      // the end event of a query planned before this call — typically
+      // the action that materialized `cached` — may still be queued on
+      // the asynchronous listener bus when the listener registers; such
+      // a query counts neither as a consumer nor as unrelated
+      private def plannedBefore(qe: QueryExecution): Boolean =
+        qe.tracker.phases.get(QueryPlanningTracker.PLANNING)
+          .exists(_.startTimeMs < registeredMs)
       private def consumes(qe: QueryExecution): Boolean =
         try qe.analyzed.exists(p => p.sameResult(target))
         catch { case _: Throwable => true }
@@ -72,7 +80,7 @@ object CacheHygiene {
       // internal class that moved packages between Spark releases
       private def isMicroBatch(qe: QueryExecution): Boolean =
         qe.getClass.getSimpleName == "IncrementalExecution"
-      private def fire(qe: QueryExecution): Unit = {
+      private def fire(qe: QueryExecution): Unit = if (!plannedBefore(qe)) {
         val due =
           if (consumes(qe)) consumed.incrementAndGet() >= releaseAfterConsumers
           else !isMicroBatch(qe) && unmatched.incrementAndGet() > abandonCap

@@ -174,17 +174,20 @@ object RefreshProbe {
         .write.mode("overwrite").parquet(novelPath)
       val delta = spark.read.parquet(novelPath)
       val (fSec, fRec) = measure {
-        graft.operators.TextOps.incrementalNearDups(delta,
-          MinhashStore.sigsAll(spark, root)).count()
+        graft.operators.TextOps.incrementalDedupRound(delta,
+          MinhashStore.sigsAll(spark, root)).dups.count()
       }
+      var stats: Option[MinhashStore.ProbeStats] = None
       val (iSec, iRec) = measure {
-        graft.operators.TextOps.incrementalNearDupsIndexed(delta, root)
-          .count()
+        val round = graft.operators.TextOps.incrementalDedupRoundIndexed(
+          delta, root)
+        stats = round.probeStats
+        round.dups.count()
       }
       results += Probe("minhash_probe", fSec, iSec, fRec, iRec)
       System.err.println(s"[refresh-probe] minhash_probe full-scan=" +
         s"${fSec}s/${fRec}rec indexed=${iSec}s/${iRec}rec " +
-        s"stats=${MinhashStore.lastProbeStats.get()}")
+        s"stats=${stats.orNull}")
     }
 
     val rs = results.result()

@@ -71,18 +71,8 @@ class StagedGraftTable(
           override def insert(data: DataFrame, overwrite: Boolean): Unit = {
             GraftFormat.init(fs, dir)
             val staging = new Path(dir, s".staging-${UUID.randomUUID()}")
-            // Opt-in REBALANCE before the staged write — same rationale,
-            // default and gate as GraftWriter.write (r19, guide §6
-            // small files): CTAS/RTAS output is one file per incoming
-            // task; the knob trades an extra exchange for right-sized
-            // fragments when the input is many-tiny-tasks.
-            val rebalance = data.sparkSession.conf.get(
-                "spark.graft.write.rebalance", "false") == "true" &&
-              data.sparkSession.conf.get(
-                "spark.sql.adaptive.enabled", "true") == "true"
-            val arranged = if (rebalance) data.hint("rebalance") else data
             graft.format.BlobStore.encode(
-              graft.format.VectorColumns.enforce(arranged, vectorCols),
+              graft.format.VectorColumns.enforce(data, vectorCols),
               blobCols, dir)
               .write.parquet(staging.toUri.toString)
             val hconf = data.sparkSession.sessionState.newHadoopConf()

@@ -92,32 +92,8 @@ object GraftWriter {
         .orElse(Option(data.sparkSession.conf.get(
           "spark.graft.write.bloomColumns", null)))
         .toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-      // Opt-in REBALANCE before the staged write (r19 — VERDICT r18 #6,
-      // guide §6 small files): CTAS/INSERT output is one file per
-      // incoming task, so a wide upstream (a 32-partition shuffle, a
-      // many-split scan) lands as many tiny fragments that every later
-      // scan, commit and compaction pays for. With
-      // spark.graft.write.rebalance=true the AQE rebalance hint sizes
-      // output partitions to advisoryPartitionSizeInBytes instead
-      // (measured: a 32-partition 1M-row CTAS lands 8 right-sized
-      // fragments instead of 32). Deliberately OFF by default: the
-      // hint is an extra full exchange of the written data, and the
-      // paired g-suite A/B measured it 3-27% slower at gate scale —
-      // a blanket shuffle-per-write is the wrong trade when inputs are
-      // few-task (the gate) or huge (100 TB CTAS, where the exchange
-      // doubles data movement and AQE's advisory sizing yields a
-      // similar file count anyway); compaction + write.max_rows_per_file
-      // remain the primary file-sizing tools, this knob covers the
-      // many-tiny-tasks middle. Safe when enabled because THIS path
-      // never carries clustered data (sorted/zorder/bucketized rewrites
-      // and the streaming sink write their own staged files).
-      val rebalance = data.sparkSession.conf.get(
-          "spark.graft.write.rebalance", "false") == "true" &&
-        data.sparkSession.conf.get("spark.sql.adaptive.enabled", "true") == "true"
-      val arranged =
-        if (rebalance) data.toDF().hint("rebalance") else data.toDF()
       val writer = graft.format.BlobStore.encode(
-        graft.format.VectorColumns.enforce(arranged, vectorCols),
+        graft.format.VectorColumns.enforce(data.toDF(), vectorCols),
         blobCols, dir).write
       maxRows.foreach(n => writer.option("maxRecordsPerFile", n))
       maxRowsGroup.foreach(n => writer.option("parquet.block.row.count.limit", n))

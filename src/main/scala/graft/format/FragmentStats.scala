@@ -212,35 +212,12 @@ object FragmentStats {
     }
     val out =
       if (files.size <= 1) files.map(adoptOne)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, files.size))
-        try {
-          val futures = files.map(f => pool.submit(
-            new java.util.concurrent.Callable[
-              (String, Long, Long, Map[String, ColStats])] {
-              override def call() = adoptOne(f)
-            }))
-          // get() in submission (= sorted-name) order; the first failure
-          // propagates exactly as the sequential loop's did — after
-          // cancelling the queued/in-flight tasks and waiting them out,
-          // so no rename outlives adoptStaged to race the caller's
-          // staging cleanup (r18 ADVICE)
-          try futures.map { fu =>
-            try fu.get()
-            catch {
-              case e: java.util.concurrent.ExecutionException =>
-                throw e.getCause
-            }
-          } catch {
-            case t: Throwable =>
-              pool.shutdownNow()
-              pool.awaitTermination(60,
-                java.util.concurrent.TimeUnit.SECONDS)
-              throw t
-          }
-        } finally { pool.shutdown(); () }
-      }
+      // results in sorted-name order; the first failure propagates as
+      // the sequential loop's did — after the other renames are
+      // cancelled and waited out, so none outlives adoptStaged to race
+      // the caller's staging cleanup (r18 ADVICE)
+      else graft.DriverPool.runAll("graft-adopt", 8,
+        files.map(f => () => adoptOne(f)))
     fs.delete(staging, true)
     out.filter(_._2 > 0)
   }

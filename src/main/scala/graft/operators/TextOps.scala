@@ -203,8 +203,7 @@ object TextOps {
     * job, +1.6 s on t03 at sf0.1) while the |V|-sized signature cache
     * still cannot outlive its one consuming query (VERDICT r7 #3). */
   def lshCandidatePairs(sigs0: DataFrame, bands: Int = 32, r: Int = 2): DataFrame = {
-    // an input the CALLER already persisted (the incremental-dedup
-    // probes pass their cached delta signatures) must not be cached a
+    // an input the CALLER already persisted must not be cached a
     // second time: the projection would populate a duplicate
     // InMemoryRelation of the same rows (r18 optimization — one less
     // cache build + one less block set under memory pressure)
@@ -289,7 +288,7 @@ object TextOps {
     * the PERSISTABLE near-dup index: (doc_id, minhash array<bigint>).
     * ~0.5 KB/doc at 64 permutations, so even a 100 TB corpus's index is
     * a few tens of GB: write it once (parquet / graft table) and dedup
-    * every future delta batch against it via [[incrementalNearDups]]
+    * every future delta batch against it via [[incrementalDedupRound]]
     * without ever touching the indexed text again. */
   def minhashIndex(corpus: DataFrame, perms: Int = 64): DataFrame =
     withMinhash(
@@ -307,71 +306,147 @@ object TextOps {
     graft.functions.TextFunctions.sig_agree(col(a), col(b))
       .cast("double") / perms.toDouble
 
-  /** Incremental near-dup detection — the DAILY corpus-build operation
-    * at 100 TB: flag documents in `delta` that near-duplicate either an
-    * already-indexed document ([[minhashIndex]] output, typically read
-    * back from a persisted table) or an earlier delta document, without
-    * recomputing anything over the indexed corpus. Returns one row per
-    * duplicated delta doc: (doc_id, dup_of, est_jaccard) with `dup_of`
-    * the smallest matching doc (indexed or delta) and `est_jaccard` the
-    * signature-agreement estimate for that match.
+  /** One round of the DAILY incremental-dedup loop — the composition a
+    * 100 TB corpus build schedules: flag the documents in `delta` that
+    * near-duplicate an already-indexed document or an earlier delta
+    * document, keep the survivors, and fold ONLY the survivors'
+    * signatures back into the index, so tomorrow's delta deduplicates
+    * against today's corpus without the index ever holding two rows for
+    * one near-dup cluster. The indexed corpus TEXT is never re-read.
     *
-    * Scale shape: a delta is small by nature (one crawl batch vs the
-    * corpus), so every join keeps the INDEX side shuffle-free — the
-    * delta's bucket rows broadcast against the index's derived bucket
-    * stream, and the surviving candidate list (bounded by |delta| x
-    * bucket cap) broadcasts again to fetch index signatures. The
-    * persisted index is scanned exactly once, columnar, (doc_id,
-    * minhash) only. */
-  def incrementalNearDups(delta: DataFrame, indexSigs: DataFrame,
-      bands: Int = 32, r: Int = 2, threshold: Double = 0.5): DataFrame = {
-    val deltaSigs = minhashIndex(delta, bands * r)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.CacheHygiene.unpersistAfterNextAction(deltaSigs)
-    incrementalNearDupsFromSigs(deltaSigs, indexSigs, bands, r, threshold)
+    *   - `dups`: one row per duplicated delta doc, (doc_id, dup_of,
+    *     est_jaccard) with `dup_of` the smallest matching doc (indexed
+    *     or delta) and `est_jaccard` the signature-agreement estimate
+    *     for that match — a driver-local relation of the probe's rows
+    *     (at most one 24-byte row per delta doc), so every later
+    *     consumer reads rows, never the probe's lineage.
+    *   - `survivors`: the delta rows not in `dups`.
+    *   - `updatedIndex`: the index as of this call unioned with the
+    *     surviving delta signatures (recomputed from the delta text if
+    *     read), `|index| + |surviving delta|` rows of (doc_id, minhash)
+    *     — the next round's input, an append-only sidecar of ~0.5 KB/doc.
+    *   - `probeStats`: the [[graft.ops.MinhashStore]] probe's shape; None
+    *     for the scan fallback.
+    *
+    * Both rounds run the probe to completion inside the call and
+    * release every cache they used before returning; no listener is
+    * registered, so any number of actions over the frames is safe. */
+  case class IncrementalDedupRound(dups: DataFrame, survivors: DataFrame,
+      updatedIndex: DataFrame,
+      probeStats: Option[graft.ops.MinhashStore.ProbeStats])
+
+  /** [[IncrementalDedupRound]] against a [[graft.ops.MinhashStore]] —
+    * the O(delta) daily probe (r17 VERDICT #2). Candidate pairs, scores
+    * and `dups` are IDENTICAL to the scan fallback's (the bloom has no
+    * false negatives and the per-bucket cap runs over the same matched
+    * stream); what changes is I/O: the store's per-segment bloom kills
+    * the probe keys a mostly-novel delta never matches BEFORE any data
+    * read, survivors prune the bucket partitions they hash to, and the
+    * few surviving candidates' signatures come from only their hash
+    * partitions — the index is not scanned per batch. Fold the
+    * survivors forward with `MinhashStore.append(minhashIndex(
+    * survivors), root)` — a new merge-on-read segment that re-reads the
+    * delta text but never the store. */
+  def incrementalDedupRoundIndexed(delta: DataFrame, root: String,
+      threshold: Double = 0.5): IncrementalDedupRound = {
+    val spark = delta.sparkSession
+    val m = graft.ops.MinhashStore.meta(spark, root)
+    dedupRound(delta, graft.ops.MinhashStore.sigsAll(spark, root),
+      m.bands, m.r, threshold)(
+      graft.ops.MinhashStore.matchedPostings(spark, root, _))
   }
 
-  /** [[incrementalNearDups]] with PRE-COMPUTED delta signatures —
-    * callers that also need the signatures for other frames (the
-    * round composition below) pass them once instead of re-shingling
-    * the delta text per consumer; persistence of `deltaSigs` is the
-    * caller's concern here. */
-  def incrementalNearDupsFromSigs(deltaSigs: DataFrame,
-      indexSigs: DataFrame, bands: Int = 32, r: Int = 2,
-      threshold: Double = 0.5): DataFrame = {
-    val perms = bands * r
-    val dBuckets = bandBuckets(deltaSigs, bands, r)
-      .withColumnRenamed("doc_id", "new_id")
-    // The index side is deliberately NOT pre-capped: the mega-bucket cap
-    // needs a bucket-key window, i.e. a full shuffle of the 32x-banded
-    // index stream, while joining the RAW banded stream against the
-    // broadcast delta buckets keeps the index scan shuffle-free. The cap
-    // moves after the join — per (bucket, new_id) over only the matched
-    // rows, bounding a degenerate index mega-bucket to 64 candidates per
-    // delta doc per band instead of |index| rows.
-    val cross = capBuckets(
+  /** [[IncrementalDedupRound]] against a plain signature frame
+    * ([[minhashIndex]] output, typically read back from a persisted
+    * table) — the scan fallback. The index is scanned once, columnar,
+    * (doc_id, minhash) only, and never shuffled: its banded stream
+    * joins the broadcast delta buckets, exactly as if every store
+    * segment had fallen back to its signature scan. */
+  def incrementalDedupRound(delta: DataFrame, indexSigs: DataFrame,
+      bands: Int = 32, r: Int = 2, threshold: Double = 0.5)
+      : IncrementalDedupRound =
+    dedupRound(delta, indexSigs, bands, r, threshold) { probes =>
+      graft.ops.MinhashStore.Probe(
         bandedRows(indexSigs, bands, r)
-          .join(broadcast(dBuckets), Seq("band", "band_hash")),
-        Seq("band", "band_hash", "new_id"))
-      .select(col("new_id"), col("doc_id").as("old_id"))
-      .distinct()
-    val crossScored = indexSigs
-      .select(col("doc_id").as("old_id"), col("minhash").as("sig_old"))
-      .join(broadcast(cross), Seq("old_id"))
-      .join(broadcast(deltaSigs.select(col("doc_id").as("new_id"),
-        col("minhash").as("sig_new"))), Seq("new_id"))
-      .select(col("new_id"), col("old_id"),
-        agreeFrac("sig_new", "sig_old", perms).as("est_jaccard"))
-    // within-delta: the later doc duplicates the earlier one
-    val within = lshCandidatePairs(deltaSigs, bands, r)
-      .select(col("b_id").as("new_id"), col("a_id").as("old_id"),
-        agreeFrac("sig_a", "sig_b", perms).as("est_jaccard"))
-    bestDupPerDoc(crossScored.unionByName(within), threshold)
+          .join(broadcast(probes), Seq("band", "band_hash"))
+          .select("band", "band_hash", "new_id", "doc_id"),
+        stats = None, sigs = Left(indexSigs))
+    }
+
+  /** The probe body of both rounds. `probe` maps the capped delta
+    * buckets (new_id, band, band_hash) to the index postings they match
+    * and the source of those postings' signatures. The delta
+    * signatures, the probe keys and — when the signatures are fetched
+    * per candidate — the candidate pairs and their distinct index ids
+    * are each computed once, persisted where both a decision job and
+    * the final job read them, and released before this returns. */
+  private def dedupRound(delta: DataFrame, index: DataFrame, bands: Int,
+      r: Int, threshold: Double)(
+      probe: DataFrame => graft.ops.MinhashStore.Probe)
+      : IncrementalDedupRound = {
+    val spark = delta.sparkSession
+    val perms = bands * r
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def hold(df: DataFrame): DataFrame = {
+      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      held += p
+      p
+    }
+    val (dups, stats) = try {
+      val deltaSigs = hold(minhashIndex(delta, perms))
+      // capped delta buckets: the probe keys, and the source of the
+      // within-delta pairs
+      val probes = hold(bandBuckets(deltaSigs, bands, r)
+        .withColumnRenamed("doc_id", "new_id"))
+      val p = probe(probes)
+      // candidate (new_id, old_id) pairs, tagged by where old_id lives:
+      // the index (capped per bucket and delta doc over the matched
+      // postings — the index side is deliberately not pre-capped, which
+      // would need a full shuffle of its banded stream) or the delta
+      // itself (the later doc duplicates the earlier one) — one
+      // distinct, one signature fetch per side for both kinds
+      val cands0 = capBuckets(p.postings, Seq("band", "band_hash", "new_id"))
+        .select(col("new_id"), col("doc_id").as("old_id"),
+          lit(false).as("in_delta"))
+        .unionByName(bucketPairs(probes, "new_id")
+          .select(col("b_id").as("new_id"), col("a_id").as("old_id"),
+            lit(true).as("in_delta")))
+        .distinct()
+      val (cands, indexSigs) = p.sigs match {
+        // every candidate comes from a scanned signature frame: no
+        // candidate decision job, no extra pass
+        case Left(sigs) => (cands0, sigs)
+        case Right(sigsFor) =>
+          val c = hold(cands0)
+          (c, sigsFor(hold(
+            c.filter(!col("in_delta")).select(col("old_id")).distinct())))
+      }
+      def oldSigs(sigs: DataFrame, inDelta: Boolean): DataFrame =
+        sigs.select(col("doc_id").as("old_id"), col("minhash").as("sig_old"),
+          lit(inDelta).as("in_delta"))
+      val scored = oldSigs(indexSigs, inDelta = false)
+        .unionByName(oldSigs(deltaSigs, inDelta = true))
+        .join(broadcast(cands), Seq("old_id", "in_delta"))
+        .join(broadcast(deltaSigs.select(col("doc_id").as("new_id"),
+          col("minhash").as("sig_new"))), Seq("new_id"))
+        .select(col("new_id"), col("old_id"),
+          agreeFrac("sig_new", "sig_old", perms).as("est_jaccard"))
+      val best = bestDupPerDoc(scored, threshold)
+      val rows = graft.BenchPhases.timed("mhstore.probe_rows") {
+        best.collect()
+      }
+      (spark.createDataFrame(java.util.Arrays.asList(rows: _*), best.schema),
+        p.stats)
+    } finally { held.foreach(_.unpersist(false)) }
+    val survivors = delta.join(dups.select("doc_id"), Seq("doc_id"),
+      "left_anti")
+    val updatedIndex = index.unionByName(minhashIndex(delta, perms)
+      .join(dups.select("doc_id"), Seq("doc_id"), "left_anti"))
+    IncrementalDedupRound(dups, survivors, updatedIndex, stats)
   }
 
-  /** Shared tail of the incremental probes: keep scored pairs at or
-    * above `threshold`, one row per delta doc with its smallest
-    * matching partner. */
+  /** Keep scored pairs at or above `threshold`, one row per delta doc
+    * with its smallest matching partner. */
   private def bestDupPerDoc(scored: DataFrame,
       threshold: Double): DataFrame =
     scored.filter(col("est_jaccard") >= threshold)
@@ -379,165 +454,6 @@ object TextOps {
       .agg(min(struct(col("old_id"), col("est_jaccard"))).as("m"))
       .select(col("new_id").as("doc_id"), col("m.old_id").as("dup_of"),
         round(col("m.est_jaccard"), 4).as("est_jaccard"))
-
-  /** [[incrementalNearDups]] against a [[graft.ops.MinhashStore]] —
-    * the O(delta) daily probe (r17 VERDICT #2). Candidate pairs,
-    * scores and the returned rows are IDENTICAL to the parquet-scan
-    * path (the bloom has no false negatives and the per-bucket cap
-    * runs over the same matched stream); what changes is I/O: the
-    * store's per-segment bloom kills the probe keys a mostly-novel
-    * delta never matches BEFORE any data read, survivors prune the
-    * bucket partitions they hash to, and the few surviving
-    * candidates' signatures come from only their hash partitions —
-    * the index is no longer scanned per batch. The probe runs once,
-    * here: the returned frame holds its rows (see
-    * [[incrementalNearDupsIndexedFromSigs]]). */
-  def incrementalNearDupsIndexed(delta: DataFrame, root: String,
-      threshold: Double = 0.5): DataFrame = {
-    val m = graft.ops.MinhashStore.meta(delta.sparkSession, root)
-    val deltaSigs = minhashIndex(delta, m.bands * m.r)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try incrementalNearDupsIndexedFromSigs(deltaSigs, root, threshold)
-    finally { deltaSigs.unpersist(false); () }
-  }
-
-  /** [[incrementalNearDupsIndexed]] with pre-computed delta signatures
-    * (persisting `deltaSigs` is the caller's concern: the probe reads
-    * it several times). Runs the probe to completion before returning:
-    * the probe keys (the capped delta buckets), the candidate pairs
-    * and their distinct store ids are each computed once, persisted
-    * where both a decision job and the final job read them, and
-    * released on return. The returned frame is a driver-local relation
-    * of the dup rows — at most one 24-byte row per delta doc, far
-    * smaller than the delta-bucket broadcast the probe already makes —
-    * so every later consumer reads rows, never the probe's lineage, and
-    * no cache outlives the call. */
-  def incrementalNearDupsIndexedFromSigs(deltaSigs: DataFrame,
-      root: String, threshold: Double = 0.5): DataFrame = {
-    val spark = deltaSigs.sparkSession
-    val m = graft.ops.MinhashStore.meta(spark, root)
-    val perms = m.bands * m.r
-    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def hold(df: DataFrame): DataFrame = {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      held += p
-      p
-    }
-    try {
-      // capped delta buckets — the same probe stream the parquet path
-      // broadcasts, so the matched postings (and thus candidates) are
-      // identical row for row; the within-delta pairs reuse it
-      val probes = hold(bandBuckets(deltaSigs, m.bands, m.r)
-        .withColumnRenamed("doc_id", "new_id"))
-      val probe = graft.ops.MinhashStore.matchedPostings(spark, root, probes)
-      // candidate (new_id, old_id) pairs, tagged by where old_id lives:
-      // the store (capped per bucket and delta doc over the matched
-      // postings, as on the scan path) or the delta itself (the later
-      // doc duplicates the earlier one) — one distinct, one signature
-      // fetch per side for both kinds
-      val cands0 = capBuckets(probe.postings, Seq("band", "band_hash", "new_id"))
-        .select(col("new_id"), col("doc_id").as("old_id"),
-          lit(false).as("in_delta"))
-        .unionByName(bucketPairs(probes, "new_id")
-          .select(col("b_id").as("new_id"), col("a_id").as("old_id"),
-            lit(true).as("in_delta")))
-        .distinct()
-      // when every segment the probe reads fell back to its sig scan
-      // (dup-heavy delta, or segments small next to the probe's spread),
-      // candidate-side pruning is pointless: their signatures come from
-      // those scans — no candidate decision job, no extra pass
-      val (cands, storeSigs) = probe.scannedSigs match {
-        case Some(sigs) => (cands0, sigs)
-        case None =>
-          val c = hold(cands0)
-          (c, graft.ops.MinhashStore.sigsFor(spark, root,
-            hold(c.filter(!col("in_delta")).select(col("old_id")).distinct())))
-      }
-      def oldSigs(sigs: DataFrame, inDelta: Boolean): DataFrame =
-        sigs.select(col("doc_id").as("old_id"), col("minhash").as("sig_old"),
-          lit(inDelta).as("in_delta"))
-      val scored = oldSigs(storeSigs, inDelta = false)
-        .unionByName(oldSigs(deltaSigs, inDelta = true))
-        .join(broadcast(cands), Seq("old_id", "in_delta"))
-        .join(broadcast(deltaSigs.select(col("doc_id").as("new_id"),
-          col("minhash").as("sig_new"))), Seq("new_id"))
-        .select(col("new_id"), col("old_id"),
-          agreeFrac("sig_new", "sig_old", perms).as("est_jaccard"))
-      val dups = bestDupPerDoc(scored, threshold)
-      val rows = graft.BenchPhases.timed("mhstore.probe_rows") {
-        dups.collect()
-      }
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), dups.schema)
-    } finally { held.foreach(_.unpersist(false)) }
-  }
-
-  /** [[incrementalDedupRound]] against a [[graft.ops.MinhashStore]]:
-    * same three frames, O(delta) index I/O. The store probe runs once,
-    * inside this call ([[incrementalNearDupsIndexed]]): `dups` is a
-    * driver-local relation of its rows, every cache it used is
-    * released before this returns, and no listener is registered.
-    * `survivors` anti-joins the delta against those rows, so folding
-    * them forward with `MinhashStore.append(minhashIndex(survivors),
-    * root)` — a new merge-on-read segment, never a rewrite — re-reads
-    * the delta text but never the store. `updatedIndex` unions the
-    * store's segments as of this call with the surviving delta
-    * signatures, recomputed from the delta text if read. */
-  def incrementalDedupRoundIndexed(delta: DataFrame, root: String,
-      threshold: Double = 0.5): IncrementalDedupRound = {
-    val spark = delta.sparkSession
-    val m = graft.ops.MinhashStore.meta(spark, root)
-    val dups = incrementalNearDupsIndexed(delta, root, threshold)
-    val survivors = delta.join(dups.select("doc_id"), Seq("doc_id"),
-      "left_anti")
-    val updatedIndex = graft.ops.MinhashStore.sigsAll(spark, root)
-      .unionByName(minhashIndex(delta, m.bands * m.r)
-        .join(dups.select("doc_id"), Seq("doc_id"), "left_anti"))
-    IncrementalDedupRound(dups, survivors, updatedIndex)
-  }
-
-  /** One full round of the DAILY incremental-dedup loop — the
-    * composition a 100 TB corpus build actually schedules: flag delta
-    * docs near-duplicating the persisted index or earlier delta docs
-    * ([[incrementalNearDups]]), keep the survivors, and fold ONLY the
-    * survivors' signatures back into the index so tomorrow's delta
-    * deduplicates against today's corpus without the index ever holding
-    * two rows for one near-dup cluster. [[incrementalDedupRound]]
-    * returns three lazy frames over one signature cache;
-    * [[incrementalDedupRoundIndexed]] returns `dups` already
-    * materialized (driver-local rows, caches released on return) and
-    * `survivors`/`updatedIndex` derived from those rows. `updatedIndex`
-    * is `|index| + |surviving delta|` rows of (doc_id, minhash) —
-    * callers persist it (parquet / graft table) as the next round's
-    * input, an O(corpus) append-only sidecar of ~0.5 KB/doc. The
-    * indexed corpus TEXT is never re-read. */
-  case class IncrementalDedupRound(
-      dups: DataFrame, survivors: DataFrame, updatedIndex: DataFrame)
-
-  def incrementalDedupRound(delta: DataFrame, indexSigs: DataFrame,
-      bands: Int = 32, r: Int = 2, threshold: Double = 0.5)
-      : IncrementalDedupRound = {
-    // one signature computation feeds the returned frames: dups derive
-    // from it, and the index update anti-joins the SAME signature
-    // frame instead of re-shingling the surviving text. Two consuming
-    // actions (typically one on `dups`/`survivors`, one on
-    // `updatedIndex`) complete before the cache releases — releasing
-    // after the first made a later action on updatedIndex re-shingle
-    // the delta (r9 ADVICE). A caller running MORE than two actions
-    // over these frames should persist deltaSigs itself via
-    // incrementalNearDupsFromSigs, which takes the signature frame
-    // as input and leaves its lifecycle to the caller.
-    val deltaSigs = minhashIndex(delta, bands * r)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.CacheHygiene.unpersistAfterNextAction(deltaSigs,
-      releaseAfterConsumers = 2)
-    val dups = incrementalNearDupsFromSigs(deltaSigs, indexSigs,
-      bands, r, threshold)
-    val survivors = delta.join(dups.select("doc_id"), Seq("doc_id"),
-      "left_anti")
-    val updatedIndex = indexSigs.unionByName(
-      deltaSigs.join(dups.select("doc_id"), Seq("doc_id"), "left_anti"))
-    IncrementalDedupRound(dups, survivors, updatedIndex)
-  }
 
   /** documents projected to (doc_id, source, words) with words = the
     * distinct lower-cased whitespace tokens. */
@@ -1491,7 +1407,7 @@ object TextOps {
       // O(delta) probe against the bloom+bucket store (r17 VERDICT
       // #2); candidates and scores — and therefore the golden — are
       // identical to the former full-signature-scan path
-      incrementalNearDupsIndexed(delta, idxPath)
+      incrementalDedupRoundIndexed(delta, idxPath).dups
         .orderBy("doc_id")
     },
 

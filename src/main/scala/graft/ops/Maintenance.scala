@@ -117,8 +117,7 @@ object Maintenance {
     // fragment (r19): the product is the sorted/z-ordered layout and
     // its zone-map selectivity, not fragment-count reduction — the old
     // early-exit silently skipped the rewrite (and never recorded
-    // sort_by/zorder_by) on 1-fragment tables, which the write path's
-    // rebalance now produces routinely
+    // sort_by/zorder_by) on 1-fragment tables
     val recluster = sortBy.nonEmpty || zorderBy.nonEmpty
     if (small.isEmpty ||
         (!recluster && small.size <= 1 && !small.exists(_.deletedCount > 0)))

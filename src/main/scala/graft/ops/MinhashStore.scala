@@ -96,18 +96,15 @@ object MinhashStore {
   final case class ProbeStats(segments: Int, probeKeys: Long,
       survivors: Long, partsTouched: Int, partsTotal: Int,
       fullScanSegments: Int)
-  /** [[matchedPostings]]'s result. `scannedSigs` is set when no segment
-    * the probe reads was pruned: every candidate then comes from a
-    * segment whose signatures the probe scans whole, so the candidates'
-    * signatures are those segments' signatures, fetched without a
-    * partition decision. */
-  final case class Probe(postings: DataFrame, stats: ProbeStats,
-      scannedSigs: Option[DataFrame])
-  /** The latest probe's stats, JVM-wide — an observability hook for
-    * specs and the refresh probe only; callers decide from the stats
-    * [[matchedPostings]] returns, which no other session can swap. */
-  val lastProbeStats =
-    new java.util.concurrent.atomic.AtomicReference[ProbeStats](null)
+  /** Index postings (band, band_hash, new_id, doc_id) matching a
+    * probe, and where their signatures come from: `Left(sigs)` holds
+    * every candidate's signature (no segment the probe reads was
+    * pruned, so every candidate comes from a segment whose signatures
+    * the probe scans whole); `Right(sigsFor)` reads the signatures of a
+    * distinct `old_id` frame ([[sigsFor]]). `stats` is None for a probe
+    * over a plain signature frame rather than a store. */
+  final case class Probe(postings: DataFrame, stats: Option[ProbeStats],
+      sigs: Either[DataFrame, DataFrame => DataFrame])
 
   /** The layouts [[writeSegment]] writes. Reads pass them instead of
     * inferring: inference costs one Spark job per directory read. */
@@ -215,64 +212,49 @@ object MinhashStore {
       // the tag names this call's threads and Spark jobs, so a failure
       // cancels the siblings' jobs, not only their driver threads
       val tag = s"graft-mhstore-$seg"
-      val threads = new java.util.concurrent.atomic.AtomicInteger(0)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3,
-        (r: Runnable) => new Thread(r, s"$tag-${threads.incrementAndGet()}"))
-      val bloom = try {
-        def task[T](body: => T): java.util.concurrent.Future[T] =
-          pool.submit(new java.util.concurrent.Callable[T] {
-            override def call(): T = {
-              spark.sparkContext.addJobTag(tag)
-              try body finally spark.sparkContext.removeJobTag(tag)
-            }
-          })
-        // explicit shuffle partition counts (= dir counts) keep the
-        // exchanges scale-adaptive instead of riding the session's
-        // spark.sql.shuffle.partitions (guide §2: no constant tuned to
-        // either local mode or one cluster size)
-        val sigsF = task {
-          graft.BenchPhases.timed("mhstore.sigs_write") {
-            cached
-              .withColumn("sp", pmod(xxhash64(col("doc_id")), lit(sp.toLong))
-                .cast("int"))
-              .repartition(sp, col("sp"))
-              .write.partitionBy("sp").mode("overwrite")
-              .parquet(new Path(segDir, "sigs").toString)
-          }
+      def task[T](body: => T): () => T = () => {
+        spark.sparkContext.addJobTag(tag)
+        try body finally spark.sparkContext.removeJobTag(tag)
+      }
+      // explicit shuffle partition counts (= dir counts) keep the
+      // exchanges scale-adaptive instead of riding the session's
+      // spark.sql.shuffle.partitions (guide §2: no constant tuned to
+      // either local mode or one cluster size)
+      val writeSigs = task {
+        graft.BenchPhases.timed("mhstore.sigs_write") {
+          cached
+            .withColumn("sp", pmod(xxhash64(col("doc_id")), lit(sp.toLong))
+              .cast("int"))
+            .repartition(sp, col("sp"))
+            .write.partitionBy("sp").mode("overwrite")
+            .parquet(new Path(segDir, "sigs").toString)
         }
-        val bucketsF = task {
-          graft.BenchPhases.timed("mhstore.buckets_write") {
-            banded
-              .withColumn("p", pmod(khCol, lit(p.toLong)).cast("int"))
-              .repartition(p, col("p"))
-              .write.partitionBy("p").mode("overwrite")
-              .parquet(new Path(segDir, "buckets").toString)
-          }
+        None
+      }
+      val writeBuckets = task {
+        graft.BenchPhases.timed("mhstore.buckets_write") {
+          banded
+            .withColumn("p", pmod(khCol, lit(p.toLong)).cast("int"))
+            .repartition(p, col("p"))
+            .write.partitionBy("p").mode("overwrite")
+            .parquet(new Path(segDir, "buckets").toString)
         }
-        // bloom over the segment's kh set — one distributed agg, result
-        // ~24 bits/key on the driver then persisted beside the payload
-        val bloomF = task {
-          graft.BenchPhases.timed("mhstore.bloom") {
-            banded.select(khCol.as("kh"))
-              .stat.bloomFilter("kh", math.max(1L, n * bands), BloomFpp)
-          }
+        None
+      }
+      // bloom over the segment's kh set — one distributed agg, result
+      // ~24 bits/key on the driver then persisted beside the payload
+      val buildBloom = task {
+        graft.BenchPhases.timed("mhstore.bloom") {
+          Some(banded.select(khCol.as("kh"))
+            .stat.bloomFilter("kh", math.max(1L, n * bands), BloomFpp))
         }
-        // the first failure — or an interrupt of this thread — cancels
-        // the siblings and waits them out, so no write outlives the
-        // call; the root cause propagates (FragmentStats.adoptStaged)
-        try {
-          sigsF.get(); bucketsF.get(); bloomF.get()
-        } catch {
-          case t: Throwable =>
-            spark.sparkContext.cancelJobsWithTag(tag)
-            pool.shutdownNow()
-            pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-            throw (t match {
-              case e: java.util.concurrent.ExecutionException => e.getCause
-              case other => other
-            })
-        }
-      } finally { pool.shutdown(); () }
+      }
+      // a failure cancels the siblings' Spark jobs as well as their
+      // threads, so no write outlives the call
+      val bloom = graft.DriverPool.runAll(tag, 3,
+        Seq[() => Option[BloomFilter]](writeSigs, writeBuckets, buildBloom),
+        onFailure = () => spark.sparkContext.cancelJobsWithTag(tag))
+        .flatten.head
       val out = fs.create(new Path(segDir, "bloom.bin"), true)
       try bloom.writeTo(out) finally out.close()
       val mo = fs.create(new Path(segDir, "_seg.json"), true)
@@ -411,10 +393,9 @@ object MinhashStore {
     val scannedSegs = scanned.result()
     val stats = ProbeStats(m.segments.size, probeKeys, survivorsTotal,
       touched, parts.sum.toInt, scannedSegs.size)
-    lastProbeStats.set(stats)
-    val scannedSigs =
-      if (pruned) None
-      else Some(scannedSegs.map(readSigs(spark, root, _))
+    val sigs: Either[DataFrame, DataFrame => DataFrame] =
+      if (pruned) Right(sigsFor(spark, root, _: DataFrame))
+      else Left(scannedSegs.map(readSigs(spark, root, _))
         .reduceOption(_ unionByName _)
         .getOrElse(readSigs(spark, root, m.segments.head).limit(0))
         .select("doc_id", "minhash"))
@@ -431,7 +412,7 @@ object MinhashStore {
         .join(broadcast(keyed.filter(admitted(col("kh")))
           .select("new_id", "band", "band_hash")), Seq("band", "band_hash"))
         .select("band", "band_hash", "new_id", "doc_id")
-    Probe(postings, stats, scannedSigs)
+    Probe(postings, Some(stats), sigs)
   }
 
   /** Signatures for a bounded candidate id frame (`old_id` column,

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -33,6 +36,34 @@ class CacheHygieneSpec extends AnyFunSuite {
       "cache was released by a query that never read it")
     // the consuming query (its plan contains the cached subtree) releases
     assert(cached.groupBy("x").count().count() == 3)
+    assert(pollUntilReleased(cached),
+      "cache not released after the consuming query completed")
+  }
+
+  test("an action that ran before registration is not the consumer, even " +
+      "while its end event is still queued") {
+    import spark.implicits._
+    val cached = Seq(4, 5, 6).toDF("z").persist(StorageLevel.MEMORY_AND_DISK)
+    // hold the shared listener queue, which delivers query end events to
+    // QueryExecutionListeners, until the release is registered
+    val gate = new CountDownLatch(1)
+    val holder = new SparkListener {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+        gate.await(30, TimeUnit.SECONDS); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(holder)
+    try {
+      cached.count() // materialize the cache; its end event stays queued
+      CacheHygiene.unpersistAfterNextAction(cached)
+    } finally {
+      gate.countDown()
+      spark.sparkContext.removeSparkListener(holder)
+    }
+    org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    assert(cachedLevel(cached) != StorageLevel.NONE,
+      "cache was released by the action that materialized it")
+    assert(cached.groupBy("z").count().count() == 3)
     assert(pollUntilReleased(cached),
       "cache not released after the consuming query completed")
   }

@@ -392,8 +392,8 @@ class GraftConnectorSpec extends AnyFunSuite {
     assert(nParts == 1, s"limit should plan 1 fragment, planned $nParts")
   }
 
-  test("spark.graft.write.rebalance coalesces a many-task CTAS into " +
-      "few right-sized fragments; default preserves task layout") {
+  test("a many-task CTAS lands one fragment per task with the source's " +
+      "contents") {
     wh
     spark.sql("DROP TABLE IF EXISTS g.db.rbl")
     li.limit(3000).repartition(6).createOrReplaceTempView("rbl_src")
@@ -403,18 +403,12 @@ class GraftConnectorSpec extends AnyFunSuite {
       new org.apache.hadoop.fs.Path(
         java.nio.file.Paths.get(wh, "db", "rbl.graft").toUri)).get
       .fragments.size
-    // default off: one fragment per incoming task
     spark.sql("CREATE TABLE g.db.rbl AS SELECT * FROM rbl_src")
     assert(frags() == 6, s"default layout should be task-per-fragment")
-    val before = spark.table("g.db.rbl").collect().toSet
+    assert(spark.table("g.db.rbl").collect().toSet ==
+      spark.table("rbl_src").collect().toSet,
+      "the CTAS must not change the rows it writes")
     spark.sql("DROP TABLE g.db.rbl")
-    // opt-in: AQE rebalance coalesces the KB-scale write
-    spark.conf.set("spark.graft.write.rebalance", "true")
-    try spark.sql("CREATE TABLE g.db.rbl AS SELECT * FROM rbl_src")
-    finally spark.conf.unset("spark.graft.write.rebalance")
-    assert(frags() < 6, s"rebalance should cut the fragment count, got ${frags()}")
-    assert(spark.table("g.db.rbl").collect().toSet == before,
-      "rebalance must not change table contents")
   }
 
   test("table rename is rejected like the reference; ALTER exceeds it") {

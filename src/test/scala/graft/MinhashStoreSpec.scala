@@ -68,9 +68,9 @@ class MinhashStoreSpec extends AnyFunSuite {
     val delta = docsAt(sf).filter(expr("pmod(doc_id, 4) = 0"))
     val root = tmpRoot()
     MinhashStore.build(TextOps.minhashIndex(base), root)
-    val viaStore = rows(TextOps.incrementalNearDupsIndexed(delta, root))
-    val viaScan = rows(TextOps.incrementalNearDups(delta,
-      TextOps.minhashIndex(base)))
+    val viaStore = rows(TextOps.incrementalDedupRoundIndexed(delta, root).dups)
+    val viaScan = rows(TextOps.incrementalDedupRound(delta,
+      TextOps.minhashIndex(base)).dups)
     assert(viaStore == viaScan,
       "indexed probe must be row-identical to the signature-scan path")
     assert(viaStore.nonEmpty, "gate-shape probe found no dups at sf0.001 " +
@@ -93,13 +93,14 @@ class MinhashStoreSpec extends AnyFunSuite {
       .select((col("doc_id") + 1000000L).as("doc_id"),
         concat_ws(" ", reverse(split(col("text"), " ")),
           col("doc_id").cast("string"), lit("zq9x")).as("text"))
-    val out = rows(TextOps.incrementalNearDupsIndexed(novel, root))
+    val round = TextOps.incrementalDedupRoundIndexed(novel, root)
+    val out = rows(round.dups)
     // within-delta pairs may exist (near-identical base docs stay
     // near-identical reversed) — but nothing may match the INDEX
     assert(out.forall(_._2 >= 1000000L),
       s"novel delta must have no index dups, got $out")
-    val st = MinhashStore.lastProbeStats.get()
-    assert(st != null && st.fullScanSegments == 0)
+    val st = round.probeStats.get
+    assert(st.fullScanSegments == 0)
     // the bloom must kill (essentially) every novel probe: a handful
     // may legitimately survive (degenerate short docs reverse to
     // themselves) but ~800 probe keys must not flood through
@@ -123,11 +124,12 @@ class MinhashStoreSpec extends AnyFunSuite {
     // probe key exists in the index, survivors flood the partitions
     val copies = base.select((col("doc_id") + 500000L).as("doc_id"),
       col("text"))
-    val viaStore = rows(TextOps.incrementalNearDupsIndexed(copies, root))
-    assert(MinhashStore.lastProbeStats.get().fullScanSegments == 1,
+    val round = TextOps.incrementalDedupRoundIndexed(copies, root)
+    val viaStore = rows(round.dups)
+    assert(round.probeStats.get.fullScanSegments == 1,
       "a full-copy delta must trigger the pruning fallback")
-    val viaScan = rows(TextOps.incrementalNearDups(copies,
-      TextOps.minhashIndex(base)))
+    val viaScan = rows(TextOps.incrementalDedupRound(copies,
+      TextOps.minhashIndex(base)).dups)
     assert(viaStore == viaScan)
     assert(viaStore.size == copies.count(),
       "every verbatim copy must be flagged as a dup")
@@ -145,16 +147,17 @@ class MinhashStoreSpec extends AnyFunSuite {
     assert(MinhashStore.meta(spark, root).segments.size == 2)
     assert(MinhashStore.sigsAll(spark, root).count() ==
       base.count() + extra.count())
-    val viaSegs = rows(TextOps.incrementalNearDupsIndexed(delta, root))
+    val viaSegs = rows(TextOps.incrementalDedupRoundIndexed(delta, root).dups)
     val rebuilt = tmpRoot()
     MinhashStore.build(TextOps.minhashIndex(base.unionByName(extra)),
       rebuilt)
-    val viaRebuild = rows(TextOps.incrementalNearDupsIndexed(delta, rebuilt))
+    val viaRebuild =
+      rows(TextOps.incrementalDedupRoundIndexed(delta, rebuilt).dups)
     assert(viaSegs == viaRebuild,
       "segmented probe must equal the compacted rebuild's")
     // the scan path over the unioned signatures agrees too
-    val viaScan = rows(TextOps.incrementalNearDups(delta,
-      TextOps.minhashIndex(base.unionByName(extra))))
+    val viaScan = rows(TextOps.incrementalDedupRound(delta,
+      TextOps.minhashIndex(base.unionByName(extra))).dups)
     assert(viaSegs == viaScan)
   }
 
@@ -168,6 +171,9 @@ class MinhashStoreSpec extends AnyFunSuite {
     val scanRound = TextOps.incrementalDedupRound(delta, idx)
     val storeRound = TextOps.incrementalDedupRoundIndexed(delta, root)
     assert(rows(storeRound.dups) == rows(scanRound.dups))
+    assert(storeRound.probeStats.isDefined && scanRound.probeStats.isEmpty)
+    // the scan round's dups are driver-local rows too
+    assert(jobsDuring(scanRound.dups.collect())._2 == 0)
     assert(storeRound.survivors.orderBy("doc_id").collect().map(_.getLong(0))
       .toSeq == scanRound.survivors.orderBy("doc_id").collect()
       .map(_.getLong(0)).toSeq)

@@ -369,7 +369,7 @@ class TextOpsSpec extends AnyFunSuite {
       11L -> 10L, 20L -> 20L, 21L -> 1L))
   }
 
-  test("incrementalNearDups: delta flags vs index + within-delta, min dup_of") {
+  test("incrementalDedupRound dups: delta flags vs index + within-delta, min dup_of") {
     import spark.implicits._
     val txtA = "the quick brown fox jumps over the lazy dog again and again"
     val txtB = "colorless green ideas sleep furiously beneath crystal moons tonight"
@@ -384,21 +384,15 @@ class TextOpsSpec extends AnyFunSuite {
       (400L, txtA)  // dups BOTH indexed 1 and delta 100 -> min old wins
     ).toDF("doc_id", "text")
     val before = spark.sparkContext.getPersistentRDDs.size
-    val got = TextOps.incrementalNearDups(delta, index)
+    val got = TextOps.incrementalDedupRound(delta, index).dups
       .orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(got == Seq((100L, 1L, 1.0), (201L, 200L, 1.0), (400L, 1L, 1.0)),
       s"got $got")
-    // the delta signature cache is released by the one-shot listener
-    // after the consuming action; delivery is async, so poll briefly
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    var after = spark.sparkContext.getPersistentRDDs.size
-    while (after - before > 0 && System.nanoTime() < deadline) {
-      Thread.sleep(100)
-      after = spark.sparkContext.getPersistentRDDs.size
-    }
+    // every cache the round used is released before it returns
+    val after = spark.sparkContext.getPersistentRDDs.size
     assert(after - before <= 0,
-      s"deltaSigs cache leak: persistent RDDs grew $before -> $after")
+      s"dedup round cache leak: persistent RDDs grew $before -> $after")
   }
 
   test("incrementalDedupRound: survivors fold into the index, the next " +

@@ -2,8 +2,9 @@ package graft.ops
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructType}
 
 import graft.connector.GraftTable
 import graft.format.GraftFormat
@@ -97,15 +98,44 @@ object VectorIndex {
       .coalesce(1).write.mode("overwrite")
       .parquet(new Path(dest, "list_sizes").toString)
 
+  /** The `list_sizes` layout [[countsDf]] writes. Readers pass it
+    * instead of inferring: inference costs one Spark job per read. */
+  private val ListSizesSchema = new StructType()
+    .add("cid", IntegerType).add("count", LongType)
+
   /** The accumulator array as a (cid, count) frame — the one place the
-    * list_sizes schema (and its drop-empty-lists rule) is encoded, so
+    * list_sizes rows (and their drop-empty-lists rule) are built, so
     * build- and refresh-time files can never silently diverge. */
-  private def countsDf(spark: SparkSession, counts: Array[Long]) = {
-    import spark.implicits._
-    spark.createDataset(counts.toSeq.zipWithIndex.collect {
-      case (n, cid) if n > 0 => (cid, n)
-    }).toDF("cid", "count")
-  }
+  private def countsDf(spark: SparkSession, counts: Array[Long]) =
+    spark.createDataFrame(java.util.Arrays.asList(counts.toSeq.zipWithIndex
+      .collect { case (n, cid) if n > 0 => Row(cid, n) }: _*), ListSizesSchema)
+
+  /** Per-list row counts persisted in an index version dir. Throws when
+    * the file is absent or unreadable. */
+  private[graft] def readListSizes(spark: SparkSession,
+      dir: Path): Map[Int, Long] =
+    spark.read.schema(ListSizesSchema)
+      .parquet(new Path(dir, "list_sizes").toString)
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+
+  /** The `centroids` layout (cid, centroid) both IVF kinds write. */
+  private val CentroidsSchema = new StructType()
+    .add("cid", IntegerType).add("centroid", ArrayType(DoubleType))
+
+  private def writeCentroids(spark: SparkSession,
+      cents: Array[Array[Double]], dest: Path): Unit =
+    spark.createDataFrame(java.util.Arrays.asList(cents.toSeq.zipWithIndex
+        .map { case (c, i) => Row(i, c.toSeq) }: _*), CentroidsSchema)
+      .coalesce(1).write.mode("overwrite")
+      .parquet(new Path(dest, "centroids").toString)
+
+  /** (cid, centroid) rows of an index version dir, in cid order. */
+  private[graft] def readCentroids(spark: SparkSession,
+      dir: Path): Array[(Int, Array[Double])] =
+    spark.read.schema(CentroidsSchema)
+      .parquet(new Path(dir, "centroids").toString)
+      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
+      .sortBy(_._1)
 
   /** O(delta) refresh of the persisted list sizes: prior sizes (a few
     * K tiny rows) merged with the counts the delta-segment write just
@@ -124,7 +154,7 @@ object VectorIndex {
       case None =>
         copyFrozen(fs, prior, new Path(dest, "list_sizes"), conf)
       case Some(cnts) =>
-        spark.read.parquet(prior.toString)
+        spark.read.schema(ListSizesSchema).parquet(prior.toString)
           .unionByName(countsDf(spark, cnts))
           .groupBy(col("cid")).agg(sum(col("count")).as("count"))
           .coalesce(1).write.mode("overwrite")
@@ -407,11 +437,7 @@ object VectorIndex {
       fs.delete(IndexSegments.manifestPath(dest), false)
       IndexSegments.invalidateDir(fs, dest) // rebuild replaces the chain
       VectorIndex.clearBuildId(fs, dest) // before ANY new artifact lands
-      spark.createDataset(centroids.toSeq.zipWithIndex
-          .map { case (c, i) => (i, c.toSeq) })
-        .toDF("cid", "centroid")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(new Path(dest, "centroids").toString)
+      VectorIndex.writeCentroids(spark, centroids, dest)
       // full-corpus pass: the one O(N) job of the build
       assign(df.as[(Long, Seq[Float])], centroids)
         .select(col("__id").as(idCol), col("cid"))
@@ -493,16 +519,12 @@ object VectorIndex {
           val priorSegs = IndexSegments.expandPrior(fs, r, priorDir)
           val dest = versionDir(qual, embCol, manifest.version)
           VectorIndex.clearBuildId(fs, dest) // before ANY new artifact lands
-          val centDF = spark.read
-            .parquet(new Path(priorDir, "centroids").toString)
           var escalate = false
           var segDir: Option[Path] = None
           val (segs, deltaCounts) =
             if (delta.isEmpty) (priorSegs, Option.empty[Array[Long]])
             else {
-              val cents = centDF.collect()
-                .map(row => row.getInt(0) -> row.getSeq[Double](1).toArray)
-                .sortBy(_._1).map(_._2)
+              val cents = VectorIndex.readCentroids(spark, priorDir).map(_._2)
               val df = GraftShim.tableDF(spark,
                 new GraftTable(s"index:$qual#delta", qual,
                   manifest.copy(fragments = delta,
@@ -702,6 +724,11 @@ object VectorIndex {
     private def versionDir(table: Path, col: String, v: Long): Path =
       new Path(root(table, col), s"v=$v")
 
+    /** The `codebooks` layout (subspace, code, entry) [[build]] writes. */
+    private val CodebooksSchema = new StructType()
+      .add("sub", IntegerType).add("code", IntegerType)
+      .add("entry", ArrayType(DoubleType))
+
     /** Train + persist at the table's latest version; returns it. */
     def build(spark: SparkSession, table: Path, idCol: String,
         embCol: String, nLists: Int = 16, m: Int = 16, iters: Int = 4,
@@ -769,16 +796,11 @@ object VectorIndex {
       fs.delete(IndexSegments.manifestPath(dest), false)
       IndexSegments.invalidateDir(fs, dest) // rebuild replaces the chain
       VectorIndex.clearBuildId(fs, dest) // before ANY new artifact lands
-      spark.createDataset(cents.toSeq.zipWithIndex
-          .map { case (c, i) => (i, c.toSeq) })
-        .toDF("cid", "centroid")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(new Path(dest, "centroids").toString)
-      spark.createDataset(for {
+      VectorIndex.writeCentroids(spark, cents, dest)
+      spark.createDataFrame(java.util.Arrays.asList((for {
           (bk, j) <- codebooks.toSeq.zipWithIndex
           (entry, c) <- bk.toSeq.zipWithIndex
-        } yield (j, c, entry.toSeq))
-        .toDF("sub", "code", "entry")
+        } yield Row(j, c, entry.toSeq)): _*), CodebooksSchema)
         .coalesce(1).write.mode("overwrite")
         .parquet(new Path(dest, "codebooks").toString)
       codes.select(col("__id").as(idCol), col("cid"), col("code"))
@@ -854,19 +876,15 @@ object VectorIndex {
           val priorSegs = IndexSegments.expandPrior(fs, r, priorDir)
           val dest = versionDir(qual, embCol, manifest.version)
           VectorIndex.clearBuildId(fs, dest) // before ANY new artifact lands
-          val centDF = spark.read
-            .parquet(new Path(priorDir, "centroids").toString)
-          val bookDF = spark.read
-            .parquet(new Path(priorDir, "codebooks").toString)
           var escalate = false
           var segDir: Option[Path] = None
           val (segs, deltaCodes) =
             if (delta.isEmpty) (priorSegs, Option.empty[Array[Long]])
             else {
-              val cents = centDF.collect()
-                .map(row => row.getInt(0) -> row.getSeq[Double](1).toArray)
-                .sortBy(_._1).map(_._2)
-              val books: Array[Array[Array[Double]]] = bookDF.collect()
+              val cents = VectorIndex.readCentroids(spark, priorDir).map(_._2)
+              val books: Array[Array[Array[Double]]] = spark.read
+                .schema(CodebooksSchema)
+                .parquet(new Path(priorDir, "codebooks").toString).collect()
                 .map(row => (row.getInt(0), row.getInt(1),
                   row.getSeq[Double](2).toArray))
                 .groupBy(_._1).toSeq.sortBy(_._1)

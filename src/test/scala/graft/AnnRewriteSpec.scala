@@ -312,17 +312,23 @@ class AnnRewriteSpec extends AnyFunSuite {
     }
   }
 
-  /** The nprobe a planned probe actually used = the size of the cid
-    * IN-list the semi-join's index side filters on. */
-  private def probedLists(df: org.apache.spark.sql.DataFrame): Option[Int] =
+  /** The list ids a planned probe reads = the cid IN-list the
+    * semi-join's index side filters on. */
+  private def probedCids(df: org.apache.spark.sql.DataFrame): Option[Set[Int]] =
     df.queryExecution.optimizedPlan.collectFirst {
       case org.apache.spark.sql.catalyst.plans.logical.Filter(
           org.apache.spark.sql.catalyst.expressions.In(a, list), _)
-          if a.references.map(_.name).exists(_ == "cid") => list.size
+          if a.references.map(_.name).exists(_ == "cid") =>
+        list.map(_.eval().asInstanceOf[Int]).toSet
       case org.apache.spark.sql.catalyst.plans.logical.Filter(
           org.apache.spark.sql.catalyst.expressions.InSet(a, set), _)
-          if a.references.map(_.name).exists(_ == "cid") => set.size
+          if a.references.map(_.name).exists(_ == "cid") =>
+        set.map(_.asInstanceOf[Int])
     }
+
+  /** The nprobe a planned probe actually used. */
+  private def probedLists(df: org.apache.spark.sql.DataFrame): Option[Int] =
+    probedCids(df).map(_.size)
 
   test("escalation is minimal: survivors first reaching k at an " +
       "intermediate (non-doubled) prefix probe exactly that prefix " +
@@ -544,6 +550,118 @@ class AnnRewriteSpec extends AnyFunSuite {
       assert(metrics.countJobs.get() == jobs0 + 1,
         s"concurrent first-planning must run exactly ONE count job, " +
           s"ran ${metrics.countJobs.get() - jobs0}")
+    }
+  }
+
+  /** A fresh table over the embeddings fixture with an IVF index built
+    * at `nLists`, and a DataFrame factory over its latest version. */
+  private def freshIndexed(tag: String, nLists: Int = 8)
+      : (Path, () => org.apache.spark.sql.DataFrame) = {
+    val d = new Path(java.nio.file.Files
+      .createTempDirectory(s"graft-$tag").resolve("e.graft").toUri)
+    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
+    graft.connector.GraftWriter.write(fs, d,
+      Tables.load(spark, sf, "embeddings"), overwrite = true)
+    Ivf.build(spark, d, "vec_id", "embedding", nLists = nLists)
+    (d, () => {
+      val m = graft.format.GraftFormat.readLatest(fs, d).get
+      org.apache.spark.sql.GraftShim.tableDF(spark,
+        new graft.connector.GraftTable(s"$tag:$d", d, m, fs.getConf))
+    })
+  }
+
+  test("SQL-form ANN planning on a warm index launches no Spark job; " +
+      "filtered counts are shared across query vectors, per row set") {
+    val (_, df) = freshIndexed("annsql")
+    VectorFunctions.register(spark)
+    df().createOrReplaceTempView("annsql_t")
+    val vecs = Tables.load(spark, sf, "embeddings")
+      .filter(col("vec_id").isin(3L, 7L, 11L, 19L, 23L))
+      .orderBy("vec_id").select("embedding").collect()
+      .map(_.getSeq[Float](0).map(x => s"CAST($x AS FLOAT)")
+        .mkString("array(", ", ", ")"))
+    assume(vecs.length == 5, "fixture lacks the query rows")
+    // the benchmark's SQL shape: the query literal lives in the Project
+    // that aliases the score, below the sort
+    def sqlQ(v: String, from: String = "annsql_t") = spark.sql(
+      s"SELECT vec_id, cosine_sim(embedding, $v) AS score FROM $from " +
+        "ORDER BY score DESC LIMIT 10")
+    def ids(q: org.apache.spark.sql.DataFrame) =
+      q.collect().map(_.getLong(0)).toSeq
+    // ~2/3 selectivity keeps the scaled prefix below every list
+    val filteredFrom = "annsql_t WHERE vec_id % 3 <> 0"
+    // the id column derived from another column: the ids the sort
+    // reads are not the plain predicate's, so neither are the counts
+    val derivedFrom = "(SELECT vec_id + 1 AS vec_id, embedding " +
+      "FROM annsql_t WHERE vec_id % 3 <> 0)"
+    val m = graft.plans.AnnTopKIndexRewrite.metrics
+    withRule {
+      // warm-up: the first plan loads the index version's metadata
+      val unfiltered = vecs.take(4).map(v => sqlQ(v))
+      unfiltered.head.queryExecution.optimizedPlan
+      unfiltered.slice(1, 3).foreach { q =>
+        val (plan, jobs) = jobsDuring(q.queryExecution.optimizedPlan)
+        assert(plan.collect { case j: Join if j.joinType == LeftSemi => j }
+          .size == 1, s"warm SQL-form top-k must probe:\n$plan")
+        assert(jobs == 0,
+          s"planning over a warm index launched $jobs Spark jobs")
+      }
+      val (_, explainJobs) = jobsDuring(unfiltered(3).explain())
+      assert(explainJobs == 0, s"explain() launched $explainJobs Spark jobs")
+      val jobs0 = m.countJobs.get()
+      val filtered = vecs.take(3).map(v => sqlQ(v, filteredFrom))
+      filtered.foreach(q => assert(semiJoins(q) == 1,
+        s"filtered top-k must probe:\n${q.queryExecution.optimizedPlan}"))
+      assert(m.countJobs.get() == jobs0 + 1, "three filtered queries with " +
+        s"one predicate ran ${m.countJobs.get() - jobs0} count jobs, not 1")
+      val derived = sqlQ(vecs(4), derivedFrom)
+      derived.queryExecution.optimizedPlan
+      assert(m.countJobs.get() == jobs0 + 2,
+        "a Project deriving the id column must get its own count")
+      val all = unfiltered ++ filtered :+ derived
+      val warm = all.map(ids)
+      // the same queries planned from cold caches give the same rows
+      graft.plans.AnnTopKIndexRewrite.indexMetas.clear()
+      graft.plans.AnnTopKIndexRewrite.survivorCounts.clear()
+      val cold = (vecs.take(4).map(v => sqlQ(v)) ++
+        vecs.take(3).map(v => sqlQ(v, filteredFrom)) :+
+        sqlQ(vecs(4), derivedFrom)).map(ids)
+      assert(warm.toSeq == cold.toSeq, "cached planning changed a result")
+      warm.foreach(r => assert(r.length == 10))
+    }
+  }
+
+  test("an in-place rebuild at the same table version (nLists 8 -> 4) " +
+      "probes the new build's lists with the new build's list sizes") {
+    val (d, df) = freshIndexed("annrebuild")
+    def q(k: Int) = df().orderBy(VectorFunctions.cosine_sim(
+        col("embedding"), typedlit(queryVec)).desc)
+      .limit(k).select("vec_id")
+    withRule {
+      spark.conf.set("spark.graft.ann.nprobe", "1")
+      try {
+        assert(probedCids(q(5)).nonEmpty, "the 8-list build must probe")
+        Ivf.build(spark, d, "vec_id", "embedding", nLists = 4)
+        // the new build's ranking and sizes: k one past the nearest
+        // list's size needs exactly the two nearest lists
+        val (cents, assign) = Ivf.readCurrent(spark, d, "embedding").get
+        val qv = queryVec.map(_.toDouble)
+        val ranked = cents.collect()
+          .map(r => (r.getInt(0), r.getSeq[Double](1)
+            .zip(qv).map { case (a, b) => (a - b) * (a - b) }.sum))
+          .sortBy { case (cid, dist) => (dist, cid) }.map(_._1)
+        assert(ranked.length == 4)
+        val sizes = assign.groupBy("cid").count().collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap
+        val k = (sizes(ranked(0)) + 1).toInt
+        assume(sizes(ranked(1)) > 0)
+        val p = q(k)
+        assert(probedCids(p).exists(_.forall(_ < 4)))
+        assert(probedCids(p).contains(ranked.take(2).toSet),
+          s"expected lists ${ranked.take(2).toSeq}, probed ${probedCids(p)}:\n" +
+            p.queryExecution.optimizedPlan)
+        assert(p.collect().length == k)
+      } finally spark.conf.unset("spark.graft.ann.nprobe")
     }
   }
 

@@ -8,7 +8,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
@@ -45,22 +44,6 @@ class MinhashStoreSpec extends AnyFunSuite {
       }
     }.flatten.filter(p => p.contains(root) &&
       (p.endsWith("/sigs") || p.endsWith("/buckets")))
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val started = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val out = body
-      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
-      (out, started.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   test("indexed probe returns EXACTLY the full-scan path's rows " +
       "(the t26 gate shape: base = 3/4 corpus, delta = 1/4)") {

@@ -23,6 +23,24 @@ object TestSpark {
   }
   val sf = "/root/testdata/sf0.001"
 
+  /** Spark jobs started while `body` runs; the listener bus is drained
+    * on both sides so no earlier job leaks in and none is missed. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      (out, started.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   /** Flatten an exception's cause chain into one searchable string —
     * specs asserting typed errors grep this instead of guessing which
     * layer wrapped the message. */

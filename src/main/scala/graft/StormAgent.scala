@@ -44,11 +44,12 @@ import org.apache.spark.sql.SparkSession
   *                          exactly like kill -9 (r13 VERDICT #3; the
   *                          reference's beginInsert/finishInsert crash
   *                          window, LanceMetadata.java:1031-1112).
-  *                          "staged" dies after the distributed parquet
-  *                          write, before adoptStaged (staging-dir
-  *                          debris); "adopted" dies after files moved
-  *                          into data/, before the manifest CAS
-  *                          (unreferenced data-file debris); "dv" dies
+  *                          "staged" leaves the `.staging-<uuid>` debris
+  *                          of an older graft writer (one that staged
+  *                          fragments before moving them into data/);
+  *                          "adopted" dies after the fragment write into
+  *                          data/, before the manifest CAS (unreferenced
+  *                          data-file debris); "dv" dies
   *                          after a deletion file is written, before
   *                          its manifest commits (orphan DV debris).
   *  - GRAFT_STORM_CRASH_AT  append index for the crash (default 1)
@@ -137,15 +138,16 @@ object StormAgent {
     // the same public primitives GraftWriter.write composes, stopped
     // short — then halt(137), the JVM-side equivalent of kill -9
     def crashMidCommit(point: String, k: Long): Unit = {
-      import graft.format.{FragmentStats, GraftFormat}
-      val staging = new Path(dir, s".staging-${java.util.UUID.randomUUID()}")
+      import graft.format.GraftFormat
       point match {
         case "staged" =>
+          // the debris an OLDER graft writer left when killed between
+          // its staging write and the move into data/
+          val staging = new Path(dir, s".staging-${java.util.UUID.randomUUID()}")
           Seq(k).toDF("k").coalesce(1).write.parquet(staging.toUri.toString)
         case "adopted" =>
-          Seq(k).toDF("k").coalesce(1).write.parquet(staging.toUri.toString)
-          FragmentStats.adoptStaged(fs,
-            spark.sessionState.newHadoopConf(), dir, staging)
+          graft.connector.GraftWriter.writeFragments(
+            Seq(k).toDF("k").coalesce(1), dir, Nil, Map.empty)
         case "dv" =>
           val m = GraftFormat.readLatest(fs, dir).get
           val f = m.fragments.maxBy(_.liveRows)

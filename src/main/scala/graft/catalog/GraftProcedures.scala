@@ -20,6 +20,8 @@ import graft.ops.Maintenance
   * has no maintenance surface at all, SURVEY.md Maintenance):
   *
   *   CALL g.system.compact(`table` => 'db.t', min_rows => 1000)
+  *   CALL g.system.compact(`table` => 'db.t',
+  *     materialize_deletions_threshold => 0.0)
   *   CALL g.system.compact(`table` => 'db.t', sort_by => 'k1,k2')
   *   CALL g.system.vacuum(`table` => 'db.t', keep_versions => 5)
   *   CALL g.system.history('db.t')
@@ -98,11 +100,14 @@ object GraftProcedures {
     }
   }
 
+  /** `compact(table, min_rows = 1000000, materialize_deletions_threshold
+    * = 0.1, sort_by = '', zorder_by = '')`: see [[Maintenance.compact]];
+    * the threshold is Lance's (0 folds any deletion, 1 never folds). */
   private final class Compact(resolve: String => (Path, Configuration)) extends MaintenanceProcedure(
     "compact",
     Array(in("table", StringType),
       inDefault("min_rows", LongType, "1000000"),
-      inDefault("fold_deletes", BooleanType, "true"),
+      inDefault("materialize_deletions_threshold", DoubleType, "0.1"),
       inDefault("sort_by", StringType, "''"),
       inDefault("zorder_by", StringType, "''")),
     StructType(Seq(StructField("fragments_compacted", IntegerType, nullable = false)))) {
@@ -110,7 +115,7 @@ object GraftProcedures {
       val (dir, conf) = resolve(in.getUTF8String(0).toString)
       def csv(i: Int) = in.getUTF8String(i).toString.split(',')
         .map(_.trim).filter(_.nonEmpty).toSeq
-      val n = Maintenance.compact(spark, dir, in.getLong(1), in.getBoolean(2),
+      val n = Maintenance.compact(spark, dir, in.getLong(1), in.getDouble(2),
         csv(3), csv(4), conf)
       Array(new GenericInternalRow(Array[Any](n)))
     }

@@ -1,7 +1,5 @@
 package graft.catalog
 
-import java.util.UUID
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
@@ -10,8 +8,9 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, Write, W
 import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.StructType
 
-import graft.format.{FragmentStats, GraftFormat}
-import graft.format.GraftFormat.{ColStats, FragmentMeta, Manifest}
+import graft.connector.{GraftWriter, NewFileInfo}
+import graft.format.GraftFormat
+import graft.format.GraftFormat.Manifest
 
 /** Two-phase atomic CTAS / RTAS / CREATE OR REPLACE (SURVEY.md D3;
   * reference: beginCreateTable -> workers write fragments ->
@@ -40,12 +39,10 @@ class StagedGraftTable(
     .getOrElse(Seq.empty)
 
   GraftCatalog.validateColumnNames(schema0)
-  private val vectorCols: Seq[(String, Int)] =
-    graft.format.VectorColumns.fromProperties(tableProps)
-  graft.format.VectorColumns.validate(schema0, vectorCols)
+  graft.format.VectorColumns.validate(schema0,
+    graft.format.VectorColumns.fromProperties(tableProps))
 
-  private val staged = scala.collection.mutable.ArrayBuffer
-    .empty[(String, Long, Long, Map[String, ColStats])]
+  private val staged = scala.collection.mutable.ArrayBuffer.empty[NewFileInfo]
 
   override def name(): String = ident
   override def schema(): StructType = schema0
@@ -70,14 +67,8 @@ class StagedGraftTable(
         new InsertableRelation {
           override def insert(data: DataFrame, overwrite: Boolean): Unit = {
             GraftFormat.init(fs, dir)
-            val staging = new Path(dir, s".staging-${UUID.randomUUID()}")
-            graft.format.BlobStore.encode(
-              graft.format.VectorColumns.enforce(data, vectorCols),
-              blobCols, dir)
-              .write.parquet(staging.toUri.toString)
-            val hconf = data.sparkSession.sessionState.newHadoopConf()
-            val adopted = FragmentStats.adoptStaged(fs, hconf, dir, staging)
-            staged.synchronized { staged ++= adopted }
+            val files = GraftWriter.writeFragments(data, dir, blobCols, tableProps)
+            staged.synchronized { staged ++= files }
           }
         }
     }
@@ -95,10 +86,7 @@ class StagedGraftTable(
       // at 0 would have its replacement rows silently excluded as
       // "already streamed" by any checkpoint whose base held id 0
       var nextId = latestOpt.map(_.maxFragmentId).getOrElse(-1)
-      val frags = staged.toSeq.map { case (rel, n, size, stats) =>
-        nextId += 1
-        FragmentMeta(nextId, rel, n, None, 0L, size, stats)
-      }
+      val frags = staged.toSeq.map { f => nextId += 1; f.toMeta(nextId) }
       Manifest(
         version = latestOpt.map(_.version + 1).getOrElse(1L),
         schemaJson = schema0.json,
@@ -115,7 +103,5 @@ class StagedGraftTable(
   }
 
   override def abortStagedChanges(): Unit =
-    staged.foreach { case (rel, _, _, _) =>
-      fs.delete(new Path(dir, rel), false)
-    }
+    staged.foreach(f => fs.delete(new Path(dir, f.relPath), false))
 }

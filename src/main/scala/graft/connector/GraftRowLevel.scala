@@ -1,7 +1,5 @@
 package graft.connector
 
-import java.util.UUID
-
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
@@ -10,13 +8,11 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.execution.datasources.OutputWriter
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.format.{FragmentStats, GraftFormat}
-import graft.format.GraftFormat.{ColStats, FragmentMeta}
+import graft.format.GraftFormat
 
 /** Delta-based row-level DML (SQL DELETE / UPDATE / MERGE INTO) —
   * SURVEY.md section 2.7 D5; reference: LanceMergeSink.java:49-204 +
@@ -27,8 +23,8 @@ import graft.format.GraftFormat.{ColStats, FragmentMeta}
   * arrive as delete+insert pairs). Each task:
   *   - buffers deleted row indexes per fragment, flushed at task commit
   *     as a PARTIAL deletion-vector sidecar (executor-side write);
-  *   - streams replacement/insert rows into a new parquet fragment via
-  *     Spark's own parquet writer.
+  *   - streams replacement/insert rows into a new fragment in `data/`
+  *     through the shared [[FragmentWriter]].
   * The driver then merges partial vectors with the snapshot's existing
   * vectors in a second small distributed job (one task per touched
   * fragment) and commits ONE manifest version — row positions never
@@ -149,10 +145,7 @@ class GraftDeltaWrite(table: GraftTable, info: LogicalWriteInfo)
             Some(f.copy(deletionPath = Some(dv), deletedCount = n))
         }
       }
-      val added = newFiles.map { fi =>
-        nextId += 1
-        FragmentMeta(nextId, fi.relPath, fi.rows, None, 0L, fi.sizeBytes, fi.stats)
-      }
+      val added = newFiles.map { fi => nextId += 1; fi.toMeta(nextId) }
       latest.copy(version = latest.version + 1, fragments = kept ++ added,
         maxFragmentId = nextId, createdAtMs = System.currentTimeMillis(),
         // a commit that only writes deletion vectors IS a delete;
@@ -183,10 +176,6 @@ class GraftDeltaWrite(table: GraftTable, info: LogicalWriteInfo)
   }
 }
 
-/** New fragment written by one task. */
-final case class NewFileInfo(relPath: String, rows: Long, sizeBytes: Long,
-    stats: Map[String, ColStats])
-
 /** Per-task result: new fragments + partial deletion vectors
   * (fragId -> relative sidecar path). */
 final case class GraftDeltaCommit(
@@ -209,13 +198,10 @@ class GraftDeltaWriter(
 
   private val tableDir = new Path(tableDirStr)
   private lazy val fs = tableDir.getFileSystem(conf.value)
+  private val files = new FragmentWriter(tableDir, conf.value)
 
   // per-fragment deleted row indexes (bounded by rows this task touches)
   private val dels = mutable.HashMap.empty[Int, mutable.ArrayBuilder.ofLong]
-  private var writer: OutputWriter = null
-  private var fileRel: String = null
-  private var fileAbs: Path = null
-  private var rows = 0L
 
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
     val addr = id.getLong(0)
@@ -230,28 +216,10 @@ class GraftDeltaWriter(
     insert(row)
   }
 
-  override def insert(row: InternalRow): Unit = {
-    if (writer == null) {
-      val name = s"${UUID.randomUUID()}.parquet"
-      fileRel = s"data/$name"
-      fileAbs = new Path(GraftFormat.dataDir(tableDir), name)
-      writer = GraftShim.newParquetRowWriter(fileAbs.toString, conf.value)
-    }
-    writer.write(row)
-    rows += 1
-  }
+  override def insert(row: InternalRow): Unit = files.write(row)
 
   override def commit(): WriterCommitMessage = {
-    val newFiles =
-      if (writer == null) Seq.empty
-      else {
-        writer.close(); writer = null
-        if (rows == 0) { fs.delete(fileAbs, false); Seq.empty }
-        else {
-          val (n, size, stats) = FragmentStats.readFooter(fs, conf.value, fileAbs)
-          Seq(NewFileInfo(fileRel, n, size, stats))
-        }
-      }
+    val newFiles = files.commit()
     val partials = dels.toSeq.map { case (fragId, idxs) =>
       fragId -> GraftFormat.writeDeletionFile(fs, tableDir, fragId, 0L,
         idxs.result())
@@ -259,12 +227,7 @@ class GraftDeltaWriter(
     GraftDeltaCommit(newFiles, partials)
   }
 
-  override def abort(): Unit = {
-    if (writer != null) { try writer.close() catch { case _: Exception => () } }
-    if (fileAbs != null) {
-      try fs.delete(fileAbs, false) catch { case _: Exception => () }
-    }
-  }
+  override def abort(): Unit = files.abort()
 
   override def close(): Unit = ()
 }

@@ -824,7 +824,11 @@ class GraftScan(
         StructField(f.name, BlobStore.descriptorType, f.nullable)
       else f
     })
+    // the table's vended storage options reach the executor-side reader
     val hadoopConf = spark.sessionState.newHadoopConf()
+    GraftTable.storageOptions(spark, table.conf).foreach {
+      case (k, v) => hadoopConf.set(k, v)
+    }
     val readFunc = GraftShim.parquetReaderFunc(
       spark, physicalDataSchema, parquetSchema, pushed.toIndexedSeq,
       hadoopConf)

@@ -139,6 +139,19 @@ object GraftTable {
       "row address: (fragment_id << 32) | row_index"
   }
 
+  /** Entries of `conf` that differ from the session's Hadoop conf,
+    * Spark settings excepted: the storage options a catalog vended for
+    * a table. Executor-side reads and writes apply them, so they act
+    * under the same storage identity as the driver's manifest I/O. */
+  def storageOptions(spark: SparkSession, conf: Configuration)
+      : Map[String, String] = {
+    val base = spark.sessionState.newHadoopConf()
+    conf.iterator().asScala
+      .filter(e => !e.getKey.startsWith("spark.") &&
+        base.getRaw(e.getKey) != e.getValue)
+      .map(e => e.getKey -> e.getValue).toMap
+  }
+
   def blobMetaColumn(colName: String, doc: String): MetadataColumn =
     new MetadataColumn {
       override def name(): String = colName

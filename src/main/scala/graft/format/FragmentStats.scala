@@ -1,7 +1,5 @@
 package graft.format
 
-import java.util.UUID
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -181,45 +179,6 @@ object FragmentStats {
         Some((mm, CodePointOrdering))
       case _ => None // boolean/decimal/binary/int96: no pruning
     }
-  }
-
-  /** Move staged parquet files into `data/` with UUID fragment names,
-    * harvesting (relPath, rowCount, sizeBytes, stats) for each in the
-    * same footer open. Files are invisible until a manifest references
-    * them, so a lost commit race never re-moves data.
-    *
-    * Footer reads + renames run on a small bounded pool (r18
-    * optimization): they were sequential driver-side I/O — a 32-task
-    * write paid 32 serial footer opens before its commit, and every
-    * CTAS / INSERT / compact sits behind this. Per-file work is
-    * independent; results are collected in the ORIGINAL sorted-name
-    * order (bucketize relies on it), so callers see byte-identical
-    * output. */
-  def adoptStaged(fs: FileSystem, conf: Configuration, tableDir: Path,
-      staging: Path): Seq[(String, Long, Long, Map[String, ColStats])] = {
-    if (!fs.exists(staging)) return Seq.empty
-    val files = fs.listStatus(staging).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    def adoptOne(f: org.apache.hadoop.fs.FileStatus)
-        : (String, Long, Long, Map[String, ColStats]) = {
-      val (rows, size, stats) = readFooter(fs, conf, f.getPath)
-      val name = s"${UUID.randomUUID()}.parquet"
-      val dest = new Path(GraftFormat.dataDir(tableDir), name)
-      if (!fs.rename(f.getPath, dest))
-        throw new java.io.IOException(s"failed to move ${f.getPath} -> $dest")
-      (s"data/$name", rows, size, stats)
-    }
-    val out =
-      if (files.size <= 1) files.map(adoptOne)
-      // results in sorted-name order; the first failure propagates as
-      // the sequential loop's did — after the other renames are
-      // cancelled and waited out, so none outlives adoptStaged to race
-      // the caller's staging cleanup (r18 ADVICE)
-      else graft.DriverPool.runAll("graft-adopt", 8,
-        files.map(f => () => adoptOne(f)))
-    fs.delete(staging, true)
-    out.filter(_._2 > 0)
   }
 }
 

@@ -1,22 +1,21 @@
 package graft.ops
 
-import java.util.UUID
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.SerializableConfiguration
 
-import graft.format.{BlobStore, FragmentStats, GraftFormat}
+import graft.connector.{FragmentWriter, GraftTable, GraftWriter}
+import graft.format.{BlobStore, GraftFormat}
 import graft.format.GraftFormat.{FragmentMeta, Manifest}
 
 /** Table-maintenance operations the reference does not ship but a
   * 100 TB lakehouse cannot live without:
   *
-  *  - [[compact]]: rewrite fragments below a size threshold into full
-  *    fragments, folding deletion vectors in (physical delete). Reads
-  *    and the rewrite are distributed; the commit is one manifest CAS.
+  *  - [[compact]]: rewrite fragments below a size threshold, or past a
+  *    deleted-rows threshold, into full fragments, folding deletion
+  *    vectors in (physical delete). Reads and the rewrite are
+  *    distributed; the commit is one manifest CAS.
   *    Untouched fragments keep their ids, so time travel and streaming
   *    offsets stay valid for them.
   *  - [[vacuum]]: delete data/deletion/blob files not referenced by any
@@ -57,24 +56,12 @@ object Maintenance {
       }
     } catch { case _: java.io.FileNotFoundException => Long.MaxValue }
 
-  /** The keys where `conf` differs from the bare session Hadoop conf —
-    * i.e. the catalog/vended storage options. Passed as READ/WRITE
-    * OPTIONS on every distributed parquet job below (Spark merges them
-    * into the per-relation Hadoop conf on executors), so the executor
-    * side of a maintenance job acts under the same identity as the
-    * driver-side manifest/commit I/O. */
-  private def confOptions(spark: SparkSession, conf: Configuration)
-      : Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    val base = spark.sessionState.newHadoopConf()
-    conf.iterator().asScala
-      .filter(e => base.get(e.getKey) != e.getValue)
-      .map(e => e.getKey -> e.getValue).toMap
-  }
-
-  /** Compact fragments with fewer than `minRows` live rows (or with any
-    * deletions when `foldDeletes`). Returns number of fragments
-    * compacted.
+  /** Compact fragments with fewer than `minRows` live rows or with more
+    * than `materializeDeletionsThreshold` of their rows deleted (Lance's
+    * compaction policy, default 0.1; 0 folds any deletion, 1 never
+    * folds). Returns number of fragments compacted. The plain rewrite
+    * rolls its output at ceil(live rows / nOut) rows, nOut = live rows /
+    * `minRows` (>= 1), even when the scan planned one partition.
     *
     * `sortBy`: range-partition + sort the rewritten rows by these
     * columns, so each output fragment covers a DISJOINT value range —
@@ -97,43 +84,46 @@ object Maintenance {
       spark: SparkSession,
       dir: Path,
       minRows: Long = 1000000L,
-      foldDeletes: Boolean = true,
+      materializeDeletionsThreshold: Double = 0.1,
       sortBy: Seq[String] = Seq.empty,
       zorderBy: Seq[String] = Seq.empty,
       hadoopConf: Configuration = null): Int = {
     require(sortBy.isEmpty || zorderBy.isEmpty,
       "sortBy and zorderBy are mutually exclusive")
+    require(materializeDeletionsThreshold >= 0.0 &&
+      materializeDeletionsThreshold <= 1.0,
+      s"materialize_deletions_threshold must be in [0, 1], got " +
+        materializeDeletionsThreshold)
     val conf = resolvedConf(spark, hadoopConf)
     val fs = dir.getFileSystem(conf)
     val qualDir = fs.makeQualified(dir)
     val manifest = GraftFormat.readLatest(fs, qualDir).getOrElse(
       throw new IllegalArgumentException(s"not a graft table: $dir"))
+    def foldsDeletes(f: FragmentMeta): Boolean =
+      f.deletedCount > materializeDeletionsThreshold * f.rowCount
     // sorted compaction is a re-clustering OPTIMIZE: every fragment is
     // rewritten so the output covers disjoint sort-key ranges
-    val (small, _) = manifest.fragments.partition(f =>
-      sortBy.nonEmpty || zorderBy.nonEmpty || f.liveRows < minRows ||
-        (foldDeletes && f.deletedCount > 0))
+    val recluster = sortBy.nonEmpty || zorderBy.nonEmpty
+    val small = manifest.fragments.filter(f =>
+      recluster || f.liveRows < minRows || foldsDeletes(f))
     // a requested RE-CLUSTERING must run even over a single clean
     // fragment (r19): the product is the sorted/z-ordered layout and
     // its zone-map selectivity, not fragment-count reduction — the old
     // early-exit silently skipped the rewrite (and never recorded
     // sort_by/zorder_by) on 1-fragment tables
-    val recluster = sortBy.nonEmpty || zorderBy.nonEmpty
     if (small.isEmpty ||
-        (!recluster && small.size <= 1 && !small.exists(_.deletedCount > 0)))
+        (!recluster && small.size <= 1 && !small.exists(foldsDeletes)))
       return 0
 
-    // distributed rewrite of the small fragments' LIVE rows
-    val live = liveRowsOf(spark, conf, qualDir, manifest, small)
-
-    val staging = new Path(qualDir, s".staging-${UUID.randomUUID()}")
-    // toward target-size fragments: one output file per minRows-worth of
+    val live = scanLive(spark, conf, qualDir, manifest, small)
+    // toward target-size fragments: one output per minRows-worth of
     // rows (>= 1); sorted compaction range-partitions first so output
     // fragments carry disjoint sort-key ranges
     val total = small.map(_.liveRows).sum
     val nOut = math.max(1, (total / math.max(1L, minRows)).toInt)
-    val opts = confOptions(spark, conf)
-    if (zorderBy.nonEmpty) {
+    val opts = GraftWriter.parquetOptions(spark, manifest.properties) ++
+      GraftTable.storageOptions(spark, conf)
+    val files = if (zorderBy.nonEmpty) {
       // phase spans are observability only (land as compact.* in bench
       // artifacts when a timed query runs this): the rewrite is three
       // passes — quantile cuts (narrow), the range-exchange sample of
@@ -142,14 +132,14 @@ object Maintenance {
         zValue(live, zorderBy)
       }
       graft.BenchPhases.timed("compact.zorder_write") {
-        live.withColumn("__z", z)
+        FragmentWriter.write(live.withColumn("__z", z)
           .repartitionByRange(nOut, col("__z"))
           .sortWithinPartitions("__z")
-          .drop("__z")
-          .write.options(opts).parquet(staging.toUri.toString)
+          .drop("__z"), qualDir, options = opts)
       }
     } else if (sortBy.isEmpty)
-      live.coalesce(nOut).write.options(opts).parquet(staging.toUri.toString)
+      FragmentWriter.write(live.coalesce(nOut), qualDir,
+        maxRows = (total + nOut - 1) / nOut, options = opts)
     else {
       // tight range boundaries are the product here (zone-map
       // selectivity tracks how disjoint the output ranges are), so
@@ -158,13 +148,9 @@ object Maintenance {
       val prev = spark.conf.getOption(sampleKey)
       spark.conf.set(sampleKey, "1000")
       try
-        live.repartitionByRange(nOut, sortBy.map(col): _*)
-          .sortWithinPartitions(sortBy.map(col): _*)
-          .write.options(opts).parquet(staging.toUri.toString)
+        FragmentWriter.write(live.repartitionByRange(nOut, sortBy.map(col): _*)
+          .sortWithinPartitions(sortBy.map(col): _*), qualDir, options = opts)
       finally prev.fold(spark.conf.unset(sampleKey))(spark.conf.set(sampleKey, _))
-    }
-    val moved = graft.BenchPhases.timed("compact.adopt") {
-      FragmentStats.adoptStaged(fs, conf, qualDir, staging)
     }
 
     val smallIds = small.map(_.id).toSet
@@ -179,10 +165,7 @@ object Maintenance {
         throw new GraftFormat.CommitConflictException(
           "concurrent modification of fragments being compacted")
       var nextId = latest.maxFragmentId
-      val newFrags = moved.map { case (rel, n, size, stats) =>
-        nextId += 1
-        FragmentMeta(nextId, rel, n, None, 0L, size, stats)
-      }
+      val newFrags = files.flatten.map { f => nextId += 1; f.toMeta(nextId) }
       latest.copy(
         version = latest.version + 1,
         fragments = latest.fragments.filterNot(f => smallIds.contains(f.id))
@@ -251,47 +234,22 @@ object Maintenance {
     terms.reduce(_ + _)
   }
 
-  /** The LIVE rows of `frags` as a DataFrame: deletion vectors applied
-    * via an anti-join on (fragment file name, row index) — sidecars are
-    * read executor-side, so a fragment with millions of deletions never
-    * becomes Catalyst literals. */
-  private def liveRowsOf(
-      spark: SparkSession,
-      conf: org.apache.hadoop.conf.Configuration,
-      qualDir: Path,
-      manifest: Manifest,
+  /** The live rows of `frags`, read through graft's own scan over the
+    * manifest restricted to them: the reader applies deletion vectors,
+    * and blob columns come back as their physical descriptor structs
+    * (the scan sees the physical schema), so a rewrite keeps every blob
+    * reachable. Layout claims are dropped: the subset has none. */
+  private def scanLive(spark: SparkSession, conf: Configuration,
+      qualDir: Path, manifest: Manifest,
       frags: Seq[FragmentMeta]): org.apache.spark.sql.DataFrame = {
-    val physSchema = BlobStore.physicalSchema(
-      manifest.schema, manifest.blobColumns)
-    val paths = frags.map(f => new Path(qualDir, f.path).toString)
-    val raw = spark.read.options(confOptions(spark, conf))
-      .schema(physSchema).parquet(paths: _*)
-      .withColumn("__f", element_at(split(col("_metadata.file_path"), "/"), -1))
-      .withColumn("__i", col("_metadata.row_index"))
-    val delFiles = frags.filter(_.deletionPath.isDefined)
-      .map(f => (f.path.split('/').last, f.deletionPath.get))
-    (if (delFiles.isEmpty) raw else {
-      val sconf = new SerializableConfiguration(conf)
-      val dirStr = qualDir.toString
-      val delRdd = spark.sparkContext
-        .parallelize(delFiles, math.min(delFiles.size, 32))
-        .flatMap { case (fname, rel) =>
-          GraftFormat.readDeletionFileAbs(
-            new Path(dirStr, rel).toString, sconf.value)
-            .map(idx => (fname, idx))
-        }
-      val dels = spark.createDataFrame(delRdd.map {
-          case (f, i) => org.apache.spark.sql.Row(f, i)
-        },
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__df",
-            org.apache.spark.sql.types.StringType, nullable = false),
-          org.apache.spark.sql.types.StructField("__di",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-      raw.join(broadcast(dels),
-        raw("__f") === dels("__df") && raw("__i") === dels("__di"),
-        "left_anti")
-    }).drop("__f", "__i")
+    val physical = manifest.copy(
+      schemaJson = BlobStore.physicalSchema(
+        manifest.schema, manifest.blobColumns).json,
+      fragments = frags,
+      properties = manifest.properties -- GraftFormat.ClusteringProps -
+        "blob_columns")
+    GraftShim.tableDF(spark,
+      new GraftTable(s"rewrite:$qualDir", qualDir, physical, conf))
   }
 
   /** Bucketize: rewrite the whole table so every row lives in the
@@ -318,10 +276,9 @@ object Maintenance {
       .contains(colType.typeName),
       s"bucketize requires an integral column, got ${colType.sql}")
 
-    val live = liveRowsOf(spark, conf, qualDir, manifest, manifest.fragments)
-    // exact bucket -> RDD partition -> one staged file per bucket; the
-    // Spark writer names files part-<partitionId>-..., which is how the
-    // bucket ids are recovered after adoption
+    val live = scanLive(spark, conf, qualDir, manifest, manifest.fragments)
+    // exact bucket -> RDD partition -> one fragment per non-empty
+    // bucket; the writer returns files by partition, i.e. by bucket
     val schema = live.schema
     val bucketed = live.withColumn("__b",
       pmod(col(column).cast("long"), lit(nBuckets.toLong)).cast("int"))
@@ -334,19 +291,9 @@ object Maintenance {
         override def getPartition(key: Any): Int = key.asInstanceOf[Int]
       })
       .map(_._2)
-    val staging = new Path(qualDir, s".staging-${UUID.randomUUID()}")
-    spark.createDataFrame(rdd, schema).write
-      .options(confOptions(spark, conf)).parquet(staging.toUri.toString)
-
-    // staged file name part-0000i-... -> bucket i (empty buckets write
-    // no file); adoptStaged returns entries in the same sorted order
-    val stagedBuckets = fs.listStatus(staging).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-      .map(_.getPath.getName.stripPrefix("part-").takeWhile(_.isDigit).toInt)
-    val moved = FragmentStats.adoptStaged(fs, conf, qualDir, staging)
-    require(moved.size == stagedBuckets.size,
-      "bucketized rewrite produced an empty staged file")
+    val written = FragmentWriter.write(spark.createDataFrame(rdd, schema),
+      qualDir, options = GraftWriter.parquetOptions(spark, manifest.properties) ++
+        GraftTable.storageOptions(spark, conf))
 
     val oldIds = manifest.fragments.map(_.id).toSet
     GraftFormat.commitWithRetry(fs, qualDir) { latestOpt =>
@@ -359,9 +306,8 @@ object Maintenance {
         throw new GraftFormat.CommitConflictException(
           "concurrent modification during bucketize; re-run")
       var nextId = latest.maxFragmentId
-      val pairs = moved.zip(stagedBuckets).map { case ((rel, rows, size, stats), b) =>
-        nextId += 1
-        (b, FragmentMeta(nextId, rel, rows, None, 0L, size, stats))
+      val pairs = written.zipWithIndex.flatMap { case (files, b) =>
+        files.map { f => nextId += 1; (b, f.toMeta(nextId)) }
       }
       latest.copy(
         version = latest.version + 1,
@@ -619,14 +565,12 @@ object Maintenance {
         }
       }
     }
-    // staging-debris GC: a writer killed between its distributed
-    // parquet write and adoptStaged leaves a `.staging-<uuid>` dir at
-    // the table root that NO manifest will ever reference (every
-    // surviving write path deletes it) — at 100 TB that is a whole
-    // task-fleet's parquet output per crash. Age-gated on the NEWEST
-    // contained file like the other orphan classes: an in-flight
-    // write's staging dir is always young, and an empty dir has no age
-    // evidence (newestMtimeUnder = MaxValue) so it is never GC'd.
+    // staging debris of OLDER graft writers, which staged fragments in
+    // a `.staging-<uuid>` dir at the table root (current writers write
+    // straight into data/): a writer killed before its move into data/
+    // left a dir no manifest references. Age-gated on the newest
+    // contained file like the other orphans; an empty dir has no age
+    // evidence (newestMtimeUnder = MaxValue) and is never GC'd.
     fs.listStatus(qualDir).foreach { st =>
       if (st.isDirectory && st.getPath.getName.startsWith(".staging-") &&
           newestMtimeUnder(fs, st.getPath) < orphanCutoffMs) {
@@ -710,7 +654,7 @@ object Maintenance {
         .flatMap { m =>
           val phys = BlobStore.physicalSchema(m.schema, m.blobColumns)
           val paths = m.fragments.map(f => new Path(qualDir, f.path).toString)
-          val df = spark.read.options(confOptions(spark, conf))
+          val df = spark.read.options(GraftTable.storageOptions(spark, conf))
             .schema(phys).parquet(paths: _*)
           m.blobColumns.map(c =>
             df.select(col(c).getField("file").as("f"))

@@ -578,7 +578,7 @@ class S3LiteFileSystem extends FileSystem {
       case Some(_) => return false // dst file exists
       // no dst-parent existence check: directories are virtual and only
       // exist once populated, so a parent probe would reject legitimate
-      // first-object renames (e.g. staging -> data/ fragment adoption)
+      // first-object renames (a file moved into an unpopulated prefix)
       case None => dst
     }
     val dk = key(effDst)

@@ -1,22 +1,19 @@
 package graft.streaming
 
-import java.util.UUID
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.connector.{GraftTable, NewFileInfo}
-import graft.format.{FragmentStats, GraftFormat}
-import graft.format.GraftFormat.{FragmentMeta, Manifest}
+import graft.connector.{FragmentWriter, GraftTable, NewFileInfo}
+import graft.format.GraftFormat
 
 /** Structured Streaming SINK for graft tables (SURVEY.md 2.8 — the
   * write half of the streaming extension; the reference has no
   * streaming surface at all). Each task streams its rows into one new
-  * parquet fragment via Spark's parquet writer; each epoch commits ONE
-  * manifest version (Append).
+  * fragment in `data/` through the shared [[FragmentWriter]]; each
+  * epoch commits ONE manifest version (Append).
   *
   * Exactly-once: the committed manifest records
   * `stream_epoch.<queryId> = epochId` in its properties; a replayed
@@ -57,10 +54,7 @@ class GraftStreamingWrite(table: GraftTable, info: LogicalWriteInfo)
           // epoch replay after recovery: already committed, idempotent skip
           throw new AlreadyCommittedEpoch
         var nextId = latest.maxFragmentId
-        val newFrags = files.map { fi =>
-          nextId += 1
-          FragmentMeta(nextId, fi.relPath, fi.rows, None, 0L, fi.sizeBytes, fi.stats)
-        }
+        val newFrags = files.map { fi => nextId += 1; fi.toMeta(nextId) }
         latest.copy(
           version = latest.version + 1,
           fragments = latest.fragments ++ newFrags,
@@ -98,45 +92,11 @@ class GraftStreamingWriterFactory(
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new GraftStreamingDataWriter(tableDirStr, conf)
-}
-
-class GraftStreamingDataWriter(
-    tableDirStr: String,
-    conf: SerializableConfiguration)
-  extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-
-  private val tableDir = new Path(tableDirStr)
-  private lazy val fs = tableDir.getFileSystem(conf.value)
-  private var writer: org.apache.spark.sql.execution.datasources.OutputWriter = null
-  private var fileRel: String = null
-  private var fileAbs: Path = null
-
-  override def write(row: InternalRow): Unit = {
-    if (writer == null) {
-      val name = s"${UUID.randomUUID()}.parquet"
-      fileRel = s"data/$name"
-      fileAbs = new Path(GraftFormat.dataDir(tableDir), name)
-      writer = org.apache.spark.sql.GraftShim.newParquetRowWriter(
-        fileAbs.toString, conf.value)
+    new org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
+      private val files = new FragmentWriter(new Path(tableDirStr), conf.value)
+      override def write(row: InternalRow): Unit = files.write(row)
+      override def commit(): WriterCommitMessage = GraftStreamCommit(files.commit())
+      override def abort(): Unit = files.abort()
+      override def close(): Unit = ()
     }
-    writer.write(row)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    if (writer == null) return GraftStreamCommit(Seq.empty)
-    writer.close(); writer = null
-    val (rows, size, stats) = FragmentStats.readFooter(fs, conf.value, fileAbs)
-    if (rows == 0) { fs.delete(fileAbs, false); GraftStreamCommit(Seq.empty) }
-    else GraftStreamCommit(Seq(NewFileInfo(fileRel, rows, size, stats)))
-  }
-
-  override def abort(): Unit = {
-    if (writer != null) { try writer.close() catch { case _: Exception => () } }
-    if (fileAbs != null) {
-      try fs.delete(fileAbs, false) catch { case _: Exception => () }
-    }
-  }
-
-  override def close(): Unit = ()
 }

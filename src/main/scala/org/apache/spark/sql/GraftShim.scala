@@ -110,6 +110,15 @@ object GraftShim {
     new ParquetOutputWriter(path, new TaskAttemptContextImpl(conf, attemptId))
   }
 
+  /** Executor-side: count a closed fragment file in the running task's
+    * output metrics, which the SQL UI and listeners read. */
+  def recordOutput(bytes: Long, rows: Long): Unit =
+    Option(org.apache.spark.TaskContext.get()).foreach { ctx =>
+      val m = ctx.taskMetrics().outputMetrics
+      m.setBytesWritten(m.bytesWritten + bytes)
+      m.setRecordsWritten(m.recordsWritten + rows)
+    }
+
   /** Release the executor-storage blocks behind a `localCheckpoint`'d
     * DataFrame. The Dataset API has no unpersist for checkpoint RDDs —
     * they live outside the CacheManager — so iterative algorithms that

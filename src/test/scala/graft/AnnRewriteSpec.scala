@@ -13,8 +13,7 @@ class AnnRewriteSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val dir: Path = {
-    val d = new Path(java.nio.file.Files
-      .createTempDirectory("graft-annrw").resolve("e.graft").toUri)
+    val d = new Path(tempDir("graft-annrw").resolve("e.graft").toUri)
     val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
     graft.connector.GraftWriter.write(fs, d,
       Tables.load(spark, sf, "embeddings"), overwrite = true)
@@ -177,8 +176,7 @@ class AnnRewriteSpec extends AnyFunSuite {
 
   test("unfiltered survivor counts come from the persisted list_sizes " +
       "file: ZERO plan-time count jobs on a fresh index") {
-    val d = new Path(java.nio.file.Files
-      .createTempDirectory("graft-annsizes").resolve("e.graft").toUri)
+    val d = new Path(tempDir("graft-annsizes").resolve("e.graft").toUri)
     val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
     graft.connector.GraftWriter.write(fs, d,
       Tables.load(spark, sf, "embeddings"), overwrite = true)
@@ -465,8 +463,7 @@ class AnnRewriteSpec extends AnyFunSuite {
   test("survivor counts: one count job per distinct query (cache hit on " +
       "re-plan), and a re-created generation NEVER reuses the dead " +
       "history's counts") {
-    val d = new Path(java.nio.file.Files
-      .createTempDirectory("graft-anncache").resolve("e.graft").toUri)
+    val d = new Path(tempDir("graft-anncache").resolve("e.graft").toUri)
     val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
     val e = Tables.load(spark, sf, "embeddings")
     graft.connector.GraftWriter.write(fs, d, e, overwrite = true)
@@ -510,8 +507,7 @@ class AnnRewriteSpec extends AnyFunSuite {
   test("concurrent first-plannings of the same query run ONE count job " +
       "(per-key in-flight latch)") {
     // fresh table + index: nothing cached for this generation
-    val d = new Path(java.nio.file.Files
-      .createTempDirectory("graft-annlatch").resolve("e.graft").toUri)
+    val d = new Path(tempDir("graft-annlatch").resolve("e.graft").toUri)
     val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
     graft.connector.GraftWriter.write(fs, d,
       Tables.load(spark, sf, "embeddings"), overwrite = true)
@@ -557,8 +553,7 @@ class AnnRewriteSpec extends AnyFunSuite {
     * at `nLists`, and a DataFrame factory over its latest version. */
   private def freshIndexed(tag: String, nLists: Int = 8)
       : (Path, () => org.apache.spark.sql.DataFrame) = {
-    val d = new Path(java.nio.file.Files
-      .createTempDirectory(s"graft-$tag").resolve("e.graft").toUri)
+    val d = new Path(tempDir(s"graft-$tag").resolve("e.graft").toUri)
     val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
     graft.connector.GraftWriter.write(fs, d,
       Tables.load(spark, sf, "embeddings"), overwrite = true)
@@ -733,8 +728,7 @@ class AnnRewriteSpec extends AnyFunSuite {
   test("auto-fire: a fresh index probes with NO session conf set; a stale " +
       "index silently reverts to the exact scan") {
     // own table: appends here must not stale the shared fixture
-    val d = new Path(java.nio.file.Files
-      .createTempDirectory("graft-annauto").resolve("e.graft").toUri)
+    val d = new Path(tempDir("graft-annauto").resolve("e.graft").toUri)
     val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
     val e = Tables.load(spark, sf, "embeddings")
     graft.connector.GraftWriter.write(fs, d, e, overwrite = true)

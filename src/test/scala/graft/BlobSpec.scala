@@ -13,7 +13,7 @@ class BlobSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val wh: String = {
-    val dir = Files.createTempDirectory("graft-blob-wh").toString
+    val dir = tempDir("graft-blob-wh").toString
     spark.conf.set("spark.sql.catalog.b", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.b.warehouse", dir)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS b.db")
@@ -168,7 +168,7 @@ class VectorColumnSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val wh: String = {
-    val dir = Files.createTempDirectory("graft-vec-wh").toString
+    val dir = tempDir("graft-vec-wh").toString
     spark.conf.set("spark.sql.catalog.v", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.v.warehouse", dir)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS v.db")

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.execution.SparkPlan
@@ -21,7 +21,7 @@ class BucketedJoinSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val wh: String = {
-    val dir = Files.createTempDirectory("graft-spj-wh").toString
+    val dir = tempDir("graft-spj-wh").toString
     spark.conf.set("spark.sql.catalog.bj", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.bj.warehouse", dir)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS bj.db")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.AttributeMap
 import org.apache.spark.sql.catalyst.plans.logical.ColumnStat
@@ -21,7 +19,7 @@ class ColumnStatsSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val wh: String = {
-    val dir = Files.createTempDirectory("graft-cs-wh").toString
+    val dir = tempDir("graft-cs-wh").toString
     spark.conf.set("spark.sql.catalog.cs", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.cs.warehouse", dir)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS cs.db")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +10,7 @@ class ConformanceSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val wh: String = {
-    val dir = Files.createTempDirectory("graft-conf-wh").toString
+    val dir = tempDir("graft-conf-wh").toString
     spark.conf.set("spark.sql.catalog.cf", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.cf.warehouse", dir)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS cf.db")

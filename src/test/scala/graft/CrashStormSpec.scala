@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,8 +10,9 @@ import graft.format.GraftFormat
   * A [[StormAgent]] child JVM dies by `Runtime.halt(137)` — kill -9
   * equivalent: no shutdown hooks, no finally blocks — at a seeded,
   * randomized append index, at each of the three mid-commit protocol
-  * points (staged fragments written / fragments adopted into data/ but
-  * manifest CAS not done / deletion vector written but not committed;
+  * points (an older writer's `.staging-` debris / fragments written into
+  * data/ but manifest CAS not done / deletion vector written but not
+  * committed;
   * the reference's beginInsert-finishInsert crash window,
   * LanceMetadata.java:1031-1112). After the real process death:
   * the table reads at exactly the pre-crash version, the next writer
@@ -72,7 +71,7 @@ class CrashStormSpec extends AnyFunSuite {
         (d, d.getFileSystem(hc),
           Map("GRAFT_STORM_ENDPOINT" -> srv.endpoint))
       } else {
-        val d = new Path(Files.createTempDirectory("graft-crash")
+        val d = new Path(tempDir("graft-crash")
           .resolve("db").resolve("t.graft").toUri)
         (d, d.getFileSystem(spark.sessionState.newHadoopConf()),
           Map.empty[String, String])
@@ -139,6 +138,9 @@ class CrashStormSpec extends AnyFunSuite {
     fs.delete(dir.getParent, true)
   }
 
+  // the names keep the staging writer's step names: "staging" is an
+  // older writer's `.staging-` debris, "adoptStaged" the fragment write
+  // into data/
   test("kill -9 after staging, before adoptStaged: atomic, debris GC'd") {
     crashCase("staged")
   }
@@ -155,10 +157,9 @@ class CrashStormSpec extends AnyFunSuite {
 
   test("kill -9 after adoptStaged over s3a (real HTTP to an object " +
       "store): atomic through virtual directories, debris GC'd") {
-    // the distinct surface: staging 'dirs' are key prefixes, mtimes
-    // come from objects not directory inodes (newestMtimeUnder), and
-    // adoption is COPY+DELETE instead of rename — the same crash
-    // window must hold
+    // the distinct surface: 'dirs' are key prefixes and mtimes come
+    // from objects, not directory inodes — the same crash window must
+    // hold
     crashCase("adopted", s3a = true)
   }
 }

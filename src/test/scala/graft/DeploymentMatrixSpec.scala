@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -188,7 +186,7 @@ class DirDeploymentConformance extends DeploymentConformanceBase {
   import TestSpark._
   protected def cat = "dcdir"
   protected def configure(): Unit = {
-    val wh = Files.createTempDirectory("graft-dcdir-wh").toString
+    val wh = tempDir("graft-dcdir-wh").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
   }
@@ -215,7 +213,7 @@ class RestDeploymentConformance extends DeploymentConformanceBase {
   import TestSpark._
   protected def cat = "dcrest"
   protected def configure(): Unit = {
-    val wh = Files.createTempDirectory("graft-dcrest-wh").toString
+    val wh = tempDir("graft-dcrest-wh").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftRestCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.uri",
       s"http://127.0.0.1:${FakeNamespaceService.port}")
@@ -232,7 +230,7 @@ class RestSingleLevelDeploymentConformance extends DeploymentConformanceBase {
   override protected def ns = "default"
   override protected def singleLevel = true
   protected def configure(): Unit = {
-    val wh = Files.createTempDirectory("graft-dcsl-wh").toString
+    val wh = tempDir("graft-dcsl-wh").toString
     FakeNamespaceService.port // ensure started
     FakeNamespaceService.store.getOrElseUpdate("depm",
       new scala.collection.concurrent.TrieMap())
@@ -254,7 +252,7 @@ class GlueDeploymentConformance extends DeploymentConformanceBase {
   protected def cat = "dcglue"
   override protected def ns = "gluedc"
   protected def configure(): Unit = {
-    val wh = Files.createTempDirectory("graft-dcglue-wh").toString
+    val wh = tempDir("graft-dcglue-wh").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftGlueCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.endpoint",
       s"http://127.0.0.1:${FakeGlueService.port}")
@@ -269,7 +267,7 @@ class HiveDeploymentConformance extends DeploymentConformanceBase {
   protected def cat = "dchive"
   override protected def ns = "hivedc"
   protected def configure(): Unit = {
-    val wh = Files.createTempDirectory("graft-dchive-wh").toString
+    val wh = tempDir("graft-dchive-wh").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftHiveCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.uri",
       s"thrift://127.0.0.1:${FakeHiveMetastore.port}")

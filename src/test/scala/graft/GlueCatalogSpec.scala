@@ -2,7 +2,6 @@ package graft
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
 
 import scala.collection.concurrent.TrieMap
 
@@ -100,7 +99,7 @@ class GlueCatalogSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val ready: Unit = {
-    val wh = Files.createTempDirectory("graft-glue-wh").toString
+    val wh = tempDir("graft-glue-wh").toString
     spark.conf.set("spark.sql.catalog.gc", "graft.catalog.GraftGlueCatalog")
     spark.conf.set("spark.sql.catalog.gc.endpoint",
       s"http://127.0.0.1:${FakeGlueService.port}")

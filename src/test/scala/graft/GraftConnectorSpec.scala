@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +9,7 @@ class GraftConnectorSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val wh: String = {
-    val dir = Files.createTempDirectory("graft-wh").toString
+    val dir = tempDir("graft-wh").toString
     spark.conf.set("spark.sql.catalog.g", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.g.warehouse", dir)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS g.db")
@@ -64,6 +62,41 @@ class GraftConnectorSpec extends AnyFunSuite {
           java.nio.file.Paths.get(wh, "db", "sized2.graft").toUri)).get
       assert(m2.fragments.length == 2 && m2.fragments.forall(_.rowCount <= 200))
     } finally spark.conf.unset("spark.graft.write.maxRowsPerFile")
+  }
+
+  test("an injected task failure in INSERT leaves the manifest unchanged " +
+      "and no new file under data/; no write stages a .staging- dir") {
+    wh
+    spark.sql("DROP TABLE IF EXISTS g.db.ifail")
+    spark.sql("CREATE TABLE g.db.ifail AS SELECT id AS k FROM range(0, 100, 1, 2)")
+    spark.sql("INSERT INTO g.db.ifail SELECT id FROM range(100, 200, 1, 2)")
+    val dir = new org.apache.hadoop.fs.Path(
+      java.nio.file.Paths.get(wh, "db", "ifail.graft").toUri)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    def dataFiles() = fs.listStatus(new org.apache.hadoop.fs.Path(dir, "data"))
+      .filter(_.isFile).map(_.getPath.getName).toSet
+    def stagingDirs() = fs.listStatus(dir).map(_.getPath.getName)
+      .filter(_.startsWith(".staging-")).toSeq
+    val before = GraftFormat.readLatest(fs, dir).get
+    val filesBefore = dataFiles()
+    assert(filesBefore.size == 4 && stagingDirs().isEmpty)
+    // four writing tasks; the last fails mid-stream, after its first 150
+    // rows reached its fragment file and a 1 s pause that lets the other
+    // three commit their files first
+    spark.udf.register("fail_at_1900", (id: Long) => {
+      if (id == 1900L) {
+        Thread.sleep(1000)
+        throw new IllegalStateException("injected task failure")
+      }
+      id
+    })
+    val e = intercept[Exception](spark.sql(
+      "INSERT INTO g.db.ifail SELECT fail_at_1900(id) FROM range(1000, 2000, 1, 4)"))
+    assert(rootMsgs(e).contains("injected task failure"), rootMsgs(e))
+    assert(GraftFormat.readLatest(fs, dir).get == before)
+    assert(dataFiles() == filesBefore)
+    assert(stagingDirs().isEmpty)
+    assert(spark.table("g.db.ifail").count() == 200)
   }
 
   test("write.max_rows_per_group bounds parquet row-group size " +

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,7 +25,7 @@ class GraftDeltaCommitSpec extends AnyFunSuite {
 
   private val fs: FileSystem = freshFs()
 
-  private def tmp(): Path = new Path(Files.createTempDirectory("delta").toUri)
+  private def tmp(): Path = new Path(TestSpark.tempDir("delta").toUri)
 
   private val schemaJson = """{"type":"struct","fields":[]}"""
 

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -23,7 +23,7 @@ class GraftDmlSpec extends AnyFunSuite {
   private val fs: FileSystem = FileSystem.getLocal(new Configuration())
 
   private lazy val wh: String = {
-    val dir = Files.createTempDirectory("graft-dml-wh").toString
+    val dir = tempDir("graft-dml-wh").toString
     spark.conf.set("spark.sql.catalog.dml", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.dml.warehouse", dir)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS dml.db")

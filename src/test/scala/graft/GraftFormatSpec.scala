@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,7 +15,7 @@ class GraftFormatSpec extends AnyFunSuite {
   private val fs: FileSystem = FileSystem.getLocal(new Configuration())
 
   private def tmp(): Path =
-    new Path(Files.createTempDirectory("fmt").toUri)
+    new Path(TestSpark.tempDir("fmt").toUri)
 
   private def manifest(v: Long, op: String = "Append",
       ts: Long = -1L): Manifest =

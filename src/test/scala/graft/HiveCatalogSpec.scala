@@ -1,7 +1,6 @@
 package graft
 
 import java.lang.reflect.{InvocationHandler, Method, Proxy}
-import java.nio.file.Files
 
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
@@ -125,7 +124,7 @@ class HiveCatalogSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val ready: Unit = {
-    val wh = Files.createTempDirectory("graft-hive-wh").toString
+    val wh = tempDir("graft-hive-wh").toString
     spark.conf.set("spark.sql.catalog.hc", "graft.catalog.GraftHiveCatalog")
     spark.conf.set("spark.sql.catalog.hc.uri",
       s"thrift://127.0.0.1:${FakeHiveMetastore.port}")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
@@ -19,7 +17,7 @@ class IndexRefreshSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val wh: String = {
-    val dir = Files.createTempDirectory("graft-ir-wh").toString
+    val dir = tempDir("graft-ir-wh").toString
     spark.conf.set("spark.sql.catalog.ir", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.ir.warehouse", dir)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS ir.db")
@@ -168,8 +166,7 @@ class IndexRefreshSpec extends AnyFunSuite {
 
   test("ivf refresh: frozen centroids, delta-only assignment; lsh refresh " +
       "equals a rebuild exactly") {
-    val dir = new Path(java.nio.file.Files
-      .createTempDirectory("graft-ivfr").resolve("e.graft").toUri)
+    val dir = new Path(tempDir("graft-ivfr").resolve("e.graft").toUri)
     val lfs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val e = Tables.load(spark, sf, "embeddings")
     graft.connector.GraftWriter.write(lfs, dir, e, overwrite = true)
@@ -214,8 +211,7 @@ class IndexRefreshSpec extends AnyFunSuite {
   }
 
   test("pq refresh: frozen codebooks encode the delta; ADC probe serves all rows") {
-    val dir = new Path(java.nio.file.Files
-      .createTempDirectory("graft-pqr").resolve("e.graft").toUri)
+    val dir = new Path(tempDir("graft-pqr").resolve("e.graft").toUri)
     val lfs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val e = Tables.load(spark, sf, "embeddings")
     graft.connector.GraftWriter.write(lfs, dir, e, overwrite = true)
@@ -538,8 +534,7 @@ class IndexRefreshSpec extends AnyFunSuite {
     import graft.ops.VectorIndex
     import graft.ops.VectorIndex.{Ivf, Pq}
     def freshTable(name: String): Path = {
-      val dir = new Path(java.nio.file.Files
-        .createTempDirectory(s"graft-drift-$name").resolve("e.graft").toUri)
+      val dir = new Path(tempDir(s"graft-drift-$name").resolve("e.graft").toUri)
       val lfs = dir.getFileSystem(spark.sessionState.newHadoopConf())
       graft.connector.GraftWriter.write(lfs, dir,
         Tables.load(spark, sf, "embeddings"), overwrite = true)

@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.format.GraftFormat
+import graft.format.{BlobStore, GraftFormat}
 import graft.ops.Maintenance
 
 class MaintenanceSpec extends AnyFunSuite {
@@ -16,7 +16,7 @@ class MaintenanceSpec extends AnyFunSuite {
   private val fs: FileSystem = FileSystem.getLocal(new Configuration())
 
   private lazy val wh: String = {
-    val dir = Files.createTempDirectory("graft-maint-wh").toString
+    val dir = tempDir("graft-maint-wh").toString
     spark.conf.set("spark.sql.catalog.mt", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.mt.warehouse", dir)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS mt.db")
@@ -48,6 +48,141 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(spark.sql(
       s"SELECT count(*) FROM mt.db.c VERSION AS OF ${before.version}")
       .head.getLong(0) == checksum.getLong(1))
+  }
+
+  private def tableDir(name: String): Path =
+    new Path(Paths.get(wh, "db", s"$name.graft").toUri)
+
+  private def dataFiles(dir: Path): Set[String] =
+    fs.listStatus(new Path(dir, "data")).filter(_.isFile)
+      .map(_.getPath.getName).toSet
+
+  private def stagingDirs(dir: Path): Seq[String] =
+    fs.listStatus(dir).map(_.getPath.getName)
+      .filter(_.startsWith(".staging-")).toSeq
+
+  test("compact follows Lance's deletion threshold: a large fragment with " +
+      "at most 10% deleted rows stays in place, one with more is folded") {
+    wh
+    spark.sql("DROP TABLE IF EXISTS mt.db.thr")
+    spark.sql("CREATE TABLE mt.db.thr (k BIGINT)")
+    (0 until 2).foreach(i => spark.sql(
+      s"INSERT INTO mt.db.thr SELECT id + ${i * 1000} FROM range(0, 1000, 1, 1)"))
+    // fragment 0 loses exactly 10% (not past the threshold), fragment 1 11%
+    spark.sql("DELETE FROM mt.db.thr WHERE k < 100 OR (k >= 1000 AND k < 1110)")
+    val dir = tableDir("thr")
+    val before = GraftFormat.readLatest(fs, dir).get
+    val Seq(a, b) = before.fragments.sortBy(_.id)
+    assert((a.deletedCount, b.deletedCount) == (100L, 110L))
+    val expected = (100L until 1000L) ++ (1110L until 2000L)
+    def rows() = spark.table("mt.db.thr").collect().map(_.getLong(0)).sorted.toSeq
+    assert(rows() == expected)
+
+    assert(Maintenance.compact(spark, dir, minRows = 500) == 1)
+    val after = GraftFormat.readLatest(fs, dir).get
+    assert(after.fragments.contains(a), "a fragment at the threshold stays as it was")
+    assert(!after.fragments.exists(_.id == b.id), "a fragment past it is folded")
+    assert(after.fragments.filterNot(_ == a).forall(_.deletedCount == 0))
+    assert(rows() == expected)
+
+    // 0 folds any deletion (the former default), through the SQL surface
+    val c = spark.sql("CALL mt.system.compact(`table` => 'db.thr', " +
+      "min_rows => 500, materialize_deletions_threshold => 0.0)").head
+    assert(c.getInt(0) == 1, c.toString)
+    assert(GraftFormat.readLatest(fs, dir).get.fragments.forall(_.deletedCount == 0))
+    assert(rows() == expected)
+    // 1 never folds
+    spark.sql("DELETE FROM mt.db.thr WHERE k < 500")
+    assert(Maintenance.compact(spark, dir, minRows = 100,
+      materializeDeletionsThreshold = 1.0) == 0)
+    assert(rows() == expected.filter(_ >= 500))
+    assert(stagingDirs(dir).isEmpty)
+  }
+
+  test("plain compaction rolls its output at ceil(live rows / nOut) even " +
+      "when the scan plans one partition; data exact") {
+    wh
+    spark.sql("DROP TABLE IF EXISTS mt.db.roll")
+    spark.sql("CREATE TABLE mt.db.roll (k BIGINT, v STRING)")
+    (0 until 4).foreach(i => spark.sql(
+      s"INSERT INTO mt.db.roll SELECT id + ${i * 250}, concat('v', id) " +
+        "FROM range(0, 250, 1, 1)"))
+    spark.sql("DELETE FROM mt.db.roll WHERE k % 50 = 0")
+    val dir = tableDir("roll")
+    val checksum = spark.table("mt.db.roll").agg(sum("k"), count(lit(1))).head
+    assert(checksum.getLong(1) == 980L)
+    // packing puts the four small fragments into ONE scan partition,
+    // which coalesce(nOut) cannot split
+    val packKey = graft.connector.GraftScan.PackSmallFragmentsConf
+    val prev = spark.conf.getOption(packKey)
+    spark.conf.set(packKey, "true")
+    try assert(Maintenance.compact(spark, dir, minRows = 300) == 4)
+    finally prev.fold(spark.conf.unset(packKey))(spark.conf.set(packKey, _))
+    // 980 live rows, nOut = 3: no output fragment over ceil(980 / 3)
+    val after = GraftFormat.readLatest(fs, dir).get
+    assert(after.fragments.map(_.rowCount).sorted == Seq(326L, 327L, 327L),
+      after.fragments.map(_.rowCount).mkString(","))
+    // the rewrite keeps scan order, so the outputs stay key-disjoint
+    val ranges = after.fragments.map(f =>
+      (f.stats("k").min.get.toLong, f.stats("k").max.get.toLong)).sorted
+    assert(ranges.zip(ranges.tail).forall { case (x, y) => x._2 < y._1 }, ranges)
+    assert(spark.table("mt.db.roll").agg(sum("k"), count(lit(1))).head == checksum)
+  }
+
+  test("compacting a blob table with deletions keeps every surviving blob " +
+      "readable") {
+    wh
+    spark.sql("DROP TABLE IF EXISTS mt.db.blobc")
+    spark.sql(
+      """CREATE TABLE mt.db.blobc
+        |TBLPROPERTIES ('blob_columns' = 'content')
+        |AS SELECT id, CAST(concat('payload-', CAST(id AS STRING)) AS BINARY)
+        |  AS content FROM range(0, 40, 1, 4)""".stripMargin)
+    spark.sql("DELETE FROM mt.db.blobc WHERE id % 3 = 0")
+    val dir = tableDir("blobc")
+    val before = GraftFormat.readLatest(fs, dir).get
+    assert(before.fragments.size == 4 && before.fragments.exists(_.deletedCount > 0))
+    assert(Maintenance.compact(spark, dir, minRows = 1000) == 4)
+    val after = GraftFormat.readLatest(fs, dir).get
+    assert(after.fragments.size == 1 && after.fragments.head.deletedCount == 0)
+    // every surviving row's descriptor still fetches its own bytes
+    val phys = spark.read
+      .schema(BlobStore.physicalSchema(after.schema, after.blobColumns))
+      .parquet(after.fragments.map(f => new Path(dir, f.path).toString): _*)
+    val got = phys.select("id", "content.file", "content.pos", "content.size")
+      .collect().map(r => r.getLong(0) -> new String(BlobStore.fetch(
+        fs, dir, r.getString(1), r.getLong(2), r.getLong(3))))
+      .sortBy(_._1).toSeq
+    assert(got == (0L until 40L).filter(_ % 3 != 0).map(i => i -> s"payload-$i"))
+    assert(spark.table("mt.db.blobc").count() == got.size)
+    assert(spark.table("mt.db.blobc").select("content").collect()
+      .forall(_.getAs[Array[Byte]](0).isEmpty))
+    assert(spark.table("mt.db.blobc").select("content__blob_size").collect()
+      .map(_.getLong(0)).sorted.toSeq ==
+      got.map(_._2.length.toLong).sorted)
+  }
+
+  test("an injected task failure in compact leaves the manifest unchanged " +
+      "and no new file under data/; no write stages a .staging- dir") {
+    wh
+    spark.sql("DROP TABLE IF EXISTS mt.db.cfail")
+    spark.sql("CREATE TABLE mt.db.cfail (k BIGINT)")
+    (0 until 4).foreach(i => spark.sql(
+      s"INSERT INTO mt.db.cfail SELECT id + ${i * 100} FROM range(0, 100, 1, 1)"))
+    val dir = tableDir("cfail")
+    val before = GraftFormat.readLatest(fs, dir).get
+    val filesBefore = dataFiles(dir)
+    assert(filesBefore.size == 4 && stagingDirs(dir).isEmpty)
+    // zero the last fragment's bytes: the task reading it fails after
+    // rows of the fragments before it were written (nOut = 2 runs two
+    // writing tasks, the other of which succeeds)
+    val victim = Paths.get(new Path(dir, before.fragments.last.path).toUri)
+    Files.write(victim, new Array[Byte](Files.size(victim).toInt))
+    intercept[Exception](Maintenance.compact(spark, dir, minRows = 150))
+    assert(GraftFormat.readLatest(fs, dir).get == before)
+    assert(dataFiles(dir) == filesBefore)
+    assert(stagingDirs(dir).isEmpty)
+    spark.sql("DROP TABLE mt.db.cfail")
   }
 
   test("sorted compaction: fragments carry disjoint ranges, zone maps prune to 1") {

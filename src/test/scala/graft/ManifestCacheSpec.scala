@@ -18,7 +18,7 @@ class ManifestCacheSpec extends AnyFunSuite {
   import TestSpark._
 
   private val wh =
-    java.nio.file.Files.createTempDirectory("graft-mcache").toString
+    tempDir("graft-mcache").toString
 
   private def setup(ttlMs: Long): Unit = {
     spark.conf.set("spark.sql.catalog.mc", "graft.catalog.GraftCatalog")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +13,7 @@ class MinMaxPushdownSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val wh: String = {
-    val dir = Files.createTempDirectory("graft-mm-wh").toString
+    val dir = tempDir("graft-mm-wh").toString
     spark.conf.set("spark.sql.catalog.mm", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.mm.warehouse", dir)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS mm.db")

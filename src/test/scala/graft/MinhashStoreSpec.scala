@@ -32,7 +32,7 @@ class MinhashStoreSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
 
   private def tmpRoot(): String =
-    Files.createTempDirectory("graft-mhstore").toString + "/idx"
+    tempDir("graft-mhstore").toString + "/idx"
 
   /** Store payload directories (segment `sigs/` or `buckets/`) that
     * `df`'s optimized plan scans. */

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -306,7 +304,7 @@ class NegativeConformanceSpec extends NegativeConformanceBase {
   import TestSpark._
   protected def cat = "neg"
   protected def configure(): Unit = {
-    val wh = Files.createTempDirectory("graft-neg-wh").toString
+    val wh = tempDir("graft-neg-wh").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
   }
@@ -334,7 +332,7 @@ class RestNegativeConformance extends NegativeConformanceBase {
   import TestSpark._
   protected def cat = "negrest"
   protected def configure(): Unit = {
-    val wh = Files.createTempDirectory("graft-negrest-wh").toString
+    val wh = tempDir("graft-negrest-wh").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftRestCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.uri",
       s"http://127.0.0.1:${FakeNamespaceService.port}")
@@ -347,7 +345,7 @@ class GlueNegativeConformance extends NegativeConformanceBase {
   import TestSpark._
   protected def cat = "negglue"
   protected def configure(): Unit = {
-    val wh = Files.createTempDirectory("graft-negglue-wh").toString
+    val wh = tempDir("graft-negglue-wh").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftGlueCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.endpoint",
       s"http://127.0.0.1:${FakeGlueService.port}")
@@ -360,7 +358,7 @@ class HiveNegativeConformance extends NegativeConformanceBase {
   import TestSpark._
   protected def cat = "neghive"
   protected def configure(): Unit = {
-    val wh = Files.createTempDirectory("graft-neghive-wh").toString
+    val wh = tempDir("graft-neghive-wh").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftHiveCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.uri",
       s"thrift://127.0.0.1:${FakeHiveMetastore.port}")
@@ -378,7 +376,7 @@ class RestSingleLevelNegativeConformance extends NegativeConformanceBase {
   override protected def ns = "default"
   override protected def singleLevel = true
   protected def configure(): Unit = {
-    val wh = Files.createTempDirectory("graft-negsl-wh").toString
+    val wh = tempDir("graft-negsl-wh").toString
     FakeNamespaceService.port // ensure started
     FakeNamespaceService.store.getOrElseUpdate("negm",
       new scala.collection.concurrent.TrieMap())

@@ -47,7 +47,7 @@ class ObjectStoreCommitSpec extends AnyFunSuite {
   }
 
   private def tableDir(fs: FileSystem, scheme: String): Path = {
-    val local = java.nio.file.Files.createTempDirectory(s"graft-$scheme")
+    val local = TestSpark.tempDir(s"graft-$scheme")
     fs.makeQualified(new Path(s"$scheme:" + local.toString, "t.graft"))
   }
 

@@ -29,8 +29,7 @@ class PqIndexSpec extends AnyFunSuite {
   }
 
   test("ivf_pq: 16 bytes per vector, recall vs brute force, staleness") {
-    val dir = new Path(java.nio.file.Files
-      .createTempDirectory("graft-pq").resolve("e.graft").toUri)
+    val dir = new Path(tempDir("graft-pq").resolve("e.graft").toUri)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val e = Tables.load(spark, sf, "embeddings")
     graft.connector.GraftWriter.write(fs, dir, e, overwrite = true)

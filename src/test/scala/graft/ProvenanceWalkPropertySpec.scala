@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
@@ -77,7 +75,7 @@ class ProvenanceWalkPropertySpec extends AnyFunSuite {
 
     val prop = Prop.forAll(genHistory) { ops =>
       val dir = fs.makeQualified(new Path(
-        Files.createTempDirectory("graft-pwalk").toUri))
+        TestSpark.tempDir("graft-pwalk").toUri))
       // model state
       var nextRow = 0L
       var nextFrag = 0
@@ -248,7 +246,7 @@ class ProvenanceWalkPropertySpec extends AnyFunSuite {
   test("a vacuum racing the walk (listing passed, manifest then deleted) " +
       "surfaces as typed LostHistoryDuringWalk, not FileNotFoundException") {
     val dir = fs.makeQualified(new Path(
-      Files.createTempDirectory("graft-pwalk-race").toUri))
+      TestSpark.tempDir("graft-pwalk-race").toUri))
     try {
       (1L to 3L).foreach { v =>
         GraftFormat.commit(fs, dir, Manifest(v, schemaJson,

@@ -2,7 +2,6 @@ package graft
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
 
 import scala.collection.concurrent.TrieMap
 
@@ -103,7 +102,7 @@ class RestCatalogSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val ready: Unit = {
-    val wh = Files.createTempDirectory("graft-rest-wh").toString
+    val wh = tempDir("graft-rest-wh").toString
     spark.conf.set("spark.sql.catalog.rc", "graft.catalog.GraftRestCatalog")
     spark.conf.set("spark.sql.catalog.rc.uri",
       s"http://127.0.0.1:${FakeNamespaceService.port}")
@@ -154,7 +153,7 @@ class RestCatalogSpec extends AnyFunSuite {
       "per-table options reach the table's Hadoop configuration") {
     ready
     // catalog-level: hadoop.-prefixed options flow into every FS conf
-    val wh2 = Files.createTempDirectory("graft-rest-wh2").toString
+    val wh2 = tempDir("graft-rest-wh2").toString
     spark.conf.set("spark.sql.catalog.rc2", "graft.catalog.GraftRestCatalog")
     spark.conf.set("spark.sql.catalog.rc2.uri",
       s"http://127.0.0.1:${FakeNamespaceService.port}")
@@ -316,7 +315,7 @@ class RestCatalogSpec extends AnyFunSuite {
     // a graft table on a scheme whose FileSystem impl arrives ONLY via
     // DescribeTable's vended storage options — a maintenance call built
     // from the bare session conf cannot even resolve the FileSystem
-    val local = Files.createTempDirectory("graft-vendfs")
+    val local = tempDir("graft-vendfs")
     val dir = new org.apache.hadoop.fs.Path(local.toString, "vt.graft")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     import spark.implicits._
@@ -351,7 +350,7 @@ class NamespaceMountSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val ready: Unit = {
-    val wh = Files.createTempDirectory("graft-mount-wh").toString
+    val wh = tempDir("graft-mount-wh").toString
     for ((cat, extra) <- Seq(
         ("mb", Map.empty[String, String]), // base, un-rooted view
         ("mp", Map("parent" -> "par")), // rooted at par

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -15,7 +13,7 @@ class RuntimeFilterSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val wh: String = {
-    val dir = Files.createTempDirectory("graft-rf-wh").toString
+    val dir = tempDir("graft-rf-wh").toString
     spark.conf.set("spark.sql.catalog.rf", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.rf.warehouse", dir)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS rf.db")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,7 +14,7 @@ class ScalarIndexSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val wh: String = {
-    val dir = Files.createTempDirectory("graft-si-wh").toString
+    val dir = tempDir("graft-si-wh").toString
     spark.conf.set("spark.sql.catalog.si", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.si.warehouse", dir)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS si.db")

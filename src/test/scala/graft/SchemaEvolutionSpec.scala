@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +10,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val wh: String = {
-    val dir = Files.createTempDirectory("graft-ev-wh").toString
+    val dir = tempDir("graft-ev-wh").toString
     spark.conf.set("spark.sql.catalog.ev", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.ev.warehouse", dir)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS ev.db")

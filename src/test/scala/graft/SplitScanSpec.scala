@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +13,7 @@ class SplitScanSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val wh: String = {
-    val dir = Files.createTempDirectory("graft-sp-wh").toString
+    val dir = tempDir("graft-sp-wh").toString
     spark.conf.set("spark.sql.catalog.sp", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.sp.warehouse", dir)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS sp.db")

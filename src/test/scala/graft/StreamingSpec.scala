@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +8,7 @@ class StreamingSpec extends AnyFunSuite {
   import TestSpark._
 
   test("graft table streams: versions are micro-batch offsets") {
-    val wh = Files.createTempDirectory("graft-stream-wh").toString
+    val wh = tempDir("graft-stream-wh").toString
     spark.conf.set("spark.sql.catalog.gs", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gs.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gs.db")
@@ -18,8 +16,8 @@ class StreamingSpec extends AnyFunSuite {
     spark.sql("INSERT INTO gs.db.ev VALUES (1, 'a'), (2, 'b')")
     spark.sql("INSERT INTO gs.db.ev VALUES (3, 'c')")
 
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    val out = Files.createTempDirectory("graft-stream-out").toString
+    val ckpt = tempDir("graft-ckpt").toString
+    val out = tempDir("graft-stream-out").toString
     def runOnce(): Unit = {
       val q = spark.readStream.table("gs.db.ev")
         .writeStream
@@ -47,14 +45,14 @@ class StreamingSpec extends AnyFunSuite {
 
   test("a compact consuming a not-yet-streamed append cannot lose rows " +
       "(one micro-batch spans append + compact)") {
-    val wh = Files.createTempDirectory("graft-stream-cl-wh").toString
+    val wh = tempDir("graft-stream-cl-wh").toString
     spark.conf.set("spark.sql.catalog.gcl", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gcl.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gcl.db")
     spark.sql("CREATE TABLE gcl.db.ev (k BIGINT)")
     spark.sql("INSERT INTO gcl.db.ev VALUES (1), (2)")
-    val ckpt = Files.createTempDirectory("graft-cl-ckpt").toString
-    val out = Files.createTempDirectory("graft-cl-out").toString
+    val ckpt = tempDir("graft-cl-ckpt").toString
+    val out = tempDir("graft-cl-out").toString
     def runOnce(): Unit = {
       val q = spark.readStream.table("gcl.db.ev")
         .writeStream.format("parquet")
@@ -85,14 +83,14 @@ class StreamingSpec extends AnyFunSuite {
     // drain resolves the CURRENT schema, and fragments written under
     // other schema generations must still read (parquet evolution:
     // extra columns prune, missing columns null-fill)
-    val wh = Files.createTempDirectory("graft-sev-wh").toString
+    val wh = tempDir("graft-sev-wh").toString
     spark.conf.set("spark.sql.catalog.sev", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.sev.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS sev.db")
     spark.sql("CREATE TABLE sev.db.ev (k BIGINT)")
     spark.sql("INSERT INTO sev.db.ev VALUES (1)")
-    val ckpt = Files.createTempDirectory("graft-sev-ckpt").toString
-    val out = Files.createTempDirectory("graft-sev-out").toString
+    val ckpt = tempDir("graft-sev-ckpt").toString
+    val out = tempDir("graft-sev-out").toString
     def drain(): Unit = {
       val q = spark.readStream.table("sev.db.ev")
         .writeStream.format("parquet")
@@ -129,14 +127,14 @@ class StreamingSpec extends AnyFunSuite {
 
   test("failOnLostHistory: a vacuumed-away checkpoint version fails " +
       "typed; the default silently re-delivers (at-least-once, no loss)") {
-    val wh = Files.createTempDirectory("graft-flh-wh").toString
+    val wh = tempDir("graft-flh-wh").toString
     spark.conf.set("spark.sql.catalog.flh", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.flh.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS flh.db")
     spark.sql("CREATE TABLE flh.db.ev (k BIGINT)")
     (0 until 3).foreach(i => spark.sql(s"INSERT INTO flh.db.ev VALUES ($i)"))
-    val ckpt = Files.createTempDirectory("graft-flh-ckpt").toString
-    val out = Files.createTempDirectory("graft-flh-out").toString
+    val ckpt = tempDir("graft-flh-ckpt").toString
+    val out = tempDir("graft-flh-out").toString
     def drain(strict: Boolean): Unit = {
       var r = spark.readStream
       if (strict) r = r.option("failOnLostHistory", "true")
@@ -171,14 +169,14 @@ class StreamingSpec extends AnyFunSuite {
 
   test("failOnLostHistory: a checkpoint AHEAD of history (table dropped " +
       "+ re-created) fails typed instead of silently regressing") {
-    val wh = Files.createTempDirectory("graft-flh2-wh").toString
+    val wh = tempDir("graft-flh2-wh").toString
     spark.conf.set("spark.sql.catalog.flh2", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.flh2.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS flh2.db")
     spark.sql("CREATE TABLE flh2.db.ev (k BIGINT)")
     (0 until 4).foreach(i => spark.sql(s"INSERT INTO flh2.db.ev VALUES ($i)"))
-    val ckpt = Files.createTempDirectory("graft-flh2-ckpt").toString
-    val out = Files.createTempDirectory("graft-flh2-out").toString
+    val ckpt = tempDir("graft-flh2-ckpt").toString
+    val out = tempDir("graft-flh2-out").toString
     def drain(strict: Boolean): Unit = {
       var r = spark.readStream
       if (strict) r = r.option("failOnLostHistory", "true")
@@ -210,14 +208,14 @@ class StreamingSpec extends AnyFunSuite {
   test("failOnLostHistory: drop + re-create is caught by the generation " +
       "id even when the NEW history reaches the checkpoint version " +
       "(where every version-arithmetic check passes)") {
-    val wh = Files.createTempDirectory("graft-gid-wh").toString
+    val wh = tempDir("graft-gid-wh").toString
     spark.conf.set("spark.sql.catalog.gid", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gid.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gid.db")
     spark.sql("CREATE TABLE gid.db.ev (k BIGINT)")
     (0 until 3).foreach(i => spark.sql(s"INSERT INTO gid.db.ev VALUES ($i)"))
-    val ckpt = Files.createTempDirectory("graft-gid-ckpt").toString
-    val out = Files.createTempDirectory("graft-gid-out").toString
+    val ckpt = tempDir("graft-gid-ckpt").toString
+    val out = tempDir("graft-gid-out").toString
     def drain(strict: Boolean): Unit = {
       var r = spark.readStream
       if (strict) r = r.option("failOnLostHistory", "true")
@@ -246,14 +244,14 @@ class StreamingSpec extends AnyFunSuite {
   test("default mode across drop + re-create: the new generation's " +
       "base rows are re-delivered from the start of its history — " +
       "never silently lost") {
-    val wh = Files.createTempDirectory("graft-gid2-wh").toString
+    val wh = tempDir("graft-gid2-wh").toString
     spark.conf.set("spark.sql.catalog.gid2", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gid2.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gid2.db")
     spark.sql("CREATE TABLE gid2.db.ev (k BIGINT)")
     (0 until 3).foreach(i => spark.sql(s"INSERT INTO gid2.db.ev VALUES ($i)"))
-    val ckpt = Files.createTempDirectory("graft-gid2-ckpt").toString
-    val out = Files.createTempDirectory("graft-gid2-out").toString
+    val ckpt = tempDir("graft-gid2-ckpt").toString
+    val out = tempDir("graft-gid2-out").toString
     def drain(): Unit = {
       val q = spark.readStream.table("gid2.db.ev")
         .writeStream.format("parquet")
@@ -290,8 +288,8 @@ class StreamingSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS s3st.db.ev")
     spark.sql("CREATE TABLE s3st.db.ev (k BIGINT, v STRING)")
     spark.sql("INSERT INTO s3st.db.ev VALUES (1, 'a'), (2, 'b')")
-    val ckpt = Files.createTempDirectory("graft-s3st-ckpt").toString
-    val out = Files.createTempDirectory("graft-s3st-out").toString
+    val ckpt = tempDir("graft-s3st-ckpt").toString
+    val out = tempDir("graft-s3st-out").toString
     def runOnce(): Unit = {
       val q = spark.readStream.table("s3st.db.ev")
         .writeStream.format("parquet")
@@ -358,7 +356,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("expected_table_id on a STREAM pins the generation: mismatch " +
       "fails typed (the option must never be silently ignored)") {
-    val wh = Files.createTempDirectory("graft-seid-wh").toString
+    val wh = tempDir("graft-seid-wh").toString
     spark.conf.set("spark.sql.catalog.seid", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.seid.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS seid.db")
@@ -366,7 +364,7 @@ class StreamingSpec extends AnyFunSuite {
     spark.sql("INSERT INTO seid.db.ev VALUES (1)")
     val id = spark.sql("SHOW TBLPROPERTIES seid.db.ev").collect()
       .find(_.getString(0) == "graft.table_id").get.getString(1)
-    val out = Files.createTempDirectory("graft-seid-out").toString
+    val out = tempDir("graft-seid-out").toString
     def drain(want: String, ckpt: String): Unit = {
       val q = spark.readStream.option("expected_table_id", want)
         .table("seid.db.ev")
@@ -376,12 +374,12 @@ class StreamingSpec extends AnyFunSuite {
       q.awaitTermination(60000)
     }
     // matching pin streams normally
-    drain(id, Files.createTempDirectory("graft-seid-c1").toString)
+    drain(id, tempDir("graft-seid-c1").toString)
     assert(spark.read.parquet(out).count() == 1)
     // a stale bookmark (e.g. from before a drop + re-create) fails
     // typed instead of silently streaming the wrong generation
     val e = intercept[Exception](
-      drain("stale-id", Files.createTempDirectory("graft-seid-c2").toString))
+      drain("stale-id", tempDir("graft-seid-c2").toString))
     assert(rootMsgs(e).contains("GRAFT_STREAM_LOST_HISTORY") &&
       rootMsgs(e).contains("expected_table_id"), rootMsgs(e))
     spark.sql("DROP TABLE seid.db.ev")
@@ -389,7 +387,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("offset json carries the generation id and parses legacy " +
       "checkpoint forms") {
-    val wh = Files.createTempDirectory("graft-off-wh").toString
+    val wh = tempDir("graft-off-wh").toString
     spark.conf.set("spark.sql.catalog.goff", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.goff.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS goff.db")
@@ -427,7 +425,7 @@ class StreamingSpec extends AnyFunSuite {
   test("planInputPartitions never plans the construction pin's dead " +
       "generation: empty listings fail typed, partial listings read " +
       "the end manifest pinned") {
-    val wh = Files.createTempDirectory("graft-plan-wh").toString
+    val wh = tempDir("graft-plan-wh").toString
     spark.conf.set("spark.sql.catalog.gplan", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gplan.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gplan.db")
@@ -489,7 +487,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("headState holds the last OBSERVED head through a listing blip " +
       "and fails typed only on an affirmative drop") {
-    val wh = Files.createTempDirectory("graft-blip-wh").toString
+    val wh = tempDir("graft-blip-wh").toString
     spark.conf.set("spark.sql.catalog.gblip", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gblip.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gblip.db")
@@ -574,7 +572,7 @@ class StreamingSpec extends AnyFunSuite {
     // dir-vanishes-mid-listing window, so this also pins the evidence
     // rule that a racing delete reads as an EMPTY listing (hold at
     // lastHead), never as an uncaught FileNotFoundException.
-    val wh = Files.createTempDirectory("graft-hstress-wh").toString
+    val wh = tempDir("graft-hstress-wh").toString
     spark.conf.set("spark.sql.catalog.ghs", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.ghs.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS ghs.db")
@@ -644,7 +642,7 @@ class StreamingSpec extends AnyFunSuite {
     // generation mismatch (default mode: unbounded re-delivery loop)
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     val s = {
-      val wh = Files.createTempDirectory("graft-offprop-wh").toString
+      val wh = tempDir("graft-offprop-wh").toString
       spark.conf.set("spark.sql.catalog.gop", "graft.catalog.GraftCatalog")
       spark.conf.set("spark.sql.catalog.gop.warehouse", wh)
       spark.sql("CREATE NAMESPACE IF NOT EXISTS gop.db")
@@ -680,7 +678,7 @@ class StreamingSpec extends AnyFunSuite {
     // TTL-cached id lets a drop + re-create pass the id check while
     // planning against the NEW history's listing — a strict stream
     // would deliver wrong-generation data until the TTL lapses.
-    val wh = Files.createTempDirectory("graft-ttlgen-wh").toString
+    val wh = tempDir("graft-ttlgen-wh").toString
     spark.conf.set("spark.sql.catalog.gttl", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gttl.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gttl.db")
@@ -734,14 +732,14 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming across CREATE OR REPLACE: replacement rows are " +
       "delivered (fragment ids are never reused within one history)") {
-    val wh = Files.createTempDirectory("graft-rep-wh").toString
+    val wh = tempDir("graft-rep-wh").toString
     spark.conf.set("spark.sql.catalog.grep", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.grep.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS grep.db")
     spark.sql("CREATE TABLE grep.db.rep (k BIGINT)")
     spark.sql("INSERT INTO grep.db.rep VALUES (1)") // fragment id 0
-    val ckpt = Files.createTempDirectory("graft-rep-ckpt").toString
-    val out = Files.createTempDirectory("graft-rep-out").toString
+    val ckpt = tempDir("graft-rep-ckpt").toString
+    val out = tempDir("graft-rep-out").toString
     def runOnce(): Unit = {
       val q = spark.readStream.table("grep.db.rep")
         .writeStream.format("parquet")
@@ -778,7 +776,7 @@ class StreamingSpec extends AnyFunSuite {
     //    degradation when a compact consumes not-yet-streamed appends
     //    or vacuum drops the checkpoint's start version) — a k first
     //    seen twice would be a real exactly-once bug.
-    val wh = Files.createTempDirectory("graft-storm-wh").toString
+    val wh = tempDir("graft-storm-wh").toString
     spark.conf.set("spark.sql.catalog.stm", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.stm.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS stm.db")
@@ -786,8 +784,8 @@ class StreamingSpec extends AnyFunSuite {
     spark.sql("CREATE TABLE stm.db.storm (k BIGINT)")
     val dir = new org.apache.hadoop.fs.Path(
       java.nio.file.Paths.get(wh, "db", "storm.graft").toUri)
-    val ckpt = Files.createTempDirectory("graft-storm-ckpt").toString
-    val out = Files.createTempDirectory("graft-storm-out").toString
+    val ckpt = tempDir("graft-storm-ckpt").toString
+    val out = tempDir("graft-storm-out").toString
     val totalAppends = 40
     val appendsDone = new java.util.concurrent.atomic.AtomicInteger()
     val appendErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
@@ -890,7 +888,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming incremental dedup: flatMapGroupsWithState keeps " +
       "first-seen docs across micro-batches") {
-    val wh = Files.createTempDirectory("graft-sdedup-wh").toString
+    val wh = tempDir("graft-sdedup-wh").toString
     spark.conf.set("spark.sql.catalog.sd", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.sd.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS sd.db")
@@ -903,8 +901,8 @@ class StreamingSpec extends AnyFunSuite {
     spark.sql("INSERT INTO sd.db.crawl VALUES " +
       "(2, 'aa', 'web'), (1, 'aa', 'books'), (3, 'bb', 'web')")
 
-    val ckpt = Files.createTempDirectory("graft-sdedup-ckpt").toString
-    val out = Files.createTempDirectory("graft-sdedup-out").toString
+    val ckpt = tempDir("graft-sdedup-ckpt").toString
+    val out = tempDir("graft-sdedup-out").toString
     def runOnce(): Unit = {
       val q = graft.streaming.StreamingDedup.firstSeen(
         spark.readStream.table("sd.db.crawl"), "doc_id", "body")
@@ -944,7 +942,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming NEAR-dup: LSH bucket state emits cross-batch " +
       "candidate pairs") {
-    val wh = Files.createTempDirectory("graft-snd-wh").toString
+    val wh = tempDir("graft-snd-wh").toString
     spark.conf.set("spark.sql.catalog.snd", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.snd.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS snd.db")
@@ -955,8 +953,8 @@ class StreamingSpec extends AnyFunSuite {
       s"(1, '$same'), (2, '$same extra'), " +
       "(3, 'totally different words nothing shared here at all today ok')")
 
-    val ckpt = Files.createTempDirectory("graft-snd-ckpt").toString
-    val out = Files.createTempDirectory("graft-snd-out").toString
+    val ckpt = tempDir("graft-snd-ckpt").toString
+    val out = tempDir("graft-snd-out").toString
     def runOnce(): Unit = {
       val q = graft.streaming.StreamingDedup.lshCandidates(
         spark.readStream.table("snd.db.crawl"), "doc_id", "body")
@@ -989,7 +987,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming NEAR-dup bounds a degenerate mega-bucket batch: " +
       "only the 2*bucketCap smallest ids are buffered, deterministically") {
-    val wh = Files.createTempDirectory("graft-mb-wh").toString
+    val wh = tempDir("graft-mb-wh").toString
     spark.conf.set("spark.sql.catalog.mb", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.mb.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS mb.db")
@@ -1001,8 +999,8 @@ class StreamingSpec extends AnyFunSuite {
     val same = "omega psi chi phi upsilon tau sigma rho pi omicron words"
     spark.sql("INSERT INTO mb.db.crawl VALUES " +
       (1L to 40L).map(i => s"($i, '$same')").mkString(", "))
-    val ckpt = Files.createTempDirectory("graft-mb-ckpt").toString
-    val out = Files.createTempDirectory("graft-mb-out").toString
+    val ckpt = tempDir("graft-mb-ckpt").toString
+    val out = tempDir("graft-mb-out").toString
     val q = graft.streaming.StreamingDedup.lshCandidates(
       spark.readStream.table("mb.db.crawl"), "doc_id", "body",
       bucketCap = 4)
@@ -1028,7 +1026,7 @@ class StreamingSpec extends AnyFunSuite {
     // the 100 TB docs point at — proves the Bucket/Boolean state
     // encoders survive RocksDB serialization, not just the in-memory
     // HDFS-backed provider the other tests default to
-    val wh = Files.createTempDirectory("graft-rdb-wh").toString
+    val wh = tempDir("graft-rdb-wh").toString
     spark.conf.set("spark.sql.catalog.rdb", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.rdb.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS rdb.db")
@@ -1036,10 +1034,10 @@ class StreamingSpec extends AnyFunSuite {
     val same = "lorem ipsum dolor sit amet consectetur adipiscing elit sed do"
     spark.sql("INSERT INTO rdb.db.crawl VALUES " +
       s"(1, '$same'), (2, 'one unrelated document body here'), (3, '$same')")
-    val ckptE = Files.createTempDirectory("graft-rdb-ckpt-e").toString
-    val ckptN = Files.createTempDirectory("graft-rdb-ckpt-n").toString
-    val outE = Files.createTempDirectory("graft-rdb-out-e").toString
-    val outN = Files.createTempDirectory("graft-rdb-out-n").toString
+    val ckptE = tempDir("graft-rdb-ckpt-e").toString
+    val ckptN = tempDir("graft-rdb-ckpt-n").toString
+    val outE = tempDir("graft-rdb-out-e").toString
+    val outN = tempDir("graft-rdb-out-n").toString
     val provider = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(provider)
     spark.conf.set(provider,
@@ -1082,7 +1080,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("graft streaming SINK: stream graft->graft with per-epoch commits") {
-    val wh = Files.createTempDirectory("graft-sink-wh").toString
+    val wh = tempDir("graft-sink-wh").toString
     spark.conf.set("spark.sql.catalog.gk", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gk.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gk.db")
@@ -1091,7 +1089,7 @@ class StreamingSpec extends AnyFunSuite {
     spark.sql("INSERT INTO gk.db.src VALUES (1, 'a'), (2, 'b')")
     spark.sql("INSERT INTO gk.db.src VALUES (3, 'c')")
 
-    val ckpt = Files.createTempDirectory("graft-sink-ckpt").toString
+    val ckpt = tempDir("graft-sink-ckpt").toString
     def runOnce(): Unit = {
       val q = spark.readStream.table("gk.db.src")
         .withColumn("v", upper(col("v")))
@@ -1125,15 +1123,15 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("maxVersionsPerTrigger bounds backlog per micro-batch, no loss/dup") {
-    val wh = Files.createTempDirectory("graft-adm-wh").toString
+    val wh = tempDir("graft-adm-wh").toString
     spark.conf.set("spark.sql.catalog.ga", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.ga.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS ga.db")
     spark.sql("CREATE TABLE ga.db.ev (k BIGINT)")
     (1 to 3).foreach(i => spark.sql(s"INSERT INTO ga.db.ev VALUES ($i)"))
 
-    val ckpt = Files.createTempDirectory("graft-adm-ckpt").toString
-    val out = Files.createTempDirectory("graft-adm-out").toString
+    val ckpt = tempDir("graft-adm-ckpt").toString
+    val out = tempDir("graft-adm-out").toString
     val q = spark.readStream
       .option("maxVersionsPerTrigger", "1")
       .table("ga.db.ev")
@@ -1161,7 +1159,7 @@ class StreamingSpec extends AnyFunSuite {
     // event-time tumbling windows + watermark on top of our source:
     // late data beyond the watermark is dropped by Spark's stateful
     // operator; the state store, not the source, handles dedup/expiry.
-    val wh = Files.createTempDirectory("graft-wm-wh").toString
+    val wh = tempDir("graft-wm-wh").toString
     spark.conf.set("spark.sql.catalog.gw", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gw.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gw.db")
@@ -1172,8 +1170,8 @@ class StreamingSpec extends AnyFunSuite {
       |(2, TIMESTAMP '2026-01-01 00:01:05'),
       |(1, TIMESTAMP '2026-01-01 00:02:30')""".stripMargin)
 
-    val ckpt = Files.createTempDirectory("graft-wm-ckpt").toString
-    val out = Files.createTempDirectory("graft-wm-out").toString
+    val ckpt = tempDir("graft-wm-ckpt").toString
+    val out = tempDir("graft-wm-out").toString
     def runOnce(): Seq[(String, Long, Long)] = {
       val q = spark.readStream.table("gw.db.clicks")
         .withWatermark("ts", "1 minute")

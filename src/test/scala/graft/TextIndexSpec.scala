@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
@@ -14,7 +14,7 @@ class TextIndexSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val wh: String = {
-    val dir = Files.createTempDirectory("graft-fts-wh").toString
+    val dir = tempDir("graft-fts-wh").toString
     spark.conf.set("spark.sql.catalog.fts", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.fts.warehouse", dir)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS fts.db")

@@ -761,8 +761,7 @@ class VectorOpsSpec extends AnyFunSuite {
   test("persisted LSH index: versioned sidecar, stale after append, rebuildable") {
     import org.apache.hadoop.fs.Path
     import graft.ops.VectorIndex
-    val dir = new Path(java.nio.file.Files
-      .createTempDirectory("graft-vidx").resolve("e.graft").toUri)
+    val dir = new Path(tempDir("graft-vidx").resolve("e.graft").toUri)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val e = Tables.load(spark, sf, "embeddings")
     graft.connector.GraftWriter.write(fs, dir, e, overwrite = true)
@@ -801,8 +800,7 @@ class VectorOpsSpec extends AnyFunSuite {
   test("persisted IVF index: centroids + full assignment, stale after append") {
     import org.apache.hadoop.fs.Path
     import graft.ops.VectorIndex.Ivf
-    val dir = new Path(java.nio.file.Files
-      .createTempDirectory("graft-ivf").resolve("e.graft").toUri)
+    val dir = new Path(tempDir("graft-ivf").resolve("e.graft").toUri)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val e = Tables.load(spark, sf, "embeddings")
     graft.connector.GraftWriter.write(fs, dir, e, overwrite = true)

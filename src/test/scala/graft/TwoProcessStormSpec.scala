@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -49,8 +47,8 @@ class TwoProcessStormSpec extends AnyFunSuite {
   private def driveStorm(table: String, dir: Path,
       agent: StormHarness.AgentHandle, parentKeys: Seq[Long],
       insertSleepMs: Long)(duringQuiet: => Unit): StormOutcome = {
-    val ckpt = Files.createTempDirectory("graft-2p-ckpt").toString
-    val out = Files.createTempDirectory("graft-2p-out").toString
+    val ckpt = tempDir("graft-2p-ckpt").toString
+    val out = tempDir("graft-2p-out").toString
     duringQuiet
     val appendErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val appender = new Thread(() => {
@@ -153,7 +151,7 @@ class TwoProcessStormSpec extends AnyFunSuite {
   test("two-JVM storm over file://: child appends+deletes+compacts+" +
       "vacuums while this JVM streams and inserts — exactly-once final " +
       "state, typed cross-process CAS conflict") {
-    val wh = Files.createTempDirectory("graft-2p-wh").toString
+    val wh = tempDir("graft-2p-wh").toString
     spark.conf.set("spark.sql.catalog.tps", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.tps.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS tps.db")
@@ -245,7 +243,7 @@ class TwoProcessStormSpec extends AnyFunSuite {
   test("cross-process drop + re-create: the new generation minted by " +
       "ANOTHER JVM fails this JVM's strict stream and pinned batch " +
       "reads typed") {
-    val wh = Files.createTempDirectory("graft-2pg-wh").toString
+    val wh = tempDir("graft-2pg-wh").toString
     spark.conf.set("spark.sql.catalog.tpg", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.tpg.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS tpg.db")
@@ -255,8 +253,8 @@ class TwoProcessStormSpec extends AnyFunSuite {
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val genA = GraftFormat.readLatest(fs, dir).get
       .properties(GraftFormat.TableIdProp)
-    val ckpt = Files.createTempDirectory("graft-2pg-ckpt").toString
-    val out = Files.createTempDirectory("graft-2pg-out").toString
+    val ckpt = tempDir("graft-2pg-ckpt").toString
+    val out = tempDir("graft-2pg-out").toString
     def drain(): Unit = {
       val q = spark.readStream.option("failOnLostHistory", "true")
         .table("tpg.db.ev")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
@@ -19,7 +17,7 @@ class ZoneMapsSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val wh: String = {
-    val dir = Files.createTempDirectory("graft-zm-wh").toString
+    val dir = tempDir("graft-zm-wh").toString
     spark.conf.set("spark.sql.catalog.zm", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.zm.warehouse", dir)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS zm.db")

@@ -40,8 +40,7 @@ object MetaBench {
   def syntheticTable(spark: SparkSession, sfDir: String, fragments: Int,
       seedRows: Int = 5000): (Path, org.apache.hadoop.fs.FileSystem,
       graft.format.GraftFormat.Manifest) = {
-    val dir = new Path(java.nio.file.Files
-      .createTempDirectory("graft-metabench").resolve("t.graft").toUri)
+    val dir = new Path(TempDirs.create("graft-metabench").resolve("t.graft").toUri)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .orderBy("l_orderkey", "l_linenumber").limit(seedRows).coalesce(1)

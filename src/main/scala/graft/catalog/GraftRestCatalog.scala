@@ -245,6 +245,12 @@ class GraftRestCatalog extends TableCatalog with SupportsNamespaces
     }
   }
 
+  /** A table exists while the service registers it, even when its
+    * directory is gone — so `DROP TABLE IF EXISTS` still deregisters an
+    * orphaned name (Spark's default asks `loadTable`, which fails then). */
+  override def tableExists(ident: Identifier): Boolean =
+    lookupLocation(ident).isDefined
+
   override def loadTable(ident: Identifier): Table =
     load(ident,
       (d, tc) => graft.format.ManifestCache.latest(d.getFileSystem(tc), d))

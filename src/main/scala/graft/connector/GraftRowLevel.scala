@@ -20,7 +20,10 @@ import graft.format.GraftFormat
   *
   * Spark rewrites the statement into one distributed job over the
   * target scan (rowId = the `_row_address` metadata column; updates
-  * arrive as delete+insert pairs). Each task:
+  * arrive as delete+insert pairs). For a MERGE whose join drops
+  * unmatched target rows, `graft.plans.MergeTargetSemiJoin` first
+  * semi-joins the target scan with the source keys, so only candidate
+  * target rows reach the join's shuffle. Each task:
   *   - buffers deleted row indexes per fragment, flushed at task commit
   *     as a PARTIAL deletion-vector sidecar (executor-side write);
   *   - streams replacement/insert rows into a new fragment in `data/`

@@ -641,8 +641,9 @@ object AnnTopKIndexRewrite extends org.apache.spark.internal.Logging {
   val metrics = new Metrics
 }
 
-/** `spark.sql.extensions=graft.plans.GraftExtensions` wires the rule in
-  * at session build; tests can instead append the rule to
+/** `spark.sql.extensions=graft.plans.GraftExtensions` wires the ANN
+  * rule and [[MergeTargetSemiJoin]] in at session build; tests can
+  * instead append a rule to
   * `spark.experimental.extraOptimizations` on a live session. Also
   * injects the native codegen'd SQL functions (cosine_sim, l2_sq,
   * pq_adc, poly_hash64, winnow_fingerprint, simhash64) so an
@@ -653,6 +654,7 @@ object AnnTopKIndexRewrite extends org.apache.spark.internal.Logging {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(s => AnnTopKIndexRewrite(s))
+    e.injectOptimizerRule(_ => MergeTargetSemiJoin)
     GraftExtensions.functions.foreach { case (name, builder) =>
       e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier(name),
         new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(

@@ -1,6 +1,6 @@
 package graft.queries
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -108,8 +108,8 @@ object StreamingQueries {
       val mid = (mm.getLong(0) + mm.getLong(1)) / 2
       val copies = docs.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      val ckpt = Files.createTempDirectory("graft-s01-ckpt").toString
-      val out = Files.createTempDirectory("graft-s01-out").toString
+      val ckpt = graft.TempDirs.create("graft-s01-ckpt").toString
+      val out = graft.TempDirs.create("graft-s01-out").toString
       graft.BenchPhases.timed("s01_streaming_dedup.build") {
         s.sql("DROP TABLE IF EXISTS graft.db.s01_crawl")
         docs.filter(col("doc_id") <= mid)
@@ -168,8 +168,8 @@ object StreamingQueries {
         col("event_type"), col("value"))
       val mid = ev.agg(((min("event_id") + max("event_id")) / 2).cast("long"))
         .head().getLong(0)
-      val ckpt = Files.createTempDirectory("graft-s02-ckpt").toString
-      val out = Files.createTempDirectory("graft-s02-out").toString
+      val ckpt = graft.TempDirs.create("graft-s02-ckpt").toString
+      val out = graft.TempDirs.create("graft-s02-out").toString
       graft.BenchPhases.timed("s02_streaming_window.build") {
         graft.BenchPhases.timed("s02_streaming_window.ctas") {
           s.sql("DROP TABLE IF EXISTS graft.db.s02_events")

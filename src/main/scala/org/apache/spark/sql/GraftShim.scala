@@ -74,6 +74,14 @@ object GraftShim {
   def filesOpenCostInBytes(spark: SparkSession): Long =
     spark.asInstanceOf[classic.SparkSession].sessionState.conf.filesOpenCostInBytes
 
+  /** spark.sql.files.minPartitionNum, else the session's leaf-node
+    * default parallelism — `FilePartition.maxSplitBytes`'s task target. */
+  def filesMinPartitionNum(spark: SparkSession): Int = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    session.sessionState.conf.filesMinPartitionNum
+      .getOrElse(session.leafNodeDefaultParallelism)
+  }
+
   /** Driver-side: Hadoop conf primed for executor-side parquet writes of
     * `schema` rows — mirrors ParquetFileFormat.prepareWrite (write
     * support class, schema, timestamp/rebase modes, compression). */
@@ -144,6 +152,14 @@ object GraftShim {
   def dfOf(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** The table a row-level operation (DELETE / UPDATE / MERGE) writes,
+    * when `table` is the operation's read side; None otherwise. */
+  def rowLevelTarget(table: org.apache.spark.sql.connector.catalog.Table)
+      : Option[org.apache.spark.sql.connector.catalog.Table] = table match {
+    case t: org.apache.spark.sql.connector.write.RowLevelOperationTable => Some(t.table)
+    case _ => None
+  }
 
   /** Driver-side: a DataFrame over an arbitrary DSv2 Table instance
     * (no catalog resolution) — used by maintenance jobs to scan a

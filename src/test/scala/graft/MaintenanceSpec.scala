@@ -112,12 +112,18 @@ class MaintenanceSpec extends AnyFunSuite {
     val checksum = spark.table("mt.db.roll").agg(sum("k"), count(lit(1))).head
     assert(checksum.getLong(1) == 980L)
     // packing puts the four small fragments into ONE scan partition,
-    // which coalesce(nOut) cannot split
+    // which coalesce(nOut) cannot split (a one-task target keeps the
+    // split from spreading them over local[8]'s cores)
     val packKey = graft.connector.GraftScan.PackSmallFragmentsConf
+    val minParts = "spark.sql.files.minPartitionNum"
     val prev = spark.conf.getOption(packKey)
     spark.conf.set(packKey, "true")
+    spark.conf.set(minParts, "1")
     try assert(Maintenance.compact(spark, dir, minRows = 300) == 4)
-    finally prev.fold(spark.conf.unset(packKey))(spark.conf.set(packKey, _))
+    finally {
+      prev.fold(spark.conf.unset(packKey))(spark.conf.set(packKey, _))
+      spark.conf.unset(minParts)
+    }
     // 980 live rows, nOut = 3: no output fragment over ceil(980 / 3)
     val after = GraftFormat.readLatest(fs, dir).get
     assert(after.fragments.map(_.rowCount).sorted == Seq(326L, 327L, 327L),

@@ -91,6 +91,24 @@ abstract class NegativeConformanceBase extends AnyFunSuite {
     spark.sql(s"DROP TABLE $cat.$ns.dup")
   }
 
+  test(s"[$cat] DROP TABLE IF EXISTS drops a table whose directory is " +
+      "gone; CREATE of the name then succeeds") {
+    ready
+    spark.sql(s"DROP TABLE IF EXISTS $cat.$ns.orphan")
+    spark.sql(s"CREATE TABLE $cat.$ns.orphan AS SELECT 1L AS k")
+    val t = spark.sessionState.catalogManager.catalog(cat)
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
+      .loadTable(org.apache.spark.sql.connector.catalog.Identifier.of(
+        Array(ns), "orphan"))
+      .asInstanceOf[graft.connector.GraftTable]
+    assert(t.fs.delete(t.dir, true), s"setup: ${t.dir} must be deleted")
+    spark.sql(s"DROP TABLE IF EXISTS $cat.$ns.orphan")
+    spark.sql(s"CREATE TABLE $cat.$ns.orphan AS SELECT 2L AS k")
+    assert(spark.table(s"$cat.$ns.orphan").collect().map(_.getLong(0)).toSeq
+      == Seq(2L))
+    spark.sql(s"DROP TABLE $cat.$ns.orphan")
+  }
+
   test(s"[$cat] REPLACE TABLE on a missing table: typed error; CREATE " +
       "OR REPLACE ok") {
     ready

@@ -23,29 +23,12 @@ object TestSpark {
   }
   val sf = "/root/testdata/sf0.001"
 
-  private val tempDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  // a background thread (e.g. the checkpoint materializer) may still
-  // write into a table dir while the JVM exits: retry a racing walk
-  sys.addShutdownHook(tempDirs.forEach { d =>
-    (1 to 3).find { _ =>
-      scala.util.Using(java.nio.file.Files.walk(d)) { paths =>
-        paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      }.isSuccess || !java.nio.file.Files.exists(d)
-    }
-  })
-
   /** A fresh directory under the JVM temp dir, deleted recursively when
     * the test JVM exits. Not when its suite ends: the in-process Glue,
     * Hive and REST catalog services are JVM-wide, so a suite's table
     * registrations there outlive it and later suites still resolve (and
     * DROP) them through its warehouse. */
-  def tempDir(prefix: String): java.nio.file.Path = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    tempDirs.add(d)
-    d
-  }
+  def tempDir(prefix: String): java.nio.file.Path = TempDirs.create(prefix)
 
   /** Spark jobs started while `body` runs; the listener bus is drained
     * on both sides so no earlier job leaks in and none is missed. */

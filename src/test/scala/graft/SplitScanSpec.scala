@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,6 +25,8 @@ class SplitScanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.collectLeaves().collect {
       case b: BatchScanExec => b.inputPartitions.size
     }.sum
+
+  private val MinPartitionNum = "spark.sql.files.minPartitionNum"
 
   private def withMaxSplit[A](bytes: Long)(body: => A): A = {
     val key = "spark.sql.files.maxPartitionBytes"
@@ -99,6 +102,9 @@ class SplitScanSpec extends AnyFunSuite {
 
     val packKey = graft.connector.GraftScan.PackSmallFragmentsConf
     spark.conf.set(packKey, "true")
+    // one task target, so the split is maxPartitionBytes capped by the
+    // scan's total cost rather than spread over local[8]'s 8 cores
+    spark.conf.set(MinPartitionNum, "1")
     try {
       // openCost floor (4MB default) x 12 files / 128MB target -> 1 bin
       val packed = spark.table("sp.db.many")
@@ -110,6 +116,30 @@ class SplitScanSpec extends AnyFunSuite {
       // zone-map pruning composes with packing (prune first, then pack)
       val filtered = spark.table("sp.db.many").filter(col("k") < 100)
       assert(filtered.count() == 100)
+    } finally {
+      spark.conf.set(packKey, "false")
+      spark.conf.unset(MinPartitionNum)
+    }
+  }
+
+  test("packing spreads a scan of a few small fragments over every core") {
+    wh
+    spark.sql("DROP TABLE IF EXISTS sp.db.few")
+    spark.sql("CREATE TABLE sp.db.few (k BIGINT, s STRING)")
+    (0 until 4).foreach { i =>
+      spark.sql(s"INSERT INTO sp.db.few SELECT id + ${i * 100}, 'x' " +
+        s"FROM range(0, 100, 1, 1)")
+    }
+    val packKey = graft.connector.GraftScan.PackSmallFragmentsConf
+    spark.conf.set(packKey, "true")
+    try {
+      // Spark's maxSplitBytes: 4 x 4MB open cost over local[8]'s 8
+      // cores is below the 4MB floor, so each fragment is its own task
+      val packed = spark.table("sp.db.few")
+      val n = planned(packed)
+      assert(n >= 4, s"4 small fragments must plan one task each, planned $n")
+      assert(packed.agg(sum("k"), count(lit(1))).head() ==
+        Row((0L until 400L).sum, 400L))
     } finally spark.conf.set(packKey, "false")
   }
 

@@ -211,6 +211,17 @@ object GraftScan {
     * cluster) instead of 8×10⁵ tasks. <= 0 disables the cap. */
   val MaxPartitionsConf = "spark.graft.scan.maxPartitions"
   val DefaultMaxPartitions = 65536L
+
+  /** Reader factories built, per JVM (specs snapshot-and-diff). */
+  private[graft] val readerFactoryBuilds = new java.util.concurrent.atomic.AtomicLong()
+
+  /** The file bytes a planned partition reads (none for a manifest-served aggregate). */
+  private[graft] def plannedBytes(p: InputPartition): Long = p match {
+    case f: GraftFragmentPartition => if (f.length < 0) f.fileSize else f.length
+    case GraftPackedPartition(ps) => ps.map(plannedBytes).sum
+    case GraftBucketedPartition(fp, _) => plannedBytes(fp)
+    case _ => 0L
+  }
 }
 
 class GraftScan(
@@ -330,7 +341,10 @@ class GraftScan(
     * `KeyGroupedPartitioning(bucket(n, col))`; Spark resolves `bucket`
     * through the catalog's FunctionCatalog (GraftBucketFunction) and
     * co-locates matching buckets of two co-bucketized tables — the join
-    * runs with ZERO shuffle on either side. */
+    * runs with ZERO shuffle on either side. A one-partition scan cannot
+    * claim `SinglePartition`: the connector API has no such partitioning
+    * (Spark 4.1's `DataSourceV2ScanExecBase` maps only key-grouped ones),
+    * so small global sorts rely on [[graft.plans.SmallSortInPlace]]. */
   override def outputPartitioning():
       org.apache.spark.sql.connector.read.partitioning.Partitioning =
     bucketLayout match {
@@ -769,8 +783,7 @@ class GraftScan(
     val bins = Seq.newBuilder[InputPartition]
     var bin = List.empty[GraftFragmentPartition]
     var binBytes = 0L
-    def cost(u: GraftFragmentPartition): Long =
-      math.max(if (u.length < 0) u.fileSize else u.length, openCost)
+    def cost(u: GraftFragmentPartition): Long = math.max(GraftScan.plannedBytes(u), openCost)
     def flush(): Unit = bin match {
       case Nil => ()
       case one :: Nil => bins += one; bin = Nil; binBytes = 0L
@@ -785,7 +798,13 @@ class GraftScan(
     bins.result().toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
+  /** Built once per scan: the planner and AQE each ask their own
+    * BatchScanExec copy, and every build broadcasts the Hadoop conf.
+    * Runtime filters prune partitions, never this parquet read. */
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+
+  private lazy val readerFactory: PartitionReaderFactory = {
+    GraftScan.readerFactoryBuilds.incrementAndGet()
     import graft.format.BlobStore
     val spark = SparkSession.active
     val blobCols = table.manifest.blobColumns

@@ -642,7 +642,8 @@ object AnnTopKIndexRewrite extends org.apache.spark.internal.Logging {
 }
 
 /** `spark.sql.extensions=graft.plans.GraftExtensions` wires the ANN
-  * rule and [[MergeTargetSemiJoin]] in at session build; tests can
+  * rule and [[MergeTargetSemiJoin]] in at session build, and
+  * [[SmallSortInPlace]] as a query-stage preparation rule; tests can
   * instead append a rule to
   * `spark.experimental.extraOptimizations` on a live session. Also
   * injects the native codegen'd SQL functions (cosine_sim, l2_sq,
@@ -655,6 +656,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(s => AnnTopKIndexRewrite(s))
     e.injectOptimizerRule(_ => MergeTargetSemiJoin)
+    e.injectQueryStagePrepRule(_ => SmallSortInPlace)
     GraftExtensions.functions.foreach { case (name, builder) =>
       e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier(name),
         new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(

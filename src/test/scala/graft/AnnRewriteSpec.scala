@@ -770,23 +770,7 @@ class AnnRewriteSpec extends AnyFunSuite {
 
   test("GraftExtensions injects the native SQL functions at session " +
       "build (no per-session register calls)") {
-    import org.apache.spark.sql.SparkSession
-    val base = spark // force the shared session first
-    // clear + build INSIDE the try: if session construction itself
-    // throws, the finally still restores the shared session for the
-    // rest of the JVM's suites
-    try {
-      SparkSession.clearDefaultSession()
-      SparkSession.clearActiveSession()
-      // `spark.sql.extensions` is a static conf ignored once a
-      // SparkContext exists, so in-JVM the programmatic builder hook
-      // exercises the same GraftExtensions.apply injection path the
-      // config string triggers on a fresh deployment
-      val s2 = SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(e => new graft.plans.GraftExtensions().apply(e))
-        .getOrCreate()
-      assert(s2 ne base, "a fresh session must have been built")
+    withExtensionSession { s2 =>
       assert(s2.sql("SELECT cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D))")
         .head().getDouble(0) == 1.0)
       assert(s2.sql("SELECT l2_sq(array(0.0D, 0.0D), array(3.0D, 4.0D))")
@@ -795,9 +779,6 @@ class AnnRewriteSpec extends AnyFunSuite {
         .head().getBoolean(0))
       assert(s2.sql("SELECT simhash64(array('some', 'text', 'here'))")
         .head().get(0) != null)
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
     }
   }
 }

@@ -563,4 +563,17 @@ class GraftConnectorSpec extends AnyFunSuite {
     assert(!spark.sql("SHOW NAMESPACES IN g").collect()
       .map(_.getString(0)).contains("ml"))
   }
+
+  test("an executed scan builds its reader factory once") {
+    wh
+    spark.sql("DROP TABLE IF EXISTS g.db.rf")
+    spark.sql("CREATE TABLE g.db.rf AS SELECT id AS k, id * 2 AS v FROM range(0, 100, 1, 2)")
+    // the planner and AQE each ask a different copy of the scan node for
+    // its factory; each build broadcasts the Hadoop conf
+    val builds = graft.connector.GraftScan.readerFactoryBuilds
+    val before = builds.get()
+    val rows = spark.sql("SELECT k, v FROM g.db.rf WHERE k < 10 ORDER BY k").collect()
+    assert(rows.map(_.getLong(0)).toSeq == (0L until 10L))
+    assert(builds.get() - before == 1)
+  }
 }

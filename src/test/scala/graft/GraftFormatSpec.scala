@@ -226,4 +226,59 @@ class GraftFormatSpec extends AnyFunSuite {
     assert(back.fragments.head.sizeBytes == 0L)
     assert(back.fragments.head.stats.isEmpty)
   }
+
+  test("a chain walk that fails stops the hop reads it did not consume") {
+    val dir = tmp()
+    val conf = new Configuration()
+    conf.set(CheckpointMaterializeKey, "inline")
+    val local = FileSystem.newInstanceLocal(conf)
+    // a checkpoint at version 1 and deltas 2..9: the cold walk of 9
+    // prefetches hops 1..8 at once and consumes 8 first
+    val frag = FragmentMeta(0, "data/0.parquet", 10L, None, 0L, 100L)
+    var cur = manifest(1).copy(fragments = Seq(frag), maxFragmentId = 0)
+    GraftFormat.commit(local, dir, cur)
+    (2 to 9).foreach { v =>
+      val next = cur.copy(version = v, fragments = cur.fragments :+
+        frag.copy(id = v, path = s"data/$v.parquet"), maxFragmentId = v)
+      GraftFormat.commit(local, dir, next, base = Some(cur))
+      cur = next
+    }
+    assert(!GraftFormat.isCheckpoint(local, dir, 9L))
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val interrupted = new java.util.concurrent.atomic.AtomicInteger()
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    // hops 1..7 hold their reads open; hop 8 fails once all 7 are open
+    val walkFs = new org.apache.hadoop.fs.FilterFileSystem(local) {
+      override def open(p: Path, bufferSize: Int) = {
+        val v = p.getName.stripSuffix(".manifest.json").toLong
+        if (v == 8L) {
+          val deadline = System.nanoTime() + 10000000000L
+          while (started.get < 7 && System.nanoTime() < deadline) Thread.sleep(5L)
+          throw new java.io.IOException("injected read failure at hop 8")
+        }
+        if (v < 8L) {
+          started.incrementAndGet()
+          try gate.await(30L, java.util.concurrent.TimeUnit.SECONDS)
+          catch {
+            case e: InterruptedException =>
+              interrupted.incrementAndGet()
+              throw new java.io.InterruptedIOException(e.toString)
+          }
+        }
+        super.open(p, bufferSize)
+      }
+    }
+    graft.format.ManifestCache.clearAll()
+    try {
+      val e = intercept[Exception](GraftFormat.readManifest(walkFs, dir, 9L))
+      assert(TestSpark.rootMsgs(e).contains("injected read failure at hop 8"))
+      assert(started.get == 7)
+      val deadline = System.nanoTime() + 10000000000L
+      while (interrupted.get < 7 && System.nanoTime() < deadline) Thread.sleep(5L)
+      assert(interrupted.get == 7, "hop reads kept running after the walk failed")
+    } finally {
+      gate.countDown()
+      local.close()
+    }
+  }
 }

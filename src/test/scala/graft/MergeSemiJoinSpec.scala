@@ -148,16 +148,7 @@ class MergeSemiJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("through GraftExtensions, the target exchange shuffles only the " +
       "matched rows") {
     wh
-    val base = spark
-    try {
-      SparkSession.clearDefaultSession()
-      SparkSession.clearActiveSession()
-      // `spark.sql.extensions` is static once a SparkContext exists, so
-      // `withExtensions` injects the same rules a deployment's conf does
-      val s2 = SparkSession.builder()
-        .withExtensions(e => new graft.plans.GraftExtensions().apply(e))
-        .getOrCreate()
-      assert(s2 ne base, "a fresh session must have been built")
+    withExtensionSession { s2 =>
       s2.conf.set("spark.sql.catalog.msj", "graft.catalog.GraftCatalog")
       s2.conf.set("spark.sql.catalog.msj.warehouse", wh)
       val model = reset(s2, "ext")
@@ -170,9 +161,6 @@ class MergeSemiJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(targetSide.head.metrics("shuffleRecordsWritten").value == hits.size,
         plan.treeString)
       assert(table(s2, "ext") == upserted(model, hits ++ fresh))
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
     }
   }
 }

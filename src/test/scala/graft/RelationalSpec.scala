@@ -48,6 +48,28 @@ object TestSpark {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  /** `body` on a fresh session built with [[graft.plans.GraftExtensions]]
+    * over the shared SparkContext. `spark.sql.extensions` is a static
+    * conf ignored once a SparkContext exists, so `withExtensions`
+    * injects the same rules and functions a deployment's conf does. The
+    * shared session is the default and active one again afterwards, even
+    * when building the fresh session throws. */
+  def withExtensionSession[T](body: SparkSession => T): T = {
+    val base = spark // force the shared session first
+    try {
+      SparkSession.clearDefaultSession()
+      SparkSession.clearActiveSession()
+      val s2 = SparkSession.builder()
+        .withExtensions(e => new graft.plans.GraftExtensions().apply(e))
+        .getOrCreate()
+      org.scalatest.Assertions.assert(s2 ne base, "a fresh session must have been built")
+      body(s2)
+    } finally {
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
+
   /** Flatten an exception's cause chain into one searchable string —
     * specs asserting typed errors grep this instead of guessing which
     * layer wrapped the message. */

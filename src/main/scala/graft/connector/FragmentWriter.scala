@@ -6,7 +6,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.{TaskContext, TaskKilledException}
+import org.apache.spark.{SparkContext, TaskContext, TaskKilledException}
 import org.apache.spark.sql.{DataFrame, GraftShim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.OutputWriter
@@ -82,6 +82,18 @@ object FragmentWriter {
   private def fileName(writeId: Long): String =
     s"${new UUID(writeId, UUID.randomUUID().getLeastSignificantBits)}.parquet"
 
+  /** Cancel the jobs tagged `tag` and wait (bounded) until none of
+    * their tasks runs, so files they write can be deleted for good. */
+  private[graft] def cancelAndAwait(sc: SparkContext, tag: String): Unit = {
+    sc.cancelJobsWithTag(tag)
+    val st = sc.statusTracker
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (System.nanoTime() < deadline &&
+        st.getJobIdsForTag(tag).exists(j => st.getJobInfo(j).exists(
+          _.stageIds.exists(st.getStageInfo(_).exists(_.numActiveTasks > 0)))))
+      Thread.sleep(20)
+  }
+
   /** Write `df` into `data/` of `tableDir` as ONE Spark job: each task
     * streams its partition through a [[FragmentWriter]] and returns its
     * files. Result: each partition's files, in partition order (range-
@@ -121,13 +133,7 @@ object FragmentWriter {
     } catch {
       case t: Throwable =>
         try {
-          sc.cancelJobsWithTag(tag)
-          val st = sc.statusTracker
-          val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-          while (System.nanoTime() < deadline &&
-              st.getJobIdsForTag(tag).exists(j => st.getJobInfo(j).exists(
-                _.stageIds.exists(st.getStageInfo(_).exists(_.numActiveTasks > 0)))))
-            Thread.sleep(20)
+          cancelAndAwait(sc, tag)
           val data = GraftFormat.dataDir(tableDir)
           val fs = data.getFileSystem(conf)
           if (fs.exists(data)) fs.listStatus(data)

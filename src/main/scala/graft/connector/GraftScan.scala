@@ -214,6 +214,8 @@ object GraftScan {
 
   /** Reader factories built, per JVM (specs snapshot-and-diff). */
   private[graft] val readerFactoryBuilds = new java.util.concurrent.atomic.AtomicLong()
+  /** `planInputPartitions` calls, per JVM (specs snapshot-and-diff). */
+  private[graft] val partitionPlans = new java.util.concurrent.atomic.AtomicLong()
 
   /** The file bytes a planned partition reads (none for a manifest-served aggregate). */
   private[graft] def plannedBytes(p: InputPartition): Long = p match {
@@ -652,7 +654,14 @@ class GraftScan(
     }
   }
 
+  /** No graft reader is columnar. Saying so up front keeps Spark from
+    * planning the partitions once more per scan node copy just to ask
+    * each partition (PARTITION_DEFINED is the default). */
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.UNSUPPORTED
+
   override def planInputPartitions(): Array[InputPartition] = {
+    GraftScan.partitionPlans.incrementAndGet()
     tableIdChecked // fires on EVERY path, incl. manifest-served aggs
     if (aggs.nonEmpty) {
       // answered entirely from the manifest: one empty partition

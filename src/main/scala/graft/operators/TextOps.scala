@@ -1,6 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -281,7 +286,7 @@ object TextOps {
         row_number().over(org.apache.spark.sql.expressions.Window
           .partitionBy(key.map(col): _*)
           .orderBy(col("doc_id"))))
-      .filter(col("bucket_rank") <= 64)
+      .filter(col("bucket_rank") <= BucketCap)
       .drop("bucket_rank")
 
   /** MinHash signatures for an arbitrary corpus frame (doc_id, text) —
@@ -296,15 +301,6 @@ object TextOps {
         .withColumn("shingles", expr(shinglesExpr)),
       perms)
       .select("doc_id", "minhash")
-
-  /** Signature-agreement jaccard estimate between two minhash columns —
-    * the fused codegen'd [[graft.functions.SigAgree]] expression (r19:
-    * the former `aggregate(zip_with(...))` ran as interpreted HOFs
-    * allocating a zipped struct-array per candidate pair; equivalence
-    * is pinned verbatim in TextOpsSpec). */
-  private def agreeFrac(a: String, b: String, perms: Int): Column =
-    graft.functions.TextFunctions.sig_agree(col(a), col(b))
-      .cast("double") / perms.toDouble
 
   /** One round of the DAILY incremental-dedup loop — the composition a
     * 100 TB corpus build schedules: flag the documents in `delta` that
@@ -329,8 +325,8 @@ object TextOps {
     *     for the scan fallback.
     *
     * Both rounds run the probe to completion inside the call and
-    * release every cache they used before returning; no listener is
-    * registered, so any number of actions over the frames is safe. */
+    * cache nothing; `survivors` and `updatedIndex` drop the dup ids
+    * with a filter, so any number of actions over the frames is safe. */
   case class IncrementalDedupRound(dups: DataFrame, survivors: DataFrame,
       updatedIndex: DataFrame,
       probeStats: Option[graft.ops.MinhashStore.ProbeStats])
@@ -339,7 +335,7 @@ object TextOps {
     * the O(delta) daily probe (r17 VERDICT #2). Candidate pairs, scores
     * and `dups` are IDENTICAL to the scan fallback's (the bloom has no
     * false negatives and the per-bucket cap runs over the same matched
-    * stream); what changes is I/O: the store's per-segment bloom kills
+    * rows); what changes is I/O: the store's per-segment bloom kills
     * the probe keys a mostly-novel delta never matches BEFORE any data
     * read, survivors prune the bucket partitions they hash to, and the
     * few surviving candidates' signatures come from only their hash
@@ -353,107 +349,168 @@ object TextOps {
     val m = graft.ops.MinhashStore.meta(spark, root)
     dedupRound(delta, graft.ops.MinhashStore.sigsAll(spark, root),
       m.bands, m.r, threshold)(
-      graft.ops.MinhashStore.matchedPostings(spark, root, _))
+      graft.ops.MinhashStore.probe(spark, root, _))
   }
 
   /** [[IncrementalDedupRound]] against a plain signature frame
     * ([[minhashIndex]] output, typically read back from a persisted
     * table) — the scan fallback. The index is scanned once, columnar,
-    * (doc_id, minhash) only, and never shuffled: its banded stream
-    * joins the broadcast delta buckets, exactly as if every store
-    * segment had fallen back to its signature scan. */
+    * (doc_id, minhash) only, and never shuffled, exactly as if every
+    * store segment had fallen back to its signature scan. */
   def incrementalDedupRound(delta: DataFrame, indexSigs: DataFrame,
       bands: Int = 32, r: Int = 2, threshold: Double = 0.5)
       : IncrementalDedupRound =
-    dedupRound(delta, indexSigs, bands, r, threshold) { probes =>
-      graft.ops.MinhashStore.Probe(
-        bandedRows(indexSigs, bands, r)
-          .join(broadcast(probes), Seq("band", "band_hash"))
-          .select("band", "band_hash", "new_id", "doc_id"),
-        stats = None, sigs = Left(indexSigs))
+    dedupRound(delta, indexSigs, bands, r, threshold) { _ =>
+      graft.ops.MinhashStore.Probe(None, Seq(indexSigs), Nil,
+        ids => indexSigs.filter(col("doc_id").isin(ids: _*)))
     }
 
-  /** The probe body of both rounds. `probe` maps the capped delta
-    * buckets (new_id, band, band_hash) to the index postings they match
-    * and the source of those postings' signatures. The delta
-    * signatures, the probe keys and — when the signatures are fetched
-    * per candidate — the candidate pairs and their distinct index ids
-    * are each computed once, persisted where both a decision job and
-    * the final job read them, and released before this returns. */
+  /** Docs kept per (band, band_hash) bucket, the smallest ids first: a
+    * degenerate mega-bucket (constant signature columns at 100 TB)
+    * yields no more candidates than an ordinary one. */
+  private val BucketCap = 64
+
+  private type Hit = (Long, Long, Double) // (new_id, old_id, est_jaccard)
+
+  /** An index doc kept under a probe key's cap, with its hits on the
+    * key's delta docs when its signature was at hand. */
+  private final case class Capped(id: Long, hits: Array[Hit])
+
+  private val DupsSchema = new org.apache.spark.sql.types.StructType()
+    .add("doc_id", "long").add("dup_of", "long").add("est_jaccard", "double")
+
+  /** Hits of index (or earlier delta) doc `oldId` on the delta docs
+    * `newIds`: the signature-agreement estimate of each pair at or above
+    * `threshold`. A null signature matches nothing. */
+  private def hits(oldId: Long, sig: ArrayData, newIds: Iterable[Long],
+      sigOf: scala.collection.Map[Long, ArrayData], perms: Int,
+      threshold: Double): Array[Hit] =
+    if (sig == null) Array.empty
+    else newIds.iterator.flatMap { n =>
+      val s = sigOf(n)
+      if (s == null) None
+      else {
+        val est = graft.functions.TextHashing.sigAgree(s, sig).toDouble / perms
+        if (est >= threshold) Some((n, oldId, est)) else None
+      }
+    }.toArray
+
+  /** One task's summary of index rows (band, band_hash, doc_id,
+    * minhash or null): per probe key, its [[BucketCap]] smallest doc
+    * ids. `score` gives a kept id's hits; the driver merges the
+    * bounded lists of every task. */
+  private def capPerKey(rows: Iterator[(Int, Long, Long, ArrayData)],
+      score: (Int, Long, Long, ArrayData) => Array[Hit])
+      : Iterator[((Int, Long), Array[Capped])] = {
+    val tops = mutable.HashMap.empty[(Int, Long), mutable.PriorityQueue[Capped]]
+    rows.foreach { case (b, h, id, sig) =>
+      val q = tops.getOrElseUpdate((b, h),
+        mutable.PriorityQueue.empty[Capped](Ordering.by((c: Capped) => c.id)))
+      if (q.size < BucketCap || id < q.head.id) {
+        if (q.size == BucketCap) q.dequeue()
+        q.enqueue(Capped(id, score(b, h, id, sig)))
+      }
+    }
+    tops.iterator.map { case (k, q) => k -> q.toArray }
+  }
+
+  /** The probe body of both rounds. One job reads the delta (ids,
+    * signatures, band hashes and probe keys); the driver then caps the
+    * delta buckets, scores the within-delta pairs and lets `probe`
+    * choose the index rows, with no job. On the scan path (no pruned
+    * segment) one more job caps the scanned index rows per probe key
+    * and scores them where it reads them; on the pruned path one job
+    * caps the bucket rows and one reads the kept candidates'
+    * signatures. Per-task lists of at most [[BucketCap]] ids per key
+    * merge on the driver, so no shuffle runs. */
   private def dedupRound(delta: DataFrame, index: DataFrame, bands: Int,
       r: Int, threshold: Double)(
-      probe: DataFrame => graft.ops.MinhashStore.Probe)
+      probe: Seq[graft.ops.MinhashStore.ProbeKey] => graft.ops.MinhashStore.Probe)
       : IncrementalDedupRound = {
     val spark = delta.sparkSession
     val perms = bands * r
-    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def hold(df: DataFrame): DataFrame = {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      held += p
-      p
+    val docs = graft.ops.MinhashStore.withBandKeys(minhashIndex(delta, perms),
+        bands, r).queryExecution.toRdd.map { row =>
+      (row.getLong(0), if (row.isNullAt(1)) null else row.getArray(1).copy(),
+        row.getArray(2).toLongArray(), row.getArray(3).toLongArray())
+    }.collect()
+    val sigOf = mutable.LongMap.from(docs.iterator.map(d => d._1 -> d._2))
+    val byKey = mutable.HashMap.empty[(Int, Long), (Long, mutable.ArrayBuffer[Long])]
+    for (d <- docs; b <- 0 until bands)
+      byKey.getOrElseUpdate((b, d._3(b)), (d._4(b), mutable.ArrayBuffer.empty)
+        )._2 += d._1
+    // the capped probe buckets: each key's BucketCap smallest delta ids
+    val buckets = byKey.map { case (k, (_, ids)) =>
+      k -> ids.sorted.take(BucketCap).toArray }.toMap
+    val keys = byKey.toSeq.map { case ((b, h), (kh, _)) =>
+      graft.ops.MinhashStore.ProbeKey(b, h, kh, buckets((b, h)).length) }
+    // within-delta pairs: the later doc of a capped bucket duplicates
+    // an earlier one
+    val deltaHits = buckets.valuesIterator.flatMap(ids => ids.indices.iterator
+      .flatMap(i => hits(ids(i), sigOf(ids(i)), ids.filter(_ > ids(i)),
+        sigOf, perms, threshold)))
+    val p = probe(keys)
+    // per probe key, its BucketCap smallest index ids among `frames`
+    def capped(frames: Seq[DataFrame], sigCol: Boolean)(
+        score: (Int, Long, Long, ArrayData) => Array[Hit])
+        : Iterable[((Int, Long), Array[Capped])] =
+      if (frames.isEmpty || buckets.isEmpty) Nil
+      else frames.reduce(_ unionByName _).queryExecution.toRdd
+        .mapPartitions { it =>
+          val rows =
+            if (sigCol) it.flatMap { row => // (doc_id, minhash, bh)
+              val sig = if (row.isNullAt(1)) null else row.getArray(1)
+              val bh = row.getArray(2)
+              Iterator.range(0, bands).map(b => (b, bh.getLong(b)))
+                .filter(buckets.contains)
+                .map { case (b, h) => (b, h, row.getLong(0), sig) }
+            } else it.map(row => // (doc_id, band, band_hash)
+              (row.getInt(1), row.getLong(2), row.getLong(0), null: ArrayData))
+              .filter(t => buckets.contains((t._1, t._2)))
+          capPerKey(rows, score)
+        }.collect().groupBy(_._1).map { case (k, parts) =>
+          k -> parts.flatMap(_._2).sortBy(_.id).take(BucketCap) }
+    val indexHits: Iterator[Hit] =
+      if (p.pruned.isEmpty)
+        // every candidate's signature is in the scanned rows: each task
+        // scores a row as it keeps it
+        capped(p.scanned.map(_.select(col("doc_id").cast("long"),
+            col("minhash"), bandHashArray(bands, r).as("bh"))), sigCol = true) {
+          (b, h, id, sig) => hits(id, sig, buckets((b, h)), sigOf, perms,
+            threshold)
+        }.iterator.flatMap(_._2.iterator.flatMap(_.hits))
+      else {
+        // the kept ids pair with their keys' delta docs; their
+        // signatures come from the sig partitions they hash to
+        val newOf = mutable.LongMap.empty[mutable.Set[Long]]
+        for ((k, kept) <- capped(p.scanned.map(bandedRows(_, bands, r)) ++
+            p.pruned, sigCol = false)((_, _, _, _) => Array.empty); c <- kept)
+          newOf.getOrElseUpdate(c.id, mutable.Set.empty) ++= buckets(k)
+        if (newOf.isEmpty) Iterator.empty
+        else p.sigsOf(newOf.keys.toSeq).queryExecution.toRdd
+          .map(row => (row.getLong(0),
+            if (row.isNullAt(1)) null else row.getArray(1).copy()))
+          .collect().iterator.flatMap { case (id, sig) =>
+            hits(id, sig, newOf(id), sigOf, perms, threshold) }
+      }
+    // one row per duplicated delta doc: its smallest partner, with
+    // min(struct(old_id, est)) order on ties
+    val best = mutable.LongMap.empty[(Long, Double)]
+    (deltaHits ++ indexHits).foreach { case (n, o, e) =>
+      if (best.get(n).forall { case (bo, be) => o < bo || (o == bo && e < be) })
+        best(n) = (o, e)
     }
-    val (dups, stats) = try {
-      val deltaSigs = hold(minhashIndex(delta, perms))
-      // capped delta buckets: the probe keys, and the source of the
-      // within-delta pairs
-      val probes = hold(bandBuckets(deltaSigs, bands, r)
-        .withColumnRenamed("doc_id", "new_id"))
-      val p = probe(probes)
-      // candidate (new_id, old_id) pairs, tagged by where old_id lives:
-      // the index (capped per bucket and delta doc over the matched
-      // postings — the index side is deliberately not pre-capped, which
-      // would need a full shuffle of its banded stream) or the delta
-      // itself (the later doc duplicates the earlier one) — one
-      // distinct, one signature fetch per side for both kinds
-      val cands0 = capBuckets(p.postings, Seq("band", "band_hash", "new_id"))
-        .select(col("new_id"), col("doc_id").as("old_id"),
-          lit(false).as("in_delta"))
-        .unionByName(bucketPairs(probes, "new_id")
-          .select(col("b_id").as("new_id"), col("a_id").as("old_id"),
-            lit(true).as("in_delta")))
-        .distinct()
-      val (cands, indexSigs) = p.sigs match {
-        // every candidate comes from a scanned signature frame: no
-        // candidate decision job, no extra pass
-        case Left(sigs) => (cands0, sigs)
-        case Right(sigsFor) =>
-          val c = hold(cands0)
-          (c, sigsFor(hold(
-            c.filter(!col("in_delta")).select(col("old_id")).distinct())))
-      }
-      def oldSigs(sigs: DataFrame, inDelta: Boolean): DataFrame =
-        sigs.select(col("doc_id").as("old_id"), col("minhash").as("sig_old"),
-          lit(inDelta).as("in_delta"))
-      val scored = oldSigs(indexSigs, inDelta = false)
-        .unionByName(oldSigs(deltaSigs, inDelta = true))
-        .join(broadcast(cands), Seq("old_id", "in_delta"))
-        .join(broadcast(deltaSigs.select(col("doc_id").as("new_id"),
-          col("minhash").as("sig_new"))), Seq("new_id"))
-        .select(col("new_id"), col("old_id"),
-          agreeFrac("sig_new", "sig_old", perms).as("est_jaccard"))
-      val best = bestDupPerDoc(scored, threshold)
-      val rows = graft.BenchPhases.timed("mhstore.probe_rows") {
-        best.collect()
-      }
-      (spark.createDataFrame(java.util.Arrays.asList(rows: _*), best.schema),
-        p.stats)
-    } finally { held.foreach(_.unpersist(false)) }
-    val survivors = delta.join(dups.select("doc_id"), Seq("doc_id"),
-      "left_anti")
-    val updatedIndex = index.unionByName(minhashIndex(delta, perms)
-      .join(dups.select("doc_id"), Seq("doc_id"), "left_anti"))
-    IncrementalDedupRound(dups, survivors, updatedIndex, stats)
+    val rows = best.toSeq.sortBy(_._1).map { case (n, (o, e)) =>
+      Row(n, o, Round(Literal(e), Literal(4)).eval()) }
+    val dups = spark.createDataFrame(rows.asJava, DupsSchema)
+    // delta rows whose id is not a dup id (a null id is never one)
+    val dupIds = rows.map(_.get(0))
+    def notDup(df: DataFrame): DataFrame =
+      if (dupIds.isEmpty) df
+      else df.filter(!col("doc_id").isin(dupIds: _*) || col("doc_id").isNull)
+    IncrementalDedupRound(dups, notDup(delta),
+      index.unionByName(notDup(minhashIndex(delta, perms))), p.stats)
   }
-
-  /** Keep scored pairs at or above `threshold`, one row per delta doc
-    * with its smallest matching partner. */
-  private def bestDupPerDoc(scored: DataFrame,
-      threshold: Double): DataFrame =
-    scored.filter(col("est_jaccard") >= threshold)
-      .groupBy(col("new_id"))
-      .agg(min(struct(col("old_id"), col("est_jaccard"))).as("m"))
-      .select(col("new_id").as("doc_id"), col("m.old_id").as("dup_of"),
-        round(col("m.est_jaccard"), 4).as("est_jaccard"))
 
   /** documents projected to (doc_id, source, words) with words = the
     * distinct lower-cased whitespace tokens. */

@@ -2,9 +2,15 @@ package graft.ops
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Literal, XXH64}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Persisted, probe-prunable MinHash near-dup index (r17 VERDICT #2).
@@ -36,7 +42,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * bloom (no false negatives — candidate recall is exact) kills those
   * before any data I/O; the few survivors prune the bucket partitions
   * they hash to; the surviving candidates' signatures come from the
-  * sig partitions they hash to. A dup-HEAVY delta falls back
+  * sig partitions they hash to. All of it is decided on the driver
+  * from the cached blooms, with no Spark job. A dup-HEAVY delta falls back
   * COST-BASED: when the touched partitions would read more bucket
   * records than one scan of the segment's signatures, the probe bands
   * the sig scan on the fly instead — the pre-store probe's exact
@@ -51,8 +58,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * appends keep segments bounded; `append` + periodic `build` from
   * [[sigsAll]] is the compaction loop), each tested independently
   * exactly as multiple segments already are here. Nothing driver-side
-  * scales with the corpus: collected sets are partition IDS, bounded
-  * by [[MaxParts]].
+  * scales with the corpus: a round holds the delta's signatures, at
+  * most 64 index ids per probe key and those candidates' signatures.
   */
 object MinhashStore {
 
@@ -91,33 +98,42 @@ object MinhashStore {
 
   final case class Meta(bands: Int, r: Int, segments: Seq[String])
 
-  /** One probe's shape, returned with its postings by
-    * [[matchedPostings]]. */
+  /** One probe's shape, returned by [[probe]]. `probeKeys` counts the
+    * capped probe rows and `survivors` the (probe row, segment) pairs a
+    * segment's bloom admits. */
   final case class ProbeStats(segments: Int, probeKeys: Long,
       survivors: Long, partsTouched: Int, partsTotal: Int,
       fullScanSegments: Int)
-  /** Index postings (band, band_hash, new_id, doc_id) matching a
-    * probe, and where their signatures come from: `Left(sigs)` holds
-    * every candidate's signature (no segment the probe reads was
-    * pruned, so every candidate comes from a segment whose signatures
-    * the probe scans whole); `Right(sigsFor)` reads the signatures of a
-    * distinct `old_id` frame ([[sigsFor]]). `stats` is None for a probe
-    * over a plain signature frame rather than a store. */
-  final case class Probe(postings: DataFrame, stats: Option[ProbeStats],
-      sigs: Either[DataFrame, DataFrame => DataFrame])
+  /** The index rows a round reads for its probe keys: `scanned` are
+    * signature frames (doc_id, minhash) read whole, `pruned` bucket
+    * frames (doc_id, band, band_hash) cut to the partitions the probe
+    * keys hash to, and `sigsOf` reads the signatures of given doc ids.
+    * `stats` is None for a probe over a plain signature frame rather
+    * than a store. */
+  final case class Probe(stats: Option[ProbeStats], scanned: Seq[DataFrame],
+      pruned: Seq[DataFrame], sigsOf: Seq[Long] => DataFrame)
 
-  /** The layouts [[writeSegment]] writes. Reads pass them instead of
-    * inferring: inference costs one Spark job per directory read. */
-  private val SigsSchema = new StructType()
+  /** The files [[writeSegment]] writes, and the layouts under their
+    * partition directories. Reads pass these instead of inferring:
+    * inference costs one Spark job per directory read. */
+  private val SigsFileSchema = new StructType()
     .add("doc_id", LongType).add("minhash", ArrayType(LongType))
-    .add("sp", IntegerType)
-  private val BucketsSchema = new StructType()
+  private val BucketsFileSchema = new StructType()
     .add("doc_id", LongType).add("band", IntegerType)
-    .add("band_hash", LongType).add("p", IntegerType)
+    .add("band_hash", LongType)
+  private val SigsSchema = SigsFileSchema.add("sp", IntegerType)
+  private val BucketsSchema = BucketsFileSchema.add("p", IntegerType)
 
   private def readSigs(spark: SparkSession, root: String,
       seg: String): DataFrame =
     spark.read.schema(SigsSchema).parquet(s"$root/$seg/sigs")
+
+  /** (doc_id, minhash) of every segment in `segs` as ONE file scan (each
+    * scan node broadcasts its Hadoop conf when it runs). */
+  private def scanSigs(spark: SparkSession, root: String,
+      segs: Seq[String]): DataFrame =
+    spark.read.schema(SigsFileSchema).option("recursiveFileLookup", "true")
+      .parquet(segs.map(s => s"$root/$s/sigs"): _*)
 
   private def readBuckets(spark: SparkSession, root: String,
       seg: String): DataFrame =
@@ -176,111 +192,119 @@ object MinhashStore {
   private[graft] def khCol: org.apache.spark.sql.Column =
     xxhash64(col("band"), col("band_hash"))
 
+  /** `sigs` (doc_id, minhash) with each doc's band hashes `bh` and probe
+    * keys `kh` (the [[khCol]] of each (band, band_hash)) as arrays
+    * indexed by band. */
+  private[graft] def withBandKeys(sigs: DataFrame, bands: Int,
+      r: Int): DataFrame =
+    sigs.select(col("doc_id").cast("long").as("doc_id"), col("minhash"),
+        graft.operators.TextOps.bandHashArray(bands, r).as("bh"))
+      .withColumn("kh", transform(col("bh"), (h, b) => xxhash64(b, h)))
+
+  /** A signature row on its way into a segment: its sig-partition
+    * hash `dh` and, per band, its band hash and probe key. */
+  private final case class SigRow(id: Long, sig: ArrayData, dh: Long,
+      bh: Array[Long], kh: Array[Long])
+
   /** One segment's payload from a signature frame. Returns the
-    * segment name. */
+    * segment name. Three jobs over the cached rows: a count that sizes
+    * both layouts, then, side by side, one write whose shuffle routes
+    * every signature to its `sigs/sp=` reducer and every bucket row to
+    * its `buckets/p=` reducer (each reducer writes one parquet file) and
+    * the bloom, a tree merge of per-task filters sized as
+    * `stat.bloomFilter` sizes them. A failure cancels this call's jobs
+    * and deletes the segment directory. */
   private def writeSegment(sigs: DataFrame, root: Path, bands: Int,
       r: Int): String = {
     val spark = sigs.sparkSession
+    val sc = spark.sparkContext
     val (fs, _) = fsOf(spark, root.toString)
     val seg = IndexSegments.newSegmentName()
     val segDir = new Path(root, seg)
-    val cached = sigs.select(col("doc_id").cast("long").as("doc_id"),
-      col("minhash"))
+    val rows = withBandKeys(sigs, bands, r)
+      .withColumn("dh", xxhash64(col("doc_id")))
+      .queryExecution.toRdd.map(row => SigRow(row.getLong(0),
+        if (row.isNullAt(1)) null else row.getArray(1).copy(), row.getLong(4),
+        row.getArray(2).toLongArray(), row.getArray(3).toLongArray()))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tag = s"graft-mhstore-$seg"
+    sc.addJobTag(tag)
     try {
-      // r19 build shape (VERDICT r18 #1): ONE materialization job up
-      // front (the count carries the corpus shingling that the sigs
-      // write used to pay, and makes n available to size BOTH layouts),
-      // then the three payload jobs — sigs write, buckets write, bloom
-      // — all read the populated cache and run CONCURRENTLY from a
-      // small driver pool (guide §2.6, overlap independent jobs): at
-      // gate segment sizes each is fixed-overhead-dominated, so wall
-      // clock is their max, not their sum; at production sizes the
-      // scheduler back-fills each job's straggler tail with the others'
-      // tasks. Writes go to disjoint paths; the bloom is a treeAggregate
-      // — no shared mutable state crosses the threads. The count runs on
-      // the physical rows: a Dataset count adds an aggregation exchange,
-      // one more job under AQE.
-      val n = graft.BenchPhases.timed("mhstore.materialize") {
-        cached.queryExecution.toRdd.count()
-      }
+      val n = rows.count()
       val sp = sigParts(n)
       val p = parts(n * bands)
-      val banded = cached.select(col("doc_id"),
-        posexplode(graft.operators.TextOps.bandHashArray(bands, r))
-          .as(Seq("band", "band_hash")))
-      // the tag names this call's threads and Spark jobs, so a failure
-      // cancels the siblings' jobs, not only their driver threads
-      val tag = s"graft-mhstore-$seg"
-      def task[T](body: => T): () => T = () => {
-        spark.sparkContext.addJobTag(tag)
-        try body finally spark.sparkContext.removeJobTag(tag)
-      }
-      // explicit shuffle partition counts (= dir counts) keep the
-      // exchanges scale-adaptive instead of riding the session's
-      // spark.sql.shuffle.partitions (guide §2: no constant tuned to
-      // either local mode or one cluster size)
-      val writeSigs = task {
-        graft.BenchPhases.timed("mhstore.sigs_write") {
-          cached
-            .withColumn("sp", pmod(xxhash64(col("doc_id")), lit(sp.toLong))
-              .cast("int"))
-            .repartition(sp, col("sp"))
-            .write.partitionBy("sp").mode("overwrite")
-            .parquet(new Path(segDir, "sigs").toString)
-        }
-        None
-      }
-      val writeBuckets = task {
-        graft.BenchPhases.timed("mhstore.buckets_write") {
-          banded
-            .withColumn("p", pmod(khCol, lit(p.toLong)).cast("int"))
-            .repartition(p, col("p"))
-            .write.partitionBy("p").mode("overwrite")
-            .parquet(new Path(segDir, "buckets").toString)
-        }
-        None
-      }
-      // bloom over the segment's kh set — one distributed agg, result
-      // ~24 bits/key on the driver then persisted beside the payload
-      val buildBloom = task {
-        graft.BenchPhases.timed("mhstore.bloom") {
-          Some(banded.select(khCol.as("kh"))
-            .stat.bloomFilter("kh", math.max(1L, n * bands), BloomFpp))
-        }
-      }
-      // a failure cancels the siblings' Spark jobs as well as their
-      // threads, so no write outlives the call
-      val bloom = graft.DriverPool.runAll(tag, 3,
-        Seq[() => Option[BloomFilter]](writeSigs, writeBuckets, buildBloom),
-        onFailure = () => spark.sparkContext.cancelJobsWithTag(tag))
-        .flatten.head
+      Seq("sigs", "buckets").foreach(d => fs.mkdirs(new Path(segDir, d)))
+      val sigsConf = new SerializableConfiguration(
+        GraftShim.parquetWriteConf(spark, SigsFileSchema))
+      val bucketsConf = new SerializableConfiguration(
+        GraftShim.parquetWriteConf(spark, BucketsFileSchema))
+      val dir = segDir.toString
+      // reducer i < sp holds sig partition i, reducer sp + b bucket
+      // partition b — pmod as the probe and sigsFor compute them
+      val routed = rows.flatMap { s =>
+        Iterator.single((Math.floorMod(s.dh, sp.toLong).toInt,
+          InternalRow(s.id, s.sig))) ++
+          Iterator.tabulate(bands)(b =>
+            (sp + Math.floorMod(s.kh(b), p.toLong).toInt,
+              InternalRow(s.id, b, s.bh(b))))
+      }.partitionBy(new HashPartitioner(sp + p))
+      // the write runs while the bloom job below does
+      val written = sc.submitJob(routed, (it: Iterator[(Int, InternalRow)]) =>
+        if (it.hasNext) {
+          val i = TaskContext.getPartitionId()
+          val (file, conf) =
+            if (i < sp) (s"$dir/sigs/sp=$i/part-$i.parquet", sigsConf)
+            else (s"$dir/buckets/p=${i - sp}/part-${i - sp}.parquet", bucketsConf)
+          // an earlier attempt's file is replaced, never read twice
+          val path = new Path(file)
+          path.getFileSystem(conf.value).delete(path, false)
+          val w = GraftShim.newParquetRowWriter(file, conf.value)
+          try it.foreach(kv => w.write(kv._2)) finally w.close()
+        }, 0 until sp + p, (_: Int, _: Unit) => (), ())
+      // the empty filter comes from the aggregate `stat.bloomFilter`
+      // runs, so both size it alike
+      val expected = math.max(1L, n * bands)
+      val zero = new BloomFilterAggregate(Literal(0L), Literal(expected),
+        Literal(BloomFilter.optimalNumOfBits(expected, BloomFpp)))
+        .createAggregationBuffer()
+      val bloom = rows.treeAggregate(zero)(
+        (bf, s) => { s.kh.foreach(bf.putLong); bf }, _ mergeInPlace _)
+      scala.concurrent.Await.result(written, scala.concurrent.duration.Duration.Inf)
       val out = fs.create(new Path(segDir, "bloom.bin"), true)
       try bloom.writeTo(out) finally out.close()
       val mo = fs.create(new Path(segDir, "_seg.json"), true)
       try mo.write(s"""{"n":$n,"sp":$sp,"p":$p}""".getBytes("UTF-8"))
       finally mo.close()
       seg
-    } finally { cached.unpersist(false); () }
+    } catch {
+      case t: Throwable =>
+        try {
+          graft.connector.FragmentWriter.cancelAndAwait(sc, tag)
+          fs.delete(segDir, true)
+        } catch { case c: Exception => t.addSuppressed(c) }
+        throw t
+    } finally {
+      sc.removeJobTag(tag)
+      rows.unpersist(false)
+    }
   }
 
-  private def segParts(fs: FileSystem, root: Path,
-      seg: String): (Long, Int, Int) = {
-    val node = mapper.readTree(
-      readAll(fs, new Path(new Path(root, seg), "_seg.json")))
-    (node.get("n").asLong(), node.get("sp").asInt(), node.get("p").asInt())
-  }
+  /** A written segment's row count, layouts and bloom. */
+  private final case class Seg(n: Long, sp: Int, p: Int, bloom: BloomFilter)
 
-  // per-(root, seg) bloom cache: a daily probe loop re-probes the same
-  // segments; the blobs are small and immutable once written
-  private val bloomCache =
-    scala.collection.concurrent.TrieMap.empty[String, BloomFilter]
-  private def loadBloom(fs: FileSystem, root: Path, seg: String): BloomFilter =
-    bloomCache.getOrElseUpdate(new Path(root, seg).toString, {
-      val in = fs.open(new Path(new Path(root, seg), "bloom.bin"))
-      try BloomFilter.readFrom(in) finally in.close()
+  // per-(root, seg) metadata cache: a daily probe loop re-probes the
+  // same segments, whose files are immutable once written
+  private val segCache = scala.collection.concurrent.TrieMap.empty[String, Seg]
+  private def segOf(fs: FileSystem, root: Path, seg: String): Seg =
+    segCache.getOrElseUpdate(new Path(root, seg).toString, {
+      val dir = new Path(root, seg)
+      val node = mapper.readTree(readAll(fs, new Path(dir, "_seg.json")))
+      val in = fs.open(new Path(dir, "bloom.bin"))
+      val bloom = try BloomFilter.readFrom(in) finally in.close()
+      Seg(node.get("n").asLong(), node.get("sp").asInt(),
+        node.get("p").asInt(), bloom)
     })
-  private[graft] def clearCaches(): Unit = bloomCache.clear()
+  private[graft] def clearCaches(): Unit = segCache.clear()
 
   /** Build (or REPLACE) the store from a full signature frame —
     * one segment. Also the compaction target for a long append
@@ -314,140 +338,65 @@ object MinhashStore {
       .map(seg => readSigs(spark, root, seg).select("doc_id", "minhash"))
       .reduce(_ unionByName _)
 
-  /** Index postings matching `probes` (new_id, band, band_hash):
-    * returns (band, band_hash, new_id, doc_id) — doc_id the INDEX
-    * side — for every index doc sharing a (band, band_hash) bucket
-    * with a probe, together with the probe's [[ProbeStats]]. Candidate
-    * recall is EXACT (bloom has no false negatives; kh collisions are
-    * resolved by the real (band, band_hash) join keys) while I/O is
-    * O(matching buckets): per segment, bloom-surviving probes decide
-    * the partitions read — none survive, nothing is read. One
-    * collect-job over `probes` decides; the returned plan reads
-    * `probes` again, so the caller persists it and releases it after
-    * its last action over the postings. */
-  def matchedPostings(spark: SparkSession, root: String,
-      probes: DataFrame): Probe = {
+  /** One (band, band_hash) probe key of a round: its [[khCol]] and
+    * its number of capped probe rows (delta docs). */
+  final case class ProbeKey(band: Int, bandHash: Long, kh: Long, rows: Int)
+
+  /** Which store rows can match `keys`, decided on the driver from the
+    * cached segment blooms with no Spark job. Candidate recall is EXACT
+    * (a bloom has no false negatives; kh collisions are resolved by the
+    * real (band, band_hash) keys) while I/O is O(matching buckets): per
+    * segment, the keys its bloom admits pick the bucket partitions
+    * read — none admitted, nothing is read — or, past the cost-based
+    * threshold, the segment's signatures are scanned instead. */
+  def probe(spark: SparkSession, root: String, keys: Seq[ProbeKey]): Probe = {
     val (fs, rp) = fsOf(spark, root)
     val m = meta(spark, root)
-    val segInfos = m.segments.map(seg => (seg, segParts(fs, rp, seg)))
-    val blooms = m.segments.map(loadBloom(fs, rp, _)).toArray
-    val parts = segInfos.map(_._2._3.toLong).toArray
-    // (segment ordinal, bucket partition) for every segment whose
-    // bloom may hold kh — pmod as writeSegment partitions by
-    val hits = udf((kh: Long) => blooms.indices
-      .filter(i => blooms(i).mightContainLong(kh))
-      .map(i => (i, Math.floorMod(kh, parts(i)).toInt)))
-    val admitted = udf((kh: Long) => blooms.exists(_.mightContainLong(kh)))
-    val keyed = probes.withColumn("kh", khCol)
-    // ONE decision job, one branch for every segment: the probe keys
-    // explode to the (segment, partition) pairs their blooms admit, so
-    // the daily append chain adds no job and no plan branch per
-    // segment. The probe-key count rides along as an observation; the
-    // observed frame stays out of the returned plan (an Observation is
-    // one-shot; re-executing its node is undefined).
-    val kObs = org.apache.spark.sql.Observation()
-    val decidedRows = graft.BenchPhases.timed("mhstore.probe_decision") {
-      keyed.observe(kObs, count(lit(1)).as("k"))
-        .select(explode(hits(col("kh"))).as("h"))
-        .groupBy(col("h._1").as("si"), col("h._2").as("p"))
-        .agg(count(lit(1)).as("cnt"))
-        .collect()
-    }
-    // observability-only: a missed metric degrades to -1, never
-    // fails the probe or buys a dedicated count job
-    val probeKeys =
-      scala.util.Try(kObs.get("k").asInstanceOf[Long]).getOrElse(-1L)
-    val bySeg = decidedRows.groupBy(_.getInt(0))
-    var survivorsTotal = 0L
+    val segs = m.segments.map(seg => seg -> segOf(fs, rp, seg))
+    var survivors = 0L
     var touched = 0
     val scanned = Seq.newBuilder[String]
-    var pruned = false
-    val indexSide = segInfos.zipWithIndex.flatMap {
-      case ((seg, (segRows, _, _)), i) =>
-      val byPart = bySeg.getOrElse(i, Array.empty)
-      val partIds = byPart.map(_.getInt(1)).sorted
-      survivorsTotal += byPart.map(_.getLong(2)).sum
+    val pruned = Seq.newBuilder[DataFrame]
+    segs.foreach { case (seg, s) =>
+      val admitted = keys.filter(k => s.bloom.mightContainLong(k.kh))
+      survivors += admitted.map(_.rows.toLong).sum
+      val partIds = admitted.map(k => Math.floorMod(k.kh, s.p.toLong).toInt)
+        .distinct.sorted
       touched += partIds.length
-      if (partIds.isEmpty) None
-      else if (partIds.length.toLong * TargetRowsPerPart > segRows) {
+      if (partIds.isEmpty) ()
+      else if (partIds.length.toLong * TargetRowsPerPart > s.n)
         // COST-BASED fallback: each touched partition costs
         // ~TargetRowsPerPart bucket records, so once the survivors
-        // spread past segRows/TargetRowsPerPart partitions, one scan
-        // of the segment's SIGNATURES (banded on the fly — exactly
-        // the pre-store probe's shape and cost, 32× narrower in
-        // records than the bucket table) is strictly cheaper. A
-        // dup-heavy delta therefore pays the old O(index) cost at
-        // worst, never 32× it.
+        // spread past n/TargetRowsPerPart partitions, one scan of the
+        // segment's SIGNATURES (banded on the fly — the pre-store
+        // probe's exact shape and cost, 32× narrower in records than
+        // the bucket table) is strictly cheaper. A dup-heavy delta
+        // therefore pays the old O(index) cost at worst, never 32× it.
         scanned += seg
-        Some(readSigs(spark, root, seg)
-          .select(col("doc_id"), posexplode(
-            graft.operators.TextOps.bandHashArray(m.bands, m.r))
-            .as(Seq("band", "band_hash"))))
-      } else {
-        pruned = true
-        Some(readBuckets(spark, root, seg)
-          .filter(col("p").isin(partIds.toIndexedSeq.map(Integer.valueOf): _*))
-          .select("doc_id", "band", "band_hash"))
-      }
+      else
+        pruned += readBuckets(spark, root, seg)
+          .filter(col("p").isin(partIds.map(Integer.valueOf): _*))
+          .select("doc_id", "band", "band_hash")
     }
-    val scannedSegs = scanned.result()
-    val stats = ProbeStats(m.segments.size, probeKeys, survivorsTotal,
-      touched, parts.sum.toInt, scannedSegs.size)
-    val sigs: Either[DataFrame, DataFrame => DataFrame] =
-      if (pruned) Right(sigsFor(spark, root, _: DataFrame))
-      else Left(scannedSegs.map(readSigs(spark, root, _))
-        .reduceOption(_ unionByName _)
-        .getOrElse(readSigs(spark, root, m.segments.head).limit(0))
-        .select("doc_id", "minhash"))
-    // every read segment joins ONE broadcast of the probes some bloom
-    // admits: a probe no bloom admits matches nothing, and a probe
-    // admitted elsewhere finds no row of its bucket here
-    val postings =
-      if (indexSide.isEmpty)
-        // empty frame with the contract's schema
-        readBuckets(spark, root, m.segments.head).limit(0)
-          .select(col("band"), col("band_hash"),
-            lit(0L).as("new_id"), col("doc_id"))
-      else indexSide.reduce(_ unionByName _)
-        .join(broadcast(keyed.filter(admitted(col("kh")))
-          .select("new_id", "band", "band_hash")), Seq("band", "band_hash"))
-        .select("band", "band_hash", "new_id", "doc_id")
-    Probe(postings, Some(stats), sigs)
+    val sc = scanned.result()
+    val stats = ProbeStats(segs.size, keys.map(_.rows.toLong).sum,
+      survivors, touched, segs.map(_._2.p).sum, sc.size)
+    Probe(Some(stats), if (sc.isEmpty) Nil else Seq(scanSigs(spark, root, sc)),
+      pruned.result(), sigsFor(spark, root, segs, _))
   }
 
-  /** Signatures for a bounded candidate id frame (`old_id` column,
-    * distinct), read from only the sig partitions those ids hash to.
-    * One collect-job over `ids` decides the partitions; the returned
-    * plan reads `ids` again, so the caller persists it and releases it
-    * after its last action over the result. */
-  def sigsFor(spark: SparkSession, root: String,
-      ids: DataFrame): DataFrame = {
-    val (fs, rp) = fsOf(spark, root)
-    val m = meta(spark, root)
-    val wanted = ids.select(col("old_id").cast("long").as("doc_id"))
-    val segInfos = m.segments.map(seg => (seg, segParts(fs, rp, seg)._2))
-    // ONE partition-decision job across every segment (r19 — VERDICT
-    // r18 #3): union the per-segment distinct-sp branches, tagged by
-    // segment ordinal, instead of one collect per segment
-    val decided = graft.BenchPhases.timed("mhstore.sig_decision") {
-      segInfos.zipWithIndex.map { case ((_, sp), i) =>
-        wanted.select(lit(i).as("si"),
-          pmod(xxhash64(col("doc_id")), lit(sp.toLong))
-            .cast("int").as("sp"))
-          .distinct()
-      }.reduce(_ unionByName _).collect()
-    }
-    val bySeg = decided.groupBy(_.getInt(0))
-    segInfos.zipWithIndex.map { case ((seg, sp), i) =>
-      val partIds = bySeg.getOrElse(i, Array.empty).map(_.getInt(1)).sorted
+  /** Signatures (doc_id, minhash) of `ids`, read from only the sig
+    * partitions those ids hash to (chosen on the driver, pmod as
+    * [[writeSegment]] partitions by). */
+  private def sigsFor(spark: SparkSession, root: String,
+      segs: Seq[(String, Seg)], ids: Seq[Long]): DataFrame =
+    segs.map { case (seg, s) =>
+      val partIds = ids.map(id => Math.floorMod(XXH64.hashLong(id, 42L),
+        s.sp.toLong).toInt).distinct.sorted
       val sigs = readSigs(spark, root, seg)
       val base =
-        if (partIds.isEmpty) sigs.limit(0)
-        else if (partIds.length > sp * FallbackPartFraction) sigs
-        else sigs.filter(
-          col("sp").isin(partIds.toIndexedSeq.map(Integer.valueOf): _*))
-      base.join(broadcast(wanted), Seq("doc_id"))
-        .select("doc_id", "minhash")
+        if (partIds.length > s.sp * FallbackPartFraction) sigs
+        else sigs.filter(col("sp").isin(partIds.map(Integer.valueOf): _*))
+      base.filter(col("doc_id").isin(ids: _*)).select("doc_id", "minhash")
     }.reduce(_ unionByName _)
-  }
 }

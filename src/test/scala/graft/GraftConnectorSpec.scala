@@ -576,4 +576,17 @@ class GraftConnectorSpec extends AnyFunSuite {
     assert(rows.map(_.getLong(0)).toSeq == (0L until 10L))
     assert(builds.get() - before == 1)
   }
+
+  test("an executed scan plans its partitions once") {
+    wh
+    spark.sql("DROP TABLE IF EXISTS g.db.pp")
+    spark.sql("CREATE TABLE g.db.pp AS SELECT id AS k, id * 2 AS v FROM range(0, 100, 1, 2)")
+    // Spark asks a scan whose columnar support is partition-defined for
+    // its partitions on each copy of the scan node
+    val plans = graft.connector.GraftScan.partitionPlans
+    val before = plans.get()
+    val rows = spark.sql("SELECT k, v FROM g.db.pp WHERE k >= 10 AND k < 60 ORDER BY k").collect()
+    assert(rows.map(_.getLong(0)).toSeq == (10L until 60L))
+    assert(plans.get() - before == 1)
+  }
 }

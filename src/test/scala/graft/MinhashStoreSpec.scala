@@ -8,7 +8,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
+import org.apache.spark.util.sketch.BloomFilter
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -263,13 +265,107 @@ class MinhashStoreSpec extends AnyFunSuite {
     }
     assert(java.util.Arrays.equals(Files.readAllBytes(meta), before))
     assert(MinhashStore.meta(spark, root).segments.size == 1)
-    val running = Thread.getAllStackTraces.keySet.asScala
-      .filter(t => t.isAlive && t.getName.startsWith("graft-mhstore-"))
-    assert(running.isEmpty, s"pool threads outlived append: $running")
+    // the failed segment's partial payload is gone with it
+    val segDirs = Files.list(Paths.get(root)).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("seg-")).toSeq
+    assert(segDirs == MinhashStore.meta(spark, root).segments, segDirs)
+    val running = spark.sparkContext.statusTracker.getActiveJobIds()
+    assert(running.isEmpty, s"jobs outlived append: ${running.mkString(",")}")
     // the store still probes and appends normally
     MinhashStore.append(
       TextOps.minhashIndex(all.filter(col("doc_id") % 2 === 1)), root)
     assert(MinhashStore.sigsAll(spark, root).count() == all.count())
+  }
+
+  /** (doc_id, band, band_hash) of a signature frame. */
+  private def banded(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"), posexplode(TextOps.bandHashArray(32, 2))
+      .as(Seq("band", "band_hash")))
+
+  test("a round on the scan path runs at most 4 Spark jobs, an append " +
+      "at most 3") {
+    val base = docsAt(sf)
+    val root = tmpRoot()
+    MinhashStore.build(TextOps.minhashIndex(base), root)
+    val copies = base.select((col("doc_id") + 500000L).as("doc_id"),
+      col("text"))
+    val (round, jobs) =
+      jobsDuring(TextOps.incrementalDedupRoundIndexed(copies, root))
+    assert(round.probeStats.get.fullScanSegments == 1)
+    assert(jobs <= 4, s"scan-path round ran $jobs jobs")
+    val (_, scanJobs) = jobsDuring(TextOps.incrementalDedupRound(copies,
+      TextOps.minhashIndex(base)))
+    assert(scanJobs <= 4, s"scan-fallback round ran $scanJobs jobs")
+    val novel = base.select((col("doc_id") + 900000L).as("doc_id"),
+      concat_ws(" ", reverse(split(col("text"), " ")), lit("zq9x"))
+        .as("text"))
+    val (_, appendJobs) =
+      jobsDuring(MinhashStore.append(TextOps.minhashIndex(novel), root))
+    assert(appendJobs <= 3, s"append ran $appendJobs jobs")
+    assert(MinhashStore.sigsAll(spark, root).count() == 2 * base.count())
+  }
+
+  test("a round on the pruned path runs at most 5 Spark jobs and " +
+      "matches the scan round") {
+    import spark.implicits._
+    // 16x-replicated corpus, so that a probe touching a few bucket
+    // partitions reads them instead of scanning the segment
+    val base = spark.range(16).crossJoin(docsAt(sf))
+      .select((col("doc_id") + col("id") * 1000L).as("doc_id"), col("text"))
+    val delta = docsAt(sf).limit(3)
+      .select((col("doc_id") + 1000000L).as("doc_id"),
+        concat_ws(" ", reverse(split(col("text"), " ")),
+          col("doc_id").cast("string"), lit("zq9x")).as("text"))
+    // an index doc agreeing with a delta doc on every even position and
+    // on position 1: one shared band, est_jaccard 33/64
+    val (id, sig) = TextOps.minhashIndex(delta).orderBy("doc_id")
+      .as[(Long, Seq[Long])].head()
+    val near = sig.zipWithIndex.map { case (v, i) =>
+      if (i % 2 == 1 && i > 1) v + 1 else v }
+    val index = TextOps.minhashIndex(base)
+      .unionByName(Seq((9000000L, near)).toDF("doc_id", "minhash"))
+    val root = tmpRoot()
+    MinhashStore.build(index, root)
+    val (round, jobs) =
+      jobsDuring(TextOps.incrementalDedupRoundIndexed(delta, root))
+    val st = round.probeStats.get
+    assert(st.fullScanSegments == 0 && st.partsTouched > 0, st)
+    assert(jobs <= 5, s"pruned-path round ran $jobs jobs")
+    val got = rows(round.dups)
+    assert(got.contains((id, 9000000L, 0.5156)), got)
+    assert(got == rows(TextOps.incrementalDedupRound(delta, index).dups))
+  }
+
+  test("a new segment's bloom.bin equals stat.bloomFilter over its kh set") {
+    val sigs = TextOps.minhashIndex(docsAt(sf))
+    val root = tmpRoot()
+    MinhashStore.build(sigs, root)
+    val seg = MinhashStore.meta(spark, root).segments.head
+    val in = Files.newInputStream(Paths.get(root, seg, "bloom.bin"))
+    val got = try BloomFilter.readFrom(in) finally in.close()
+    val want = banded(sigs).select(MinhashStore.khCol.as("kh"))
+      .stat.bloomFilter("kh", sigs.count() * 32, MinhashStore.BloomFpp)
+    assert(got == want)
+  }
+
+  test("probeKeys counts the capped probe rows") {
+    val all = docsAt(sf)
+    val root = tmpRoot()
+    MinhashStore.build(TextOps.minhashIndex(
+      all.filter(expr("pmod(doc_id, 4) != 0"))), root)
+    // 100 copies of one text: each of its buckets holds 100 delta docs,
+    // of which the probe keeps 64
+    val delta = all.filter(expr("pmod(doc_id, 4) = 0"))
+      .unionByName(spark.range(100).crossJoin(all.orderBy("doc_id").limit(1)
+        .select("text")).select((col("id") + 2000000L).as("doc_id"),
+          col("text")))
+    val round = TextOps.incrementalDedupRoundIndexed(delta, root)
+    val capped = banded(TextOps.minhashIndex(delta))
+      .withColumn("rk", row_number().over(Window
+        .partitionBy("band", "band_hash").orderBy("doc_id")))
+      .filter(col("rk") <= 64).count()
+    assert(capped < delta.count() * 32, "the fixture must hit the cap")
+    assert(round.probeStats.get.probeKeys == capped)
   }
 }
 

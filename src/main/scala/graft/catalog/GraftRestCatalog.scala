@@ -119,7 +119,8 @@ class GraftRestCatalog extends TableCatalog with SupportsNamespaces
     * (GraftTable.conf is a def), so a multi-query job over an STS-style
     * token keeps working as long as the service keeps vending; a single
     * task only ever needs the token it was planned with (executors get
-    * a SerializableConfiguration snapshot per query, like the
+    * the planned conf as a `SharedConf` broadcast keyed by its entries,
+    * so a refreshed token ships as a new broadcast, like the
     * reference's per-split storage options). */
   private final class CredentialSource(ident: Identifier,
       initial: Map[String, String]) {

@@ -10,7 +10,6 @@ import org.apache.spark.{SparkContext, TaskContext, TaskKilledException}
 import org.apache.spark.sql.{DataFrame, GraftShim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.OutputWriter
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.format.{FragmentStats, GraftFormat}
 import graft.format.GraftFormat.{ColStats, FragmentMeta}
@@ -30,7 +29,9 @@ final case class NewFileInfo(relPath: String, rows: Long, sizeBytes: Long,
   * its stats. Files are invisible until a manifest references them;
   * [[abort]] deletes every file this writer created. The UUIDs' high 64
   * bits are `writeId`, so one batch write's files share a name prefix.
-  * `conf` must come from `GraftShim.parquetWriteConf`. */
+  * `conf` must come from `GraftShim.parquetWriteConf`. Every caller
+  * ships it as the [[SharedConf]] broadcast, so the tasks of an
+  * executor share one conf, which this writer only reads. */
 final class FragmentWriter(tableDir: Path, conf: Configuration,
     maxRows: Long = Long.MaxValue,
     writeId: Long = UUID.randomUUID().getMostSignificantBits) {
@@ -110,7 +111,7 @@ object FragmentWriter {
     val sc = df.sparkSession.sparkContext
     val conf = GraftShim.parquetWriteConf(df.sparkSession, df.schema)
     options.foreach { case (k, v) => conf.set(k, v) }
-    val sconf = new SerializableConfiguration(conf)
+    val sconf = SharedConf.broadcast(sc, conf)
     val dirStr = tableDir.toString
     val writeId = UUID.randomUUID().getMostSignificantBits
     val prefix = new UUID(writeId, 0L).toString.take(19)
@@ -120,7 +121,8 @@ object FragmentWriter {
       val rdd = df.queryExecution.toRdd
       val out = new Array[Seq[NewFileInfo]](rdd.getNumPartitions)
       sc.runJob(rdd, (ctx: TaskContext, it: Iterator[InternalRow]) => {
-        val w = new FragmentWriter(new Path(dirStr), sconf.value, maxRows, writeId)
+        val w = new FragmentWriter(new Path(dirStr), sconf.value.value, maxRows,
+          writeId)
         try {
           while (it.hasNext) {
             if (ctx.isInterrupted()) throw new TaskKilledException("write cancelled")

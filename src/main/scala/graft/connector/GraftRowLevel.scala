@@ -3,6 +3,7 @@ package graft.connector
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{GraftShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
@@ -69,8 +70,10 @@ class GraftDeltaWrite(table: GraftTable, info: LogicalWriteInfo)
 
   private val snapshot = table.manifest
   private val qualDir: Path = table.fs.makeQualified(table.dir)
-  private val sconf = new SerializableConfiguration(
-    GraftShim.parquetWriteConf(SparkSession.active, info.schema()))
+  private val writeConf =
+    GraftShim.parquetWriteConf(SparkSession.active, info.schema())
+  private val sconf =
+    SharedConf.broadcast(SparkSession.active.sparkContext, writeConf)
 
   override def toBatch: DeltaBatchWrite = this
 
@@ -86,7 +89,7 @@ class GraftDeltaWrite(table: GraftTable, info: LogicalWriteInfo)
     if (newFiles.isEmpty && partialsByFrag.isEmpty) return
 
     val spark = SparkSession.active
-    val fs = qualDir.getFileSystem(sconf.value)
+    val fs = qualDir.getFileSystem(writeConf)
     val snapByFrag = snapshot.fragments.map(f => f.id -> f).toMap
 
     // distributed merge: one task per touched fragment folds its partial
@@ -108,7 +111,7 @@ class GraftDeltaWrite(table: GraftTable, info: LogicalWriteInfo)
         .parallelize(inputs, math.min(inputs.size, 32))
         .map { case (fragId, rowCount, existingOpt, partials) =>
           val dir = new Path(dirStr)
-          val ffs = dir.getFileSystem(conf.value)
+          val ffs = dir.getFileSystem(conf.value.value)
           val existing = existingOpt
             .map(GraftFormat.readDeletionFile(ffs, dir, _))
             .getOrElse(Array.empty[Long])
@@ -169,7 +172,7 @@ class GraftDeltaWrite(table: GraftTable, info: LogicalWriteInfo)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = qualDir.getFileSystem(sconf.value)
+    val fs = qualDir.getFileSystem(writeConf)
     messages.collect { case m: GraftDeltaCommit => m }.foreach { m =>
       (m.newFiles.map(_.relPath) ++ m.partialDvs.map(_._2)).foreach { rel =>
         try fs.delete(new Path(qualDir, rel), false)
@@ -188,7 +191,7 @@ final case class GraftDeltaCommit(
 class GraftDeltaWriterFactory(
     tableDirStr: String,
     writeSchemaJson: String,
-    conf: SerializableConfiguration) extends DeltaWriterFactory {
+    conf: Broadcast[SerializableConfiguration]) extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new GraftDeltaWriter(tableDirStr, writeSchemaJson, conf)
@@ -197,11 +200,11 @@ class GraftDeltaWriterFactory(
 class GraftDeltaWriter(
     tableDirStr: String,
     writeSchemaJson: String,
-    conf: SerializableConfiguration) extends DeltaWriter[InternalRow] {
+    conf: Broadcast[SerializableConfiguration]) extends DeltaWriter[InternalRow] {
 
   private val tableDir = new Path(tableDirStr)
-  private lazy val fs = tableDir.getFileSystem(conf.value)
-  private val files = new FragmentWriter(tableDir, conf.value)
+  private lazy val fs = tableDir.getFileSystem(conf.value.value)
+  private val files = new FragmentWriter(tableDir, conf.value.value)
 
   // per-fragment deleted row indexes (bounded by rows this task touches)
   private val dels = mutable.HashMap.empty[Int, mutable.ArrayBuilder.ofLong]

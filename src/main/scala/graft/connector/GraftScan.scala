@@ -3,6 +3,7 @@ package graft.connector
 import java.util.OptionalLong
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{GraftShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BitwiseOr, BoundReference, Expression, Literal, UnsafeProjection}
@@ -808,8 +809,11 @@ class GraftScan(
   }
 
   /** Built once per scan: the planner and AQE each ask their own
-    * BatchScanExec copy, and every build broadcasts the Hadoop conf.
-    * Runtime filters prune partitions, never this parquet read. */
+    * BatchScanExec copy, and every build has Spark broadcast the parquet
+    * reader's Hadoop conf. The factory's own conf (deletion vectors) is
+    * the [[SharedConf]] broadcast, shipped once per distinct conf rather
+    * than inside every task. Runtime filters prune partitions, never
+    * this parquet read. */
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   private lazy val readerFactory: PartitionReaderFactory = {
@@ -873,7 +877,7 @@ class GraftScan(
       spark, physicalDataSchema, parquetSchema, pushed.toIndexedSeq,
       hadoopConf)
     new GraftReaderFactory(readFunc, physicalFields.size, specs, countStar,
-      new SerializableConfiguration(hadoopConf))
+      SharedConf.broadcast(spark.sparkContext, hadoopConf))
   }
 }
 
@@ -918,13 +922,18 @@ case class GraftBucketedPartition(fp: GraftFragmentPartition, bucketId: Int)
   override def partitionKey(): InternalRow = InternalRow(bucketId)
 }
 
+/** Executor-side reader of graft partitions. It holds no Hadoop conf
+  * of its own: `conf` is the [[SharedConf]] broadcast, so a task
+  * deserializes a small handle, and the executor reads the shared conf
+  * only, to open deletion vectors. */
 class GraftReaderFactory(
     readFunc: org.apache.spark.sql.execution.datasources.PartitionedFile =>
       Iterator[InternalRow],
     nPhysical: Int,
     specs: Seq[ProjSpec],
     countStar: Boolean,
-    conf: SerializableConfiguration) extends PartitionReaderFactory {
+    private[graft] val conf: Broadcast[SerializableConfiguration])
+  extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
@@ -982,7 +991,7 @@ class GraftReaderFactory(
 
     // deletion vector, loaded once per fragment (sorted -> binary search)
     private val deleted: Array[Long] = fp.deletionAbsPath match {
-      case Some(p) => GraftFormat.readDeletionFileAbs(p, conf.value)
+      case Some(p) => GraftFormat.readDeletionFileAbs(p, conf.value.value)
       case None => Array.empty[Long]
     }
     private var skipped = 0L

@@ -6,7 +6,6 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.types._
-import org.apache.spark.util.SerializableConfiguration
 
 /** Out-of-line blob storage (reference: `lance-encoding:blob=true`
   * columns, BlobUtils.java:23-57; declared via table property
@@ -57,14 +56,14 @@ object BlobStore {
     val physical = physicalSchema(schema, blobCols)
     val blobIdx = blobCols.map(schema.fieldIndex).toSet
     val blobDirStr = new Path(tableDir, BlobDirName).toString
-    val sconf = new SerializableConfiguration(
-      df.sparkSession.sessionState.newHadoopConf())
+    val sconf = graft.connector.SharedConf.broadcast(
+      df.sparkSession.sparkContext, df.sparkSession.sessionState.newHadoopConf())
     val enc = RowEncoder.encoderFor(physical)
     df.mapPartitions { rows =>
       if (!rows.hasNext) Iterator.empty
       else {
         val blobDir = new Path(blobDirStr)
-        val fs = blobDir.getFileSystem(sconf.value)
+        val fs = blobDir.getFileSystem(sconf.value.value)
         fs.mkdirs(blobDir)
         val name = java.util.UUID.randomUUID().toString + ".bin"
         val rel = s"$BlobDirName/$name"

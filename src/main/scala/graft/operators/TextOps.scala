@@ -326,10 +326,15 @@ object TextOps {
     *
     * Both rounds run the probe to completion inside the call and
     * cache nothing; `survivors` and `updatedIndex` drop the dup ids
-    * with a filter, so any number of actions over the frames is safe. */
-  case class IncrementalDedupRound(dups: DataFrame, survivors: DataFrame,
-      updatedIndex: DataFrame,
-      probeStats: Option[graft.ops.MinhashStore.ProbeStats])
+    * with a filter, so any number of actions over the frames is safe.
+    * `updatedIndex` is built when first read (on a store, resolving it
+    * lists every segment's signature files); its index part is fixed
+    * when the round runs, so a later append does not show in it. */
+  final class IncrementalDedupRound(val dups: DataFrame,
+      val survivors: DataFrame, index: => DataFrame,
+      val probeStats: Option[graft.ops.MinhashStore.ProbeStats]) {
+    lazy val updatedIndex: DataFrame = index
+  }
 
   /** [[IncrementalDedupRound]] against a [[graft.ops.MinhashStore]] —
     * the O(delta) daily probe (r17 VERDICT #2). Candidate pairs, scores
@@ -347,7 +352,8 @@ object TextOps {
       threshold: Double = 0.5): IncrementalDedupRound = {
     val spark = delta.sparkSession
     val m = graft.ops.MinhashStore.meta(spark, root)
-    dedupRound(delta, graft.ops.MinhashStore.sigsAll(spark, root),
+    dedupRound(delta,
+      graft.ops.MinhashStore.segmentSigs(spark, root, m.segments),
       m.bands, m.r, threshold)(
       graft.ops.MinhashStore.probe(spark, root, _))
   }
@@ -423,7 +429,7 @@ object TextOps {
     * caps the bucket rows and one reads the kept candidates'
     * signatures. Per-task lists of at most [[BucketCap]] ids per key
     * merge on the driver, so no shuffle runs. */
-  private def dedupRound(delta: DataFrame, index: DataFrame, bands: Int,
+  private def dedupRound(delta: DataFrame, index: => DataFrame, bands: Int,
       r: Int, threshold: Double)(
       probe: Seq[graft.ops.MinhashStore.ProbeKey] => graft.ops.MinhashStore.Probe)
       : IncrementalDedupRound = {
@@ -508,7 +514,7 @@ object TextOps {
     def notDup(df: DataFrame): DataFrame =
       if (dupIds.isEmpty) df
       else df.filter(!col("doc_id").isin(dupIds: _*) || col("doc_id").isNull)
-    IncrementalDedupRound(dups, notDup(delta),
+    new IncrementalDedupRound(dups, notDup(delta),
       index.unionByName(notDup(minhashIndex(delta, perms))), p.stats)
   }
 

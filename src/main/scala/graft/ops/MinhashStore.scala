@@ -10,8 +10,9 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.util.sketch.BloomFilter
+
+import graft.connector.SharedConf
 
 /** Persisted, probe-prunable MinHash near-dup index (r17 VERDICT #2).
   *
@@ -234,9 +235,9 @@ object MinhashStore {
       val sp = sigParts(n)
       val p = parts(n * bands)
       Seq("sigs", "buckets").foreach(d => fs.mkdirs(new Path(segDir, d)))
-      val sigsConf = new SerializableConfiguration(
+      val sigsConf = SharedConf.broadcast(sc,
         GraftShim.parquetWriteConf(spark, SigsFileSchema))
-      val bucketsConf = new SerializableConfiguration(
+      val bucketsConf = SharedConf.broadcast(sc,
         GraftShim.parquetWriteConf(spark, BucketsFileSchema))
       val dir = segDir.toString
       // reducer i < sp holds sig partition i, reducer sp + b bucket
@@ -257,8 +258,8 @@ object MinhashStore {
             else (s"$dir/buckets/p=${i - sp}/part-${i - sp}.parquet", bucketsConf)
           // an earlier attempt's file is replaced, never read twice
           val path = new Path(file)
-          path.getFileSystem(conf.value).delete(path, false)
-          val w = GraftShim.newParquetRowWriter(file, conf.value)
+          path.getFileSystem(conf.value.value).delete(path, false)
+          val w = GraftShim.newParquetRowWriter(file, conf.value.value)
           try it.foreach(kv => w.write(kv._2)) finally w.close()
         }, 0 until sp + p, (_: Int, _: Unit) => (), ())
       // the empty filter comes from the aggregate `stat.bloomFilter`
@@ -334,8 +335,13 @@ object MinhashStore {
   /** Union of every segment's signatures — the logical (doc_id,
     * minhash) index content, for compaction and full-scan consumers. */
   def sigsAll(spark: SparkSession, root: String): DataFrame =
-    meta(spark, root).segments
-      .map(seg => readSigs(spark, root, seg).select("doc_id", "minhash"))
+    segmentSigs(spark, root, meta(spark, root).segments)
+
+  /** Union of the signatures of `segments` (each resolves its own
+    * parquet read, listing its `sigs/` directory). */
+  private[graft] def segmentSigs(spark: SparkSession, root: String,
+      segments: Seq[String]): DataFrame =
+    segments.map(seg => readSigs(spark, root, seg).select("doc_id", "minhash"))
       .reduce(_ unionByName _)
 
   /** One (band, band_hash) probe key of a round: its [[khCol]] and

@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{array_contains, col, typedLit}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructType}
 
 import graft.connector.GraftTable
@@ -307,9 +307,13 @@ case class AnnTopKIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       }
       .sortBy { case (cid, d) => (d, cid) }
       .map(_._1)
+    // the list ids travel as one array literal, a reference object in
+    // generated code, so a new query vector reuses the compiled classes
+    // (IN inlines its ids). Assignments are in corpus order, not
+    // clustered by cid, so an IN pushdown pruned no row group.
     def candPlan(nprobe: Int): LogicalPlan = GraftShim.planOf(
       probe.assign
-        .filter(col("cid").isin(ranked.take(nprobe).toIndexedSeq: _*))
+        .filter(array_contains(typedLit(ranked.take(nprobe).toSeq), col("cid")))
         .select(probe.idName))
     // a user-set nprobe is authoritative; the DEFAULT is keyed to list
     // occupancy (r15 VERDICT #5): nLists is fixed at build time, so

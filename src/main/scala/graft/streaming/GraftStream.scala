@@ -503,7 +503,7 @@ class GraftMicroBatchStream(table: GraftTable,
       }
     new graft.connector.GraftReaderFactory(
       readFunc, dataCols.length, specs, countStar = false,
-      new org.apache.spark.util.SerializableConfiguration(hadoopConf))
+      graft.connector.SharedConf.broadcast(spark.sparkContext, hadoopConf))
   }
 
   override def commit(end: Offset): Unit = ()

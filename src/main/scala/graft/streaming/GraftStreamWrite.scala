@@ -1,12 +1,13 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.connector.{FragmentWriter, GraftTable, NewFileInfo}
+import graft.connector.{FragmentWriter, GraftTable, NewFileInfo, SharedConf}
 import graft.format.GraftFormat
 
 /** Structured Streaming SINK for graft tables (SURVEY.md 2.8 — the
@@ -31,9 +32,10 @@ class GraftStreamingWrite(table: GraftTable, info: LogicalWriteInfo)
 
   private val qualDir: Path = table.fs.makeQualified(table.dir)
   private val queryId: String = info.queryId()
-  private val sconf = new SerializableConfiguration(
-    org.apache.spark.sql.GraftShim.parquetWriteConf(
-      org.apache.spark.sql.SparkSession.active, info.schema()))
+  private val writeConf = org.apache.spark.sql.GraftShim.parquetWriteConf(
+    org.apache.spark.sql.SparkSession.active, info.schema())
+  private val sconf = SharedConf.broadcast(
+    org.apache.spark.sql.SparkSession.active.sparkContext, writeConf)
 
   private def epochKey = s"stream_epoch.$queryId"
 
@@ -45,7 +47,7 @@ class GraftStreamingWrite(table: GraftTable, info: LogicalWriteInfo)
     val files = messages.collect {
       case m: GraftStreamCommit => m.files
     }.flatten.toSeq
-    val fs = qualDir.getFileSystem(sconf.value)
+    val fs = qualDir.getFileSystem(writeConf)
     try {
       GraftFormat.commitWithRetry(fs, qualDir) { latestOpt =>
         val latest = latestOpt.getOrElse(throw new IllegalStateException(
@@ -71,7 +73,7 @@ class GraftStreamingWrite(table: GraftTable, info: LogicalWriteInfo)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = qualDir.getFileSystem(sconf.value)
+    val fs = qualDir.getFileSystem(writeConf)
     messages.collect { case m: GraftStreamCommit => m }.foreach { m =>
       m.files.foreach { fi =>
         try fs.delete(new Path(qualDir, fi.relPath), false)
@@ -88,12 +90,14 @@ final case class GraftStreamCommit(files: Seq[NewFileInfo])
 
 class GraftStreamingWriterFactory(
     tableDirStr: String,
-    conf: SerializableConfiguration) extends StreamingDataWriterFactory {
+    conf: Broadcast[SerializableConfiguration])
+  extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
     new org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-      private val files = new FragmentWriter(new Path(tableDirStr), conf.value)
+      private val files = new FragmentWriter(new Path(tableDirStr),
+        conf.value.value)
       override def write(row: InternalRow): Unit = files.write(row)
       override def commit(): WriterCommitMessage = GraftStreamCommit(files.commit())
       override def abort(): Unit = files.abort()

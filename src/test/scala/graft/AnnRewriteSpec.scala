@@ -315,13 +315,11 @@ class AnnRewriteSpec extends AnyFunSuite {
   private def probedCids(df: org.apache.spark.sql.DataFrame): Option[Set[Int]] =
     df.queryExecution.optimizedPlan.collectFirst {
       case org.apache.spark.sql.catalyst.plans.logical.Filter(
-          org.apache.spark.sql.catalyst.expressions.In(a, list), _)
+          org.apache.spark.sql.catalyst.expressions.ArrayContains(
+            ids: org.apache.spark.sql.catalyst.expressions.Literal, a), _)
           if a.references.map(_.name).exists(_ == "cid") =>
-        list.map(_.eval().asInstanceOf[Int]).toSet
-      case org.apache.spark.sql.catalyst.plans.logical.Filter(
-          org.apache.spark.sql.catalyst.expressions.InSet(a, set), _)
-          if a.references.map(_.name).exists(_ == "cid") =>
-        set.map(_.asInstanceOf[Int])
+        ids.value.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+          .toIntArray().toSet
     }
 
   /** The nprobe a planned probe actually used. */
@@ -622,6 +620,40 @@ class AnnRewriteSpec extends AnyFunSuite {
         vecs.take(3).map(v => sqlQ(v, filteredFrom)) :+
         sqlQ(vecs(4), derivedFrom)).map(ids)
       assert(warm.toSeq == cold.toSeq, "cached planning changed a result")
+      warm.foreach(r => assert(r.length == 10))
+    }
+  }
+
+  test("warm SQL-form ANN queries probing different lists compile no " +
+      "code; each answer equals the query planned from cold caches") {
+    val (_, df) = freshIndexed("anncodegen")
+    VectorFunctions.register(spark)
+    df().createOrReplaceTempView("anncodegen_t")
+    def sqlQ(v: Seq[Float]) = spark.sql("SELECT vec_id, cosine_sim(" +
+      v.map(x => s"CAST($x AS FLOAT)").mkString("embedding, array(", ", ", ")") +
+      ") AS score FROM anncodegen_t ORDER BY score DESC LIMIT 10")
+    def ids(q: org.apache.spark.sql.DataFrame) =
+      q.collect().map(_.getLong(0)).toSeq
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    withRule {
+      val vecs = Tables.load(spark, sf, "embeddings").orderBy("vec_id")
+        .select("embedding").limit(64).collect().map(_.getSeq[Float](0))
+      ids(sqlQ(vecs.head)) // warm-up: the index metadata and the classes
+      // query vectors whose probes differ from each other and from the
+      // warm-up's
+      val seen = scala.collection.mutable.Set(probedCids(sqlQ(vecs.head)))
+      val picked = vecs.tail.filter(v => seen.add(probedCids(sqlQ(v)))).take(3)
+      assume(picked.length == 3, "fixture lacks three distinct probes")
+      assert(seen.forall(_.nonEmpty), "every query must probe the index")
+      val before = compiles.getCount
+      val warm = picked.map(v => ids(sqlQ(v)))
+      assert(compiles.getCount == before, s"3 warm ANN queries compiled " +
+        s"${compiles.getCount - before} classes")
+      graft.plans.AnnTopKIndexRewrite.indexMetas.clear()
+      graft.plans.AnnTopKIndexRewrite.survivorCounts.clear()
+      assert(picked.map(v => ids(sqlQ(v))).toSeq == warm.toSeq,
+        "cached planning changed a result")
       warm.foreach(r => assert(r.length == 10))
     }
   }

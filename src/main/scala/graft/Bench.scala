@@ -1,36 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.util.control.NonFatal
+
+/** Gate timer: runs each [[SparkEntry]] query to its full answer and
+  * prints one JSON line to stdout,
+  * `{"metric":"total","value":…,"unit":"sec","queries":{…},"spread":{…},"errs":{…},"sf":"…"}`.
+  * Env: `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS`,
+  * `SPARK_GRAFT_BENCH_ONLY=q01,t02` (query-name prefixes to run) and
+  * `SPARK_GRAFT_BENCH_CONF="k=v;k=v"` (session confs);
+  * `tools/scale_probe.py` and `tools/skew_probe.py` set the last two. */
 object Bench {
-  /** One bench phase's worth of results, in artifact order. The batch
-    * phase produces one in-process; the streaming phase (s01/s02, extra
-    * SparkSessions + RocksDB state stores) runs in its OWN child JVM
-    * (r11 VERDICT ask #2: sharing the sweep JVM with 89 batch queries
-    * pushed the suite into memory/scheduler saturation — 13 isolated
-    * retries on the closing pass — drowning round-over-round signal)
-    * and is parsed back from the child's artifact line. */
-  private case class PhaseResults(
-      queries: Seq[(String, Double)],
-      spread: Seq[(String, (Double, Double))],
-      phases: Seq[(String, Double)],
-      errs: Seq[(String, String)],
-      retried: Seq[String],
-      // the subset of `retried` whose isolated rerun won DECISIVELY
-      // (BenchGuard.contentionShaped's 0.8x margin): the contention
-      // signature. A genuine regression retries too, but its rerun
-      // hovers near the original median — counting only decisive wins
-      // toward the contended_suspect stamp keeps a real multi-query
-      // regression from routing every future sweep to
-      // BENCH_CONTENDED.json forever. The streaming child emits its own
-      // retried_won (same margin), parsed back in runChildPhase, so
-      // streaming contention still counts.
-      retriedWon: Seq[String])
-
-  /** Queries that run in the isolated streaming phase: the two
-    * streaming gate lifecycles. */
-  private def isStreaming(name: String): Boolean = name.startsWith("s0")
+  private val Repeats = 3
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -44,380 +27,54 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // JVM/codegen/parquet-reader warmup (generic operations, not the
-    // benchmarked queries): without it the first timed query absorbs
-    // ~3-5s of one-time JIT + classloading that no steady-state
-    // deployment pays per query
+    // generic warm-up, so the first timed query does not absorb the
+    // JVM's one-time JIT, classloading and parquet-reader setup
     spark.range(0, 1000000).selectExpr("sum(id)", "count(distinct id % 100)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().collect()
-    // probe aid: SPARK_GRAFT_BENCH_CONF="k=v;k=v" seeds session confs
-    // (the skew probe lowers spark.graft.jaccard.dfCap this way; the
-    // driver never sets it, so the contract is unchanged)
     sys.env.get("SPARK_GRAFT_BENCH_CONF").foreach(_.split(';')
       .filter(_.contains('=')).foreach { kv =>
         val i = kv.indexOf('=')
         spark.conf.set(kv.take(i).trim, kv.drop(i + 1).trim)
       })
-    // local iteration aid: SPARK_GRAFT_BENCH_ONLY=q01,t02 restricts the
-    // run (the driver never sets it, so the contract is unchanged)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) =>
-        names.exists(n.startsWith) }
-      case None => SparkEntry.queries
-    }
-    // Each query runs REPEATS times back-to-back; the reported number is
-    // the per-query MEDIAN (with min/max spread alongside), so a single
-    // contended run on the bench machine can no longer inflate the
-    // round's artifact — r5's official numbers read 1.7x high from
-    // exactly that.
-    val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt.max(1)
-    // environment evidence (r12 VERDICT ask #4): other-JVM count + 1-min
-    // load average at sweep start/end land in the artifact, so a
-    // contended run self-identifies instead of requiring judge
-    // archaeology. Under sbt the parent sbt JVM always counts as one;
-    // the streaming child is gone again by the end probe.
-    // (java count, unreadable count, load1): a process whose command is
-    // unreadable (another user's, /proc-restricted) is counted
-    // SEPARATELY rather than silently as not-java — evidence that
-    // exonerates what it cannot see is worse than none; and "java" must
-    // be the executable's basename, not a substring of its path
-    def envProbe(): (Int, Int, Double) = {
-      val (jvms, unreadable) = try {
-        val self = ProcessHandle.current().pid()
-        var j = 0; var u = 0
-        ProcessHandle.allProcesses().iterator().asScala.foreach { p =>
-          if (p.pid() != self) {
-            val info = p.info()
-            val cmd: String = info.command().orElse(
-              info.commandLine().map[String](_.split(' ').head).orElse(null))
-            Option(cmd) match {
-              case None => u += 1
-              case Some(c) =>
-                // "java" or a versioned launcher ("java17"), never javac/
-                // javadoc/javaws — tool processes aren't bench contention
-                val n = new java.io.File(c).getName
-                if (n == "java" ||
-                    (n.startsWith("java") && n.length > 4 &&
-                      n.drop(4).forall(_.isDigit))) j += 1
-            }
-          }
-        }
-        (j, u)
-      } catch { case _: Throwable => (-1, -1) }
-      val load = try java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean.getSystemLoadAverage
-      catch { case _: Throwable => -1.0 }
-      (jvms, unreadable, load)
-    }
-    val (jvmsStart, unreadableStart, loadStart) = envProbe()
-    case class Run(sec: Double, phases: Map[String, Double],
-        nested: Set[String], err: Option[String])
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Run = {
-      BenchPhases.clear()
-      val t0 = System.nanoTime()
-      // a failing query must surface in the artifact, not masquerade as a
-      // fast success (r7 VERDICT minor): record the error per run/query
-      val err = try { fn(spark, sfDir).count(); None } catch {
-        case t: Throwable => Some((t.getClass.getSimpleName + ": " +
-          Option(t.getMessage).getOrElse("")).replaceAll("[\"\\n\\r]", " ").take(160))
-      }
-      Run((System.nanoTime() - t0) / 1e9, BenchPhases.snapshot,
-        BenchPhases.nestedSnapshot, err)
-    }
-    // Phase split: on a full (driver-contract) run, the streaming
-    // lifecycles leave the shared JVM entirely — a child JVM runs them
-    // after every batch measurement (first pass AND retries) has
-    // finished. A BENCH_ONLY run keeps the old single-JVM behavior so
-    // isolated re-measures of streaming queries still work.
-    val childPhase = only.isEmpty && selected.keys.exists(isStreaming)
-    val batchSelected =
-      if (childPhase) selected.filterNot { case (n, _) => isStreaming(n) }
-      else selected
-    val firstPass: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame, Seq[Run])] =
-      batchSelected.toSeq.map { case (name, fn) => (name, fn, (1 to repeats).map(_ => timeOnce(fn))) }
-    // lower median: an actual run, so its recorded phases stay attached
-    def medianRun(runs: Seq[Run]): Run =
-      runs.sortBy(_.sec).apply((runs.size - 1) / 2)
-    // the last CLEAN committed artifact, parsed once (real JSON reader,
-    // BenchGuard.parseCommitted — the former regex parse could silently
-    // yield an empty baseline and disable the guard, r9 ADVICE):
-    // per-query medians feed the second contention signal below
-    // (BENCH_r08's driver window was UNIFORMLY contended — t23 at
-    // 32.5s on all three repeats vs 0.41s committed — which the spread
-    // rule is blind to), and the total feeds the whole-run check.
-    val (committedQ, committedTotal): (Map[String, Double], Option[Double]) = {
-      val p = java.nio.file.Paths.get("BENCH_FULL.json")
-      if (java.nio.file.Files.exists(p)) {
-        try {
-          val parsed = BenchGuard.parseCommitted(java.nio.file.Files.readString(p))
-          if (parsed._1.isEmpty) System.err.println(
-            "WARNING: BENCH_FULL.json parsed to an empty query map — " +
-              "baseline contention guard is INACTIVE this run")
-          parsed
-        } catch { case t: Throwable =>
-          System.err.println("WARNING: BENCH_FULL.json unreadable (" +
-            t.getClass.getSimpleName + ") — baseline contention guard " +
-            "is INACTIVE this run")
-          (Map.empty[String, Double], None)
-        }
-      } else (Map.empty, None)
-    }
-    // CONTENTION GUARD (thresholds + rationale live in BenchGuard,
-    // where they are unit-tested against synthetic run sets): a query
-    // is suspect if its repeat spread shows a mid-sweep stall, its
-    // median is well above the committed BENCH_FULL median, or every
-    // repeat is uniformly slow vs committed (min-based floor, r11).
-    // Suspects re-run in isolation; the LOWER median of the two run
-    // sets is reported — under contention the retry is the honest
-    // number, and for a genuine code regression both sets are slow so
-    // the regression still shows. A rerun only wins if it is itself
-    // error-free: timeOnce records a failing query as a near-zero
-    // timing, which must never displace a valid measurement.
-    def guardAndAssemble(
-        pass: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame, Seq[Run])])
-        : PhaseResults = {
-      val results: Seq[(String, Seq[Run], Boolean, Boolean)] =
-        pass.map { case (name, fn, runs) =>
-          val secs = runs.map(_.sec)
-          val clean = runs.forall(_.err.isEmpty)
-          if (BenchGuard.suspect(secs, clean, committedQ.get(name))) {
-            val rerun = (1 to repeats).map(_ => timeOnce(fn))
-            val rerunClean = rerun.forall(_.err.isEmpty)
-            val wins = BenchGuard.rerunWins(secs, rerun.map(_.sec), rerunClean)
-            // displacement uses the lenient rule (lower median is the
-            // honest number); the suspect stamp uses the 0.8x margin
-            val shaped = BenchGuard.contentionShaped(secs, rerun.map(_.sec),
-              rerunClean)
-            (name, if (wins) rerun else runs, true, shaped)
-          } else (name, runs, false, false)
-        }
-      val medians = results.map { case (n, rs, _, _) => n -> medianRun(rs) }
-      PhaseResults(
-        queries = medians.map { case (n, r) => n -> r.sec },
-        spread = results.map { case (n, rs, _, _) =>
-          n -> (rs.map(_.sec).min, rs.map(_.sec).max) },
-        // phase split for the index/table-building queries (v02/v05/
-        // v06/v07/g12/g15/...), taken from each query's median run:
-        // sub-phases (<q>.build, <q>.optimize, ...) are recorded inside
-        // the closure, and <q>.probe = total - sum(TOP-LEVEL sub-phases)
-        // — nested spans (s02's legs inside its build) are reported but
-        // never double-subtracted (BenchGuard.probeFor, r17 VERDICT #1)
-        phases = medians.flatMap { case (q, run) =>
-          run.phases.toSeq.sortBy(_._1) ++
-            BenchGuard.probeFor(q, run.sec, run.phases, run.nested)
-              .map(p => s"$q.probe" -> p)
-        },
-        errs = results.flatMap { case (n, rs, _, _) =>
-          rs.flatMap(_.err).headOption.map(n -> _) },
-        retried = results.collect { case (n, _, true, _) => n },
-        retriedWon = results.collect { case (n, _, _, true) => n })
-    }
-    val batchPhase = guardAndAssemble(firstPass)
-
-    // streaming phase, own JVM. The batch SparkSession stays up but
-    // idle (its threads park; the machine's only active workload is the
-    // child). If the child cannot be launched or returns no artifact
-    // line, fall back to running the streaming queries in-process —
-    // through the SAME guard/retry machinery as everything else — so
-    // the round artifact is never missing gate rows, and the artifact
-    // records which JVM the streaming rows came from.
-    val streamingNames = selected.keys.filter(isStreaming).toSeq.sorted
-    var streamingJvm = if (childPhase) "child" else "n/a"
-    val streamingPhase: Option[PhaseResults] =
-      if (!childPhase) None
-      else runChildPhase(streamingNames, sfDir, cpus, repeats).orElse {
-        System.err.println("WARNING: streaming child JVM failed; " +
-          "running streaming queries in-process (shared JVM)")
-        streamingJvm = "inproc-fallback"
-        val sel = selected.filter { case (n, _) => isStreaming(n) }
-        Some(guardAndAssemble(sel.toSeq.map { case (name, fn) =>
-          (name, fn, (1 to repeats).map(_ => timeOnce(fn))) }))
-      }
-
-    val all = Seq(Some(batchPhase), streamingPhase).flatten
-    def r4(v: Double): Double = math.round(v * 10000) / 10000.0
-    def obj(m: Iterable[(String, Double)]): String =
-      m.map { case (k, v) => "\"" + k + "\":" + r4(v) }.mkString("{", ",", "}")
-    val qs = obj(all.flatMap(_.queries))
-    val spread = all.flatMap(_.spread).map { case (n, (lo, hi)) =>
-      "\"" + n + "\":[" + r4(lo) + "," + r4(hi) + "]"
-    }.mkString("{", ",", "}")
-    // real JSON escaping for err strings: the in-process sanitizer only
-    // strips quotes/newlines, and child-phase errors round-trip through
-    // Jackson (a decoded TAB or backslash would corrupt the artifact
-    // and silently disable next round's BenchGuard baseline parse)
-    def jstr(s: String): String = {
-      val sb = new StringBuilder("\"")
-      s.foreach {
-        case '"' => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-        case c => sb.append(c)
-      }
-      sb.append('"').toString
-    }
-    val errs = all.flatMap(_.errs).map { case (n, e) =>
-      jstr(n) + ":" + jstr(e) }.mkString("{", ",", "}")
-    val phases = obj(all.flatMap(_.phases))
-    val retried = all.flatMap(_.retried)
-    val total = all.flatMap(_.queries).map(_._2).sum
-    // cross-check against the previously COMMITTED artifact: if this
-    // run's total disagrees by >1.5x on the full suite, the machine was
-    // contended and the artifact says so instead of publishing garbage
-    // (BENCH_r07: 206.8s driver run vs 61.2s committed / 57.7s judge)
-    val prevTotal: Option[Double] =
-      if (only.isEmpty) committedTotal else None
-    val contended = prevTotal.exists(p => total > p * 1.5)
-    if (contended) System.err.println(
-      s"WARNING: bench total ${r4(total)}s is >1.5x the committed " +
-        s"BENCH_FULL total ${prevTotal.get}s — machine contention likely; " +
-        "artifact flagged \"contended\":true, do not publish as-is")
-    val retriedJson = retried.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val (jvmsEnd, unreadableEnd, loadEnd) = envProbe()
-    // retry-count contention stamp (BenchGuard.contendedSuspect): the
-    // per-query guard keeps medians honest, this marks the whole run.
-    // Only CONTENTION-SHAPED retries count — those whose isolated rerun
-    // won DECISIVELY (BenchGuard.contentionShaped's 0.8x margin). A
-    // genuine multi-query regression retries too, but its reruns hover
-    // around the original median; counting them would route every
-    // future sweep to BENCH_CONTENDED.json and the baseline could
-    // never move again.
-    val retriedWon = all.flatMap(_.retriedWon)
-    val retriedWonJson = retriedWon
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val contendedSuspect = only.isEmpty &&
-      BenchGuard.contendedSuspect(retriedWon.size)
-    if (contendedSuspect) System.err.println(
-      s"WARNING: ${retriedWon.size} contention-shaped retries " +
-        s"(of ${retried.size} total) on a full sweep — " +
-        "the box looks externally contended; artifact stamped " +
-        "\"contended_suspect\":true, prefer a quieter window before " +
-        "committing")
-    // gate-addition guard (BenchGuard.baselineMissing): a gate query
-    // with no committed median makes every baseline-relative rule blind
-    // to it — the stamp makes the artifact say so, loudly
-    val missing =
-      if (only.isEmpty) BenchGuard.baselineMissing(selected.keys, committedQ)
-      else Seq.empty
-    if (missing.nonEmpty) System.err.println(
-      s"WARNING: gate queries with NO committed bench baseline: " +
-        s"${missing.mkString(", ")} — BenchGuard's baseline/uniform rules " +
-        "are blind to them; commit this sweep (or re-run after the last " +
-        "gate addition) to close the gap")
-    val missingJson = missing.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val env = s"""{"other_jvms_start":$jvmsStart,"other_jvms_end":$jvmsEnd,""" +
-      s""""procs_unreadable_start":$unreadableStart,""" +
-      s""""procs_unreadable_end":$unreadableEnd,""" +
-      s""""load1_start":${r4(loadStart)},"load1_end":${r4(loadEnd)}}"""
-    val line =
-      s"""{"metric":"total","value":${r4(total)},"unit":"sec","queries":$qs,"spread":$spread,"phases":$phases,"errs":$errs,"retried":$retriedJson,"retried_won":$retriedWonJson,"contended":$contended,"contended_suspect":$contendedSuspect,"baseline_missing":$missingJson,"env":$env,"repeats":$repeats,"streaming_jvm":"$streamingJvm","sf":"$sfDir"}"""
-    // the full JSON also lands as a file: the driver's stdout tail can
-    // truncate a long line (BENCH_r04 lost its first 8 queries), and the
-    // judge diffs rounds from this artifact. A contended run must NOT
-    // clobber the last clean committed artifact — it lands beside it.
-    // contended_suspect routes beside the clean artifact too: a 1.3x
-    // uniform inflation sits under the 1.5x total trigger but 6+
-    // retries say the box was busy — writing it to BENCH_FULL.json
-    // would poison next round's guard baseline exactly like r10's did
-    // artifact hygiene (r16 VERDICT #7): only a PUBLISH run may write
-    // the canonical BENCH_FULL.json (the committed sweep other runs
-    // baseline against). Unpublished clean runs — e.g. the driver's
-    // gate re-run, whose numbers live in its own BENCH_rNN.json — land
-    // in a scratch file so one filename never holds two runs' numbers.
-    val publish = sys.env.get("SPARK_GRAFT_BENCH_PUBLISH").contains("1")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(
-        if (only.nonEmpty) "BENCH_PARTIAL.json"
-        else if (contended || contendedSuspect) "BENCH_CONTENDED.json"
-        else if (publish) "BENCH_FULL.json"
-        else "BENCH_FULL_run.json"),
-      line + "\n")
-    // unconditional mirror, written ATOMICALLY (temp + move): the r17
-    // round-over-round comparison was lost to driver-side stdout tail
-    // truncation — a fixed-name file the driver can always read makes a
-    // lost tail unable to blind the next round's PERF diff (r18 VERDICT
-    // #8). The routing file above stays authoritative for hygiene; this
-    // is the crash-safe copy of THIS run, whatever its quality stamps.
-    try {
-      val tmp = java.nio.file.Files.createTempFile(
-        java.nio.file.Paths.get("."), ".bench_last", ".json")
-      java.nio.file.Files.writeString(tmp, line + "\n")
-      java.nio.file.Files.move(tmp, java.nio.file.Paths.get("BENCH_LAST.json"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } catch { case t: Throwable => System.err.println(
-      "WARNING: BENCH_LAST.json mirror failed: " + t.getClass.getSimpleName) }
-    println(line)
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').map(_.trim))
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+    println(timeAll(spark, sfDir, selected))
     spark.stop()
   }
 
-  /** Run the named queries in a child `graft.Bench` JVM (same
-    * classpath + JVM flags as this forked run) and parse its artifact
-    * line back into a [[PhaseResults]]. The child sees
-    * SPARK_GRAFT_BENCH_ONLY, so it follows the single-JVM path, applies
-    * the same repeat/median/guard machinery against the same committed
-    * baseline, and writes BENCH_PARTIAL.json (which we ignore — its
-    * stdout line is the hand-off). Returns None on any launch/parse
-    * failure so the caller can fall back in-process. */
-  private def runChildPhase(names: Seq[String], sfDir: String, cpus: String,
-      repeats: Int): Option[PhaseResults] = {
-    if (names.isEmpty) return None
-    try {
-      // launch via StormHarness (one copy of the child-JVM machinery);
-      // stdout goes to a file so the parent never blocks on a pipe: a
-      // child whose query or spark.stop() deadlocks (the saturation
-      // scenario the child JVM exists to isolate) must time out into
-      // the in-process fallback, not hang the whole bench run
-      val timeoutSec = sys.env.getOrElse(
-        "SPARK_GRAFT_BENCH_CHILD_TIMEOUT_SEC", "900").toLong
-      val h = StormHarness.launchJvm("graft.Bench", Map(
-        "SPARK_GRAFT_BENCH_ONLY" -> names.mkString(","),
-        "SPARK_GRAFT_SF_DIR" -> sfDir,
-        "SPARK_GRAFT_CPUS" -> cpus,
-        "SPARK_GRAFT_BENCH_REPEATS" -> repeats.toString))
-      val (exit, out) = StormHarness.await(h, timeoutSec)
-      if (exit == -1) {
-        System.err.println(s"WARNING: streaming child JVM exceeded " +
-          s"${timeoutSec}s and was killed; falling back in-process")
-        return None
+  /** Runs each query [[Repeats]] times to its full answer through the
+    * `noop` sink, which executes the whole physical plan, final sort
+    * included (a `.count()` would let Catalyst prune projections,
+    * aggregates and sorts). Returns the JSON line: per query the median
+    * seconds (`queries`), [min, max] (`spread`) and the first error of
+    * a failing run (`errs`); `value` is the sum of the medians. */
+  def timeAll(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)]): String = {
+    def r4(v: Double): Double = math.round(v * 10000) / 10000.0
+    val results = queries.map { case (name, fn) =>
+      val runs = (1 to Repeats).map { _ =>
+        val t0 = System.nanoTime()
+        val err = try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None
+        } catch { case NonFatal(t) =>
+          Some(s"${t.getClass.getSimpleName}: ${Option(t.getMessage).getOrElse("")}".take(160))
+        }
+        ((System.nanoTime() - t0) / 1e9, err)
       }
-      val line = out.linesIterator
-        .filter(_.contains("\"metric\"")).toSeq.lastOption
-      if (exit != 0 || line.isEmpty) {
-        System.err.println(s"WARNING: streaming child exited $exit " +
-          s"with ${if (line.isEmpty) "no" else "an"} artifact line")
-        return None
-      }
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val root = mapper.readTree(line.get)
-      def strMap(field: String): Seq[(String, String)] =
-        Option(root.get(field)).toSeq.flatMap { n =>
-          n.properties().asScala.toSeq.map(e => e.getKey -> e.getValue.asText()) }
-      def numMap(field: String): Seq[(String, Double)] =
-        Option(root.get(field)).toSeq.flatMap { n =>
-          n.properties().asScala.toSeq.collect {
-            case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble() } }
-      Some(PhaseResults(
-        queries = numMap("queries"),
-        spread = Option(root.get("spread")).toSeq.flatMap { n =>
-          n.properties().asScala.toSeq.map { e =>
-            e.getKey -> (e.getValue.get(0).asDouble(), e.getValue.get(1).asDouble()) } },
-        phases = numMap("phases"),
-        errs = strMap("errs"),
-        retried = Option(root.get("retried")).toSeq.flatMap(
-          _.elements().asScala.toSeq.map(_.asText())),
-        // the child applies the same contentionShaped margin and emits
-        // retried_won; streaming contention (historically the magnet)
-        // therefore counts toward the parent's suspect stamp
-        retriedWon = Option(root.get("retried_won")).toSeq.flatMap(
-          _.elements().asScala.toSeq.map(_.asText()))))
-    } catch {
-      case t: Throwable =>
-        System.err.println("WARNING: streaming child JVM launch failed: " +
-          t.getClass.getSimpleName + ": " + Option(t.getMessage).getOrElse(""))
-        None
+      (name, runs.map(_._1).sorted, runs.flatMap(_._2).headOption)
     }
+    val mapper = new ObjectMapper()
+    val line = mapper.createObjectNode().put("metric", "total")
+      .put("value", r4(results.map(_._2(Repeats / 2)).sum)).put("unit", "sec")
+    val (qs, spread, errs) =
+      (line.putObject("queries"), line.putObject("spread"), line.putObject("errs"))
+    results.foreach { case (name, secs, err) =>
+      qs.put(name, r4(secs(Repeats / 2)))
+      spread.putArray(name).add(r4(secs.head)).add(r4(secs.last))
+      err.foreach(errs.put(name, _))
+    }
+    line.put("sf", sfDir)
+    mapper.writeValueAsString(line)
   }
 }

@@ -91,9 +91,9 @@ object MetaBench {
         GraftFormat.manifestPath(dir, m2.version)).getLen
 
       // single-shot sub-2s measurements on a busy JVM invert orderings
-      // by GC/JIT noise (graft.PackProbe, r15 VERDICT #2): every load_*
-      // and plan_* metric below reports the median of 3 runs; bodies
-      // stash their result in an outer var when one is wanted
+      // by GC/JIT noise (r15 VERDICT #2): every load_* and plan_*
+      // metric below reports the median of 3 runs; bodies stash their
+      // result in an outer var when one is wanted
       def medianNs(n: Int)(body: => Unit): Long = {
         val runs = (1 to n).map { _ =>
           val t = System.nanoTime(); body; System.nanoTime() - t
@@ -386,8 +386,8 @@ object MetaBench {
       def tableDF = org.apache.spark.sql.GraftShim.tableDF(spark,
         new graft.connector.GraftTable(s"metabench:$dir", dir, loaded,
           fs.getConf))
-      // plan_* medians adjudicate r15 VERDICT #2 (graft.PackProbe): the
-      // r15 artifact's plan_packed > plan_full inversion at 10⁵ was
+      // plan_* medians adjudicate r15 VERDICT #2: the r15 artifact's
+      // plan_packed > plan_full inversion at 10⁵ was
       // single-shot measurement order — packed ran last, cold JIT,
       // accumulated GC — not an algorithmic cost; repeats on the same
       // box show packed at or below full at every fragment count.

@@ -5,9 +5,8 @@ import scala.jdk.CollectionConverters._
 /** Child-JVM launch/await machinery: the current JVM's own flags and
   * classpath, stdout to a file so a hung child can never block the
   * parent on a pipe. Used by the two-process storm
-  * ([[StormAgent]] via `TwoProcessStormSpec` and [[StormBench]]) and by
-  * the bench's isolated streaming phase ([[Bench]] runChildPhase) —
-  * one copy, so a launch fix reaches every child. */
+  * ([[StormAgent]] via `TwoProcessStormSpec` and [[StormBench]]) — one
+  * copy, so a launch fix reaches every child. */
 object StormHarness {
 
   final case class AgentHandle(proc: Process, out: java.nio.file.Path)

@@ -1438,12 +1438,12 @@ object TextOps {
     },
 
     // Incremental dedup: the daily-build shape at 100 TB — index 3/4 of
-    // the corpus once ([[minhashIndex]], persisted; phase-split as
-    // .build), then flag near-dups in the remaining 1/4 "delta" against
-    // the persisted index plus within the delta, touching only
-    // (doc_id, minhash) on the indexed side — the indexed TEXT is never
-    // re-read. Golden-pinned (minhash is not SQL-expressible);
-    // two-config bit-stability verified before pinning.
+    // the corpus once ([[minhashIndex]], persisted), then flag near-dups
+    // in the remaining 1/4 "delta" against the persisted index plus
+    // within the delta, touching only (doc_id, minhash) on the indexed
+    // side — the indexed TEXT is never re-read. Golden-pinned (minhash
+    // is not SQL-expressible); two-config bit-stability verified before
+    // pinning.
     Q.golden("t26_incremental_dedup",
       Seq("doc_id", "dup_of", "est_jaccard"), "doc_id",
       "delta near-dups vs a persisted minhash index, no corpus recompute") {
@@ -1464,9 +1464,7 @@ object TextOps {
       // also never get overwritten by later runs — remove on exit or
       // repeated bench/verify JVMs would accumulate them in tmp
       removeOnExit(idxPath)
-      graft.BenchPhases.timed("t26_incremental_dedup.build") {
-        graft.ops.MinhashStore.build(minhashIndex(base), idxPath)
-      }
+      graft.ops.MinhashStore.build(minhashIndex(base), idxPath)
       // O(delta) probe against the bloom+bucket store (r17 VERDICT
       // #2); candidates and scores — and therefore the golden — are
       // identical to the former full-signature-scan path

@@ -99,7 +99,7 @@ object VectorOps {
     * N ≈ 4·10⁶ every balanced cluster splits too, and total pair work
     * is ≤ N × absCap — linear with a bounded constant, proven on a
     * deliberately balanced fair-share ≫ absCap corpus
-    * (BENCH_SCALE.json "balanced" section, tools/balanced_probe.py).
+    * (BENCH_SCALE.json "balanced" section).
     *
     * The sub-split itself is bounded two ways (a fixed 64-bucket LSH
     * left M²/64 pairs inside a mega-cluster): (1) LSH planes WIDEN with
@@ -253,9 +253,8 @@ object VectorOps {
   }
 
   /** Absolute ceiling composed into the default sub-split threshold —
-    * min(absCap, 4 × fair share). Overridable per-session for probes
-    * (tools/balanced_probe.py scales it down to keep the balanced
-    * corpus tractable while preserving fairShare ≫ absCap). */
+    * min(absCap, 4 × fair share). Overridable per-session, so a small
+    * corpus can still exercise fairShare ≫ absCap. */
   private[graft] val AbsCapKey = "spark.graft.semdedup.absCap"
   private[graft] val DefaultAbsCap = 4096
 
@@ -438,10 +437,8 @@ object VectorOps {
           "graft_wh", "db", "emb_idx.graft").toUri)
       val fs = dir.getFileSystem(s.sessionState.newHadoopConf())
       // (re)materialize the corpus as a graft table + build its index
-      graft.BenchPhases.timed("v02_ann_lsh.build") {
-        graft.connector.GraftWriter.write(fs, dir, emb(s, d), overwrite = true)
-        graft.ops.VectorIndex.build(s, dir, "vec_id", "embedding")
-      }
+      graft.connector.GraftWriter.write(fs, dir, emb(s, d), overwrite = true)
+      graft.ops.VectorIndex.build(s, dir, "vec_id", "embedding")
       val idx = graft.ops.VectorIndex.readCurrent(s, dir, "embedding")
         .getOrElse(throw new IllegalStateException("index build did not land"))
       val queries = withLshBucket(emb(s, d).filter(col("vec_id") < 20), "embedding")
@@ -481,10 +478,8 @@ object VectorOps {
         java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
           "graft_wh", "db", "emb_ivf.graft").toUri)
       val fs = dir.getFileSystem(s.sessionState.newHadoopConf())
-      graft.BenchPhases.timed("v05_ann_ivf.build") {
-        graft.connector.GraftWriter.write(fs, dir, emb(s, d), overwrite = true)
-        graft.ops.VectorIndex.Ivf.build(s, dir, "vec_id", "embedding")
-      }
+      graft.connector.GraftWriter.write(fs, dir, emb(s, d), overwrite = true)
+      graft.ops.VectorIndex.Ivf.build(s, dir, "vec_id", "embedding")
       val (cents, assign) = graft.ops.VectorIndex.Ivf.readCurrent(s, dir, "embedding")
         .getOrElse(throw new IllegalStateException("ivf build did not land"))
       // probe: L2 distance query -> centroid, keep the 4 nearest lists
@@ -534,19 +529,13 @@ object VectorOps {
         java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
           "graft_wh", "db", "emb_pq.graft").toUri)
       val fs = dir.getFileSystem(s.sessionState.newHadoopConf())
-      graft.BenchPhases.timed("v07_ann_ivfpq.build") {
-        graft.connector.GraftWriter.write(fs, dir, emb(s, d), overwrite = true)
-        graft.ops.VectorIndex.Pq.build(s, dir, "vec_id", "embedding")
-      }
+      graft.connector.GraftWriter.write(fs, dir, emb(s, d), overwrite = true)
+      graft.ops.VectorIndex.Pq.build(s, dir, "vec_id", "embedding")
       val (centsDf, bksDf, codes) =
         graft.ops.VectorIndex.Pq.readCurrent(s, dir, "embedding")
           .getOrElse(throw new IllegalStateException("pq build did not land"))
       // query-side constants: 16 centroids + 16×256 codebook entries +
       // the ≤20-row query set (the corpus side stays distributed).
-      // Span-attributed (r19 — VERDICT r18 #7): the residual .probe is
-      // then the ADC-scan + rerank job alone.
-      val (cents, codebooks, queries) =
-        graft.BenchPhases.timed("v07_ann_ivfpq.consts") {
       val cents: Array[(Int, Array[Double])] = centsDf.collect()
         .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
       val codebooks: Array[Array[Array[Double]]] = {
@@ -558,8 +547,6 @@ object VectorOps {
       val queries = emb(s, d).filter(col("vec_id") < 20)
         .select(col("vec_id"), col("embedding")).collect()
         .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray.map(_.toDouble))
-      (cents, codebooks, queries)
-      }
       val nprobe = 4
       val tables = queries.flatMap { case (qId, q) =>
         cents.sortBy { case (_, c) =>
@@ -614,10 +601,8 @@ object VectorOps {
         java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
           "graft_wh", "db", "emb_rw.graft").toUri)
       val fs = dir.getFileSystem(s.sessionState.newHadoopConf())
-      graft.BenchPhases.timed("v06_ann_rewrite.build") {
-        graft.connector.GraftWriter.write(fs, dir, emb(s, d), overwrite = true)
-        graft.ops.VectorIndex.Ivf.build(s, dir, "vec_id", "embedding")
-      }
+      graft.connector.GraftWriter.write(fs, dir, emb(s, d), overwrite = true)
+      graft.ops.VectorIndex.Ivf.build(s, dir, "vec_id", "embedding")
       val manifest = graft.format.GraftFormat.readLatest(fs, dir).get
       val table = org.apache.spark.sql.GraftShim.tableDF(s,
         new graft.connector.GraftTable(s"v06:$dir", dir, manifest,
@@ -662,10 +647,8 @@ object VectorOps {
         java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
           "graft_wh", "db", "emb_rwl2.graft").toUri)
       val fs = dir.getFileSystem(s.sessionState.newHadoopConf())
-      graft.BenchPhases.timed("v08_ann_l2_rewrite.build") {
-        graft.connector.GraftWriter.write(fs, dir, emb(s, d), overwrite = true)
-        graft.ops.VectorIndex.Ivf.build(s, dir, "vec_id", "embedding")
-      }
+      graft.connector.GraftWriter.write(fs, dir, emb(s, d), overwrite = true)
+      graft.ops.VectorIndex.Ivf.build(s, dir, "vec_id", "embedding")
       val manifest = graft.format.GraftFormat.readLatest(fs, dir).get
       val table = org.apache.spark.sql.GraftShim.tableDF(s,
         new graft.connector.GraftTable(s"v08:$dir", dir, manifest,
@@ -710,20 +693,14 @@ object VectorOps {
         java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
           "graft_wh", "db", "emb_rwf.graft").toUri)
       val fs = dir.getFileSystem(s.sessionState.newHadoopConf())
-      graft.BenchPhases.timed("v10_ann_filtered.build") {
-        graft.connector.GraftWriter.write(fs, dir, emb(s, d), overwrite = true)
-        graft.ops.VectorIndex.Ivf.build(s, dir, "vec_id", "embedding")
-      }
-      // span-attributed setup (r19 — VERDICT r18 #7): manifest read +
-      // the one-row query-vector fetch
-      val (table, qv) = graft.BenchPhases.timed("v10_ann_filtered.setup") {
-        val manifest = graft.format.GraftFormat.readLatest(fs, dir).get
-        val t = org.apache.spark.sql.GraftShim.tableDF(s,
-          new graft.connector.GraftTable(s"v10:$dir", dir, manifest,
-            s.sessionState.newHadoopConf()))
-        (t, emb(s, d).filter(col("vec_id") === 7)
-          .select("embedding").head().getSeq[Float](0))
-      }
+      graft.connector.GraftWriter.write(fs, dir, emb(s, d), overwrite = true)
+      graft.ops.VectorIndex.Ivf.build(s, dir, "vec_id", "embedding")
+      val manifest = graft.format.GraftFormat.readLatest(fs, dir).get
+      val table = org.apache.spark.sql.GraftShim.tableDF(s,
+        new graft.connector.GraftTable(s"v10:$dir", dir, manifest,
+          s.sessionState.newHadoopConf()))
+      val qv = emb(s, d).filter(col("vec_id") === 7)
+        .select("embedding").head().getSeq[Float](0)
       val rule = graft.plans.AnnTopKIndexRewrite(s)
       s.experimental.extraOptimizations =
         s.experimental.extraOptimizations :+ rule
@@ -735,19 +712,13 @@ object VectorOps {
             col("embedding"), typedlit(qv)).desc)
           .limit(10)
           .select(col("vec_id"))
-        // plan/optimize time (the rewrite rule runs here) vs the probe
-        // job itself, separately attributed (r19 — VERDICT r18 #7)
-        val probed = graft.BenchPhases.timed("v10_ann_filtered.plan") {
-          q.queryExecution.optimizedPlan.collect {
-            case j: org.apache.spark.sql.catalyst.plans.logical.Join
-                if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi => j
-          }.nonEmpty
-        }
+        val probed = q.queryExecution.optimizedPlan.collect {
+          case j: org.apache.spark.sql.catalyst.plans.logical.Join
+              if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi => j
+        }.nonEmpty
         require(probed,
           "filtered ANN rewrite did not fire — no index probe in plan")
-        val rows = graft.BenchPhases.timed("v10_ann_filtered.query") {
-          q.collect()
-        }
+        val rows = q.collect()
         import s.implicits._
         rows.map(_.getLong(0)).toSeq.zipWithIndex
           .map { case (id, i) => (i + 1, id) }.toDF("rank", "vec_id")
@@ -775,10 +746,8 @@ object VectorOps {
         java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
           "graft_wh", "db", "emb_rwa.graft").toUri)
       val fs = dir.getFileSystem(s.sessionState.newHadoopConf())
-      graft.BenchPhases.timed("v11_ann_adaptive.build") {
-        graft.connector.GraftWriter.write(fs, dir, emb(s, d), overwrite = true)
-        graft.ops.VectorIndex.Ivf.build(s, dir, "vec_id", "embedding")
-      }
+      graft.connector.GraftWriter.write(fs, dir, emb(s, d), overwrite = true)
+      graft.ops.VectorIndex.Ivf.build(s, dir, "vec_id", "embedding")
       val manifest = graft.format.GraftFormat.readLatest(fs, dir).get
       val table = org.apache.spark.sql.GraftShim.tableDF(s,
         new graft.connector.GraftTable(s"v11:$dir", dir, manifest,
@@ -796,9 +765,6 @@ object VectorOps {
             col("embedding"), typedlit(qv)).desc)
           .limit(10)
           .select(col("vec_id"))
-        // no explicit .probe sub-phase: Bench derives <q>.probe =
-        // total - build whenever <q>.build exists; timing it here too
-        // would emit a duplicate key into the artifact's phases object
         val rows = q.collect()
         require(rows.length == 10,
           s"recall cliff: expected exactly k=10 rows, got ${rows.length}")

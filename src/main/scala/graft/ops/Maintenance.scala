@@ -124,19 +124,13 @@ object Maintenance {
     val opts = GraftWriter.parquetOptions(spark, manifest.properties) ++
       GraftTable.storageOptions(spark, conf)
     val files = if (zorderBy.nonEmpty) {
-      // phase spans are observability only (land as compact.* in bench
-      // artifacts when a timed query runs this): the rewrite is three
-      // passes — quantile cuts (narrow), the range-exchange sample of
-      // __z (narrow), and the full data write
-      val z = graft.BenchPhases.timed("compact.zorder_quantiles") {
-        zValue(live, zorderBy)
-      }
-      graft.BenchPhases.timed("compact.zorder_write") {
-        FragmentWriter.write(live.withColumn("__z", z)
-          .repartitionByRange(nOut, col("__z"))
-          .sortWithinPartitions("__z")
-          .drop("__z"), qualDir, options = opts)
-      }
+      // the rewrite is three passes — quantile cuts (narrow), the
+      // range-exchange sample of __z (narrow), and the full data write
+      val z = zValue(live, zorderBy)
+      FragmentWriter.write(live.withColumn("__z", z)
+        .repartitionByRange(nOut, col("__z"))
+        .sortWithinPartitions("__z")
+        .drop("__z"), qualDir, options = opts)
     } else if (sortBy.isEmpty)
       FragmentWriter.write(live.coalesce(nOut), qualDir,
         maxRows = (total + nOut - 1) / nOut, options = opts)

@@ -95,13 +95,11 @@ object FormatQueries {
       "manifest-served count(*) after DELETE (deletion-aware)") { (s, d) =>
       setup(s, d)
       // CTAS + DELETE are table prep; the measured operator is the
-      // manifest-served deletion-aware count (the probe)
-      graft.BenchPhases.timed("g04_manifest_count.build") {
-        s.sql("DROP TABLE IF EXISTS graft.db.li_cnt")
-        Tables.load(s, d, "lineitem").createOrReplaceTempView("li_cnt_src")
-        s.sql("CREATE TABLE graft.db.li_cnt AS SELECT * FROM li_cnt_src")
-        s.sql("DELETE FROM graft.db.li_cnt WHERE l_returnflag = 'A'")
-      }
+      // manifest-served deletion-aware count
+      s.sql("DROP TABLE IF EXISTS graft.db.li_cnt")
+      Tables.load(s, d, "lineitem").createOrReplaceTempView("li_cnt_src")
+      s.sql("CREATE TABLE graft.db.li_cnt AS SELECT * FROM li_cnt_src")
+      s.sql("DELETE FROM graft.db.li_cnt WHERE l_returnflag = 'A'")
       s.table("graft.db.li_cnt").agg(count(lit(1)).as("n"))
     },
 
@@ -181,19 +179,17 @@ object FormatQueries {
       "compact folds fragments+deletes, vacuum drops history; data exact") { (s, d) =>
       setup(s, d)
       // table prep (fragment fan-out the compaction will fold)
-      graft.BenchPhases.timed("g08_compact_vacuum.build") {
-        s.sql("DROP TABLE IF EXISTS graft.db.supp_cmp")
-        s.sql("CREATE TABLE graft.db.supp_cmp (s_suppkey BIGINT, s_name STRING, " +
-          "s_nationkey INT, s_acctbal DOUBLE)")
-        val supp = Tables.load(s, d, "supplier")
-        // several small appends -> many fragments
-        (0 until 4).foreach { i =>
-          supp.filter(col("s_suppkey") % 4 === i)
-            .createOrReplaceTempView(s"supp_cmp_$i")
-          s.sql(s"INSERT INTO graft.db.supp_cmp SELECT * FROM supp_cmp_$i")
-        }
-        s.sql("DELETE FROM graft.db.supp_cmp WHERE s_acctbal < 0")
+      s.sql("DROP TABLE IF EXISTS graft.db.supp_cmp")
+      s.sql("CREATE TABLE graft.db.supp_cmp (s_suppkey BIGINT, s_name STRING, " +
+        "s_nationkey INT, s_acctbal DOUBLE)")
+      val supp = Tables.load(s, d, "supplier")
+      // several small appends -> many fragments
+      (0 until 4).foreach { i =>
+        supp.filter(col("s_suppkey") % 4 === i)
+          .createOrReplaceTempView(s"supp_cmp_$i")
+        s.sql(s"INSERT INTO graft.db.supp_cmp SELECT * FROM supp_cmp_$i")
       }
+      s.sql("DELETE FROM graft.db.supp_cmp WHERE s_acctbal < 0")
       // maintenance through the SQL surface (ProcedureCatalog)
       s.sql("CALL graft.system.compact(`table` => 'db.supp_cmp', " +
         "min_rows => 1000000)")
@@ -221,16 +217,14 @@ object FormatQueries {
       setup(s, d)
       // interleaved-append table prep; the measured operator is the
       // sorted compaction + the range probe it accelerates
-      graft.BenchPhases.timed("g10_sorted_compact.build") {
-        s.sql("DROP TABLE IF EXISTS graft.db.ord_srt")
-        val ord = Tables.load(s, d, "orders")
-        ord.filter(col("o_orderkey") % 4 === 0).createOrReplaceTempView("ord_srt_0")
-        s.sql("CREATE TABLE graft.db.ord_srt AS SELECT * FROM ord_srt_0")
-        (1 until 4).foreach { i =>
-          ord.filter(col("o_orderkey") % 4 === i)
-            .createOrReplaceTempView(s"ord_srt_$i")
-          s.sql(s"INSERT INTO graft.db.ord_srt SELECT * FROM ord_srt_$i")
-        }
+      s.sql("DROP TABLE IF EXISTS graft.db.ord_srt")
+      val ord = Tables.load(s, d, "orders")
+      ord.filter(col("o_orderkey") % 4 === 0).createOrReplaceTempView("ord_srt_0")
+      s.sql("CREATE TABLE graft.db.ord_srt AS SELECT * FROM ord_srt_0")
+      (1 until 4).foreach { i =>
+        ord.filter(col("o_orderkey") % 4 === i)
+          .createOrReplaceTempView(s"ord_srt_$i")
+        s.sql(s"INSERT INTO graft.db.ord_srt SELECT * FROM ord_srt_$i")
       }
       val dir = new org.apache.hadoop.fs.Path(
         Paths.get(sys.props("java.io.tmpdir"), "graft_wh", "db",
@@ -260,27 +254,22 @@ object FormatQueries {
         |ORDER BY o_orderpriority""".stripMargin,
       "zorder compact clusters on (custkey, totalprice); probe stays exact") { (s, d) =>
       setup(s, d)
-      graft.BenchPhases.timed("g15_zorder_compact.build") {
-        s.sql("DROP TABLE IF EXISTS graft.db.ord_zo")
-        val ord = Tables.load(s, d, "orders")
-        ord.filter(col("o_orderkey") % 4 === 0).createOrReplaceTempView("ord_zo_0")
-        s.sql("CREATE TABLE graft.db.ord_zo AS SELECT * FROM ord_zo_0")
-        (1 until 4).foreach { i =>
-          ord.filter(col("o_orderkey") % 4 === i)
-            .createOrReplaceTempView(s"ord_zo_$i")
-          s.sql(s"INSERT INTO graft.db.ord_zo SELECT * FROM ord_zo_$i")
-        }
+      s.sql("DROP TABLE IF EXISTS graft.db.ord_zo")
+      val ord = Tables.load(s, d, "orders")
+      ord.filter(col("o_orderkey") % 4 === 0).createOrReplaceTempView("ord_zo_0")
+      s.sql("CREATE TABLE graft.db.ord_zo AS SELECT * FROM ord_zo_0")
+      (1 until 4).foreach { i =>
+        ord.filter(col("o_orderkey") % 4 === i)
+          .createOrReplaceTempView(s"ord_zo_$i")
+        s.sql(s"INSERT INTO graft.db.ord_zo SELECT * FROM ord_zo_$i")
       }
       // the measured operator is the z-order rewrite + the 2-D probe it
-      // accelerates (interleaved-append prep is the build phase above;
-      // the rewrite gets its own phase so probe cost reads honestly)
+      // accelerates; the interleaved appends above are table prep
       val dir = new org.apache.hadoop.fs.Path(
         Paths.get(sys.props("java.io.tmpdir"), "graft_wh", "db",
           "ord_zo.graft").toUri)
-      graft.BenchPhases.timed("g15_zorder_compact.optimize") {
-        graft.ops.Maintenance.compact(s, dir, minRows = 4000L,
-          zorderBy = Seq("o_custkey", "o_totalprice"))
-      }
+      graft.ops.Maintenance.compact(s, dir, minRows = 4000L,
+        zorderBy = Seq("o_custkey", "o_totalprice"))
       s.table("graft.db.ord_zo")
         .filter(col("o_custkey").between(500, 1000) &&
           col("o_totalprice").between(50000, 150000))
@@ -324,12 +313,10 @@ object FormatQueries {
       val dir = new org.apache.hadoop.fs.Path(
         Paths.get(sys.props("java.io.tmpdir"), "graft_wh", "db",
           "docs_fts.graft").toUri)
-      graft.BenchPhases.timed("g16_text_index.build") {
-        s.sql("DROP TABLE IF EXISTS graft.db.docs_fts")
-        Tables.load(s, d, "documents").createOrReplaceTempView("docs_fts_src")
-        s.sql("CREATE TABLE graft.db.docs_fts AS SELECT * FROM docs_fts_src")
-        graft.ops.TextIndex.build(s, dir, "doc_id", "text")
-      }
+      s.sql("DROP TABLE IF EXISTS graft.db.docs_fts")
+      Tables.load(s, d, "documents").createOrReplaceTempView("docs_fts_src")
+      s.sql("CREATE TABLE graft.db.docs_fts AS SELECT * FROM docs_fts_src")
+      graft.ops.TextIndex.build(s, dir, "doc_id", "text")
       graft.ops.TextIndex.searchCurrent(
         s, dir, "text", Seq("vector", "join", "filter"), 50).get
     },
@@ -349,23 +336,20 @@ object FormatQueries {
       "join of two bucketized graft tables stays exact") { (s, d) =>
       setup(s, d)
       // the 2 CTAS + 2 bucketize rewrites are table PREP, not the probe
-      // — phase-split so the bench reports build vs probe like g12/v0x
-      graft.BenchPhases.timed("g11_bucketized_join.build") {
-        s.sql("DROP TABLE IF EXISTS graft.db.cust_bkt")
-        s.sql("DROP TABLE IF EXISTS graft.db.ord_bkt")
-        Tables.load(s, d, "customer").createOrReplaceTempView("cust_bkt_src")
-        Tables.load(s, d, "orders").createOrReplaceTempView("ord_bkt_src")
-        s.sql("CREATE TABLE graft.db.cust_bkt AS SELECT * FROM cust_bkt_src")
-        s.sql("CREATE TABLE graft.db.ord_bkt AS SELECT * FROM ord_bkt_src")
-        val cd = new org.apache.hadoop.fs.Path(
-          Paths.get(sys.props("java.io.tmpdir"), "graft_wh", "db",
-            "cust_bkt.graft").toUri)
-        val od = new org.apache.hadoop.fs.Path(
-          Paths.get(sys.props("java.io.tmpdir"), "graft_wh", "db",
-            "ord_bkt.graft").toUri)
-        graft.ops.Maintenance.bucketize(s, cd, "c_custkey", 8)
-        graft.ops.Maintenance.bucketize(s, od, "o_custkey", 8)
-      }
+      s.sql("DROP TABLE IF EXISTS graft.db.cust_bkt")
+      s.sql("DROP TABLE IF EXISTS graft.db.ord_bkt")
+      Tables.load(s, d, "customer").createOrReplaceTempView("cust_bkt_src")
+      Tables.load(s, d, "orders").createOrReplaceTempView("ord_bkt_src")
+      s.sql("CREATE TABLE graft.db.cust_bkt AS SELECT * FROM cust_bkt_src")
+      s.sql("CREATE TABLE graft.db.ord_bkt AS SELECT * FROM ord_bkt_src")
+      val cd = new org.apache.hadoop.fs.Path(
+        Paths.get(sys.props("java.io.tmpdir"), "graft_wh", "db",
+          "cust_bkt.graft").toUri)
+      val od = new org.apache.hadoop.fs.Path(
+        Paths.get(sys.props("java.io.tmpdir"), "graft_wh", "db",
+          "ord_bkt.graft").toUri)
+      graft.ops.Maintenance.bucketize(s, cd, "c_custkey", 8)
+      graft.ops.Maintenance.bucketize(s, od, "o_custkey", 8)
       s.table("graft.db.cust_bkt")
         .join(s.table("graft.db.ord_bkt"),
           col("c_custkey") === col("o_custkey"))
@@ -390,23 +374,21 @@ object FormatQueries {
         |ORDER BY c_custkey""".stripMargin,
       "equality/IN through a persisted scalar index stays exact") { (s, d) =>
       setup(s, d)
-      graft.BenchPhases.timed("g12_scalar_index.build") {
-        s.sql("DROP TABLE IF EXISTS graft.db.cust_si")
-        val cust = Tables.load(s, d, "customer")
-        cust.createOrReplaceTempView("cust_si_src")
-        // interleave custkeys across 4 appended fragments (mod 4) so
-        // every fragment's zone map covers the whole key range
-        s.sql("""CREATE TABLE graft.db.cust_si AS
-                |SELECT * FROM cust_si_src WHERE c_custkey % 4 = 0""".stripMargin)
-        (1 until 4).foreach { i =>
-          s.sql(s"""INSERT INTO graft.db.cust_si
-                   |SELECT * FROM cust_si_src WHERE c_custkey % 4 = $i""".stripMargin)
-        }
-        val dir = new org.apache.hadoop.fs.Path(
-          Paths.get(sys.props("java.io.tmpdir"), "graft_wh", "db",
-            "cust_si.graft").toUri)
-        graft.ops.ScalarIndex.build(s, dir, "c_custkey")
+      s.sql("DROP TABLE IF EXISTS graft.db.cust_si")
+      val cust = Tables.load(s, d, "customer")
+      cust.createOrReplaceTempView("cust_si_src")
+      // interleave custkeys across 4 appended fragments (mod 4) so
+      // every fragment's zone map covers the whole key range
+      s.sql("""CREATE TABLE graft.db.cust_si AS
+              |SELECT * FROM cust_si_src WHERE c_custkey % 4 = 0""".stripMargin)
+      (1 until 4).foreach { i =>
+        s.sql(s"""INSERT INTO graft.db.cust_si
+                 |SELECT * FROM cust_si_src WHERE c_custkey % 4 = $i""".stripMargin)
       }
+      val dir = new org.apache.hadoop.fs.Path(
+        Paths.get(sys.props("java.io.tmpdir"), "graft_wh", "db",
+          "cust_si.graft").toUri)
+      graft.ops.ScalarIndex.build(s, dir, "c_custkey")
       s.table("graft.db.cust_si")
         .filter(col("c_custkey").isin(7L, 421L, 1000L))
         .select("c_custkey", "c_name", "c_mktsegment")
@@ -424,23 +406,21 @@ object FormatQueries {
         |ORDER BY c_custkey""".stripMargin,
       "bounded BETWEEN through a persisted scalar index stays exact") { (s, d) =>
       setup(s, d)
-      graft.BenchPhases.timed("g14_range_index.build") {
-        s.sql("DROP TABLE IF EXISTS graft.db.cust_ri")
-        val cust = Tables.load(s, d, "customer")
-        cust.createOrReplaceTempView("cust_ri_src")
-        // interleave custkeys across 4 appended fragments (mod 4) so
-        // every fragment's zone map covers the whole key range
-        s.sql("""CREATE TABLE graft.db.cust_ri AS
-                |SELECT * FROM cust_ri_src WHERE c_custkey % 4 = 0""".stripMargin)
-        (1 until 4).foreach { i =>
-          s.sql(s"""INSERT INTO graft.db.cust_ri
-                   |SELECT * FROM cust_ri_src WHERE c_custkey % 4 = $i""".stripMargin)
-        }
-        val dir = new org.apache.hadoop.fs.Path(
-          Paths.get(sys.props("java.io.tmpdir"), "graft_wh", "db",
-            "cust_ri.graft").toUri)
-        graft.ops.ScalarIndex.build(s, dir, "c_custkey")
+      s.sql("DROP TABLE IF EXISTS graft.db.cust_ri")
+      val cust = Tables.load(s, d, "customer")
+      cust.createOrReplaceTempView("cust_ri_src")
+      // interleave custkeys across 4 appended fragments (mod 4) so
+      // every fragment's zone map covers the whole key range
+      s.sql("""CREATE TABLE graft.db.cust_ri AS
+              |SELECT * FROM cust_ri_src WHERE c_custkey % 4 = 0""".stripMargin)
+      (1 until 4).foreach { i =>
+        s.sql(s"""INSERT INTO graft.db.cust_ri
+                 |SELECT * FROM cust_ri_src WHERE c_custkey % 4 = $i""".stripMargin)
       }
+      val dir = new org.apache.hadoop.fs.Path(
+        Paths.get(sys.props("java.io.tmpdir"), "graft_wh", "db",
+          "cust_ri.graft").toUri)
+      graft.ops.ScalarIndex.build(s, dir, "c_custkey")
       s.table("graft.db.cust_ri")
         .filter(col("c_custkey") >= 701L && col("c_custkey") <= 724L)
         .select("c_custkey", "c_name", "c_mktsegment")
@@ -537,17 +517,11 @@ object FormatQueries {
       hc.set(graft.sources.S3LiteFileSystem.EndpointKey, srv.endpoint)
       s.conf.set("spark.sql.catalog.graft_s3", "graft.catalog.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft_s3.warehouse", "s3a://graft/wh")
-      graft.BenchPhases.timed("g17_s3_object_store.setup") {
-        s.sql("CREATE NAMESPACE IF NOT EXISTS graft_s3.db")
-        s.sql("DROP TABLE IF EXISTS graft_s3.db.cust_s3")
-        Tables.load(s, d, "customer").createOrReplaceTempView("cust_s3_src")
-      }
-      graft.BenchPhases.timed("g17_s3_object_store.ctas") {
-        s.sql("CREATE TABLE graft_s3.db.cust_s3 AS SELECT * FROM cust_s3_src")
-      }
-      graft.BenchPhases.timed("g17_s3_object_store.delete") {
-        s.sql("DELETE FROM graft_s3.db.cust_s3 WHERE c_custkey % 3 = 0")
-      }
+      s.sql("CREATE NAMESPACE IF NOT EXISTS graft_s3.db")
+      s.sql("DROP TABLE IF EXISTS graft_s3.db.cust_s3")
+      Tables.load(s, d, "customer").createOrReplaceTempView("cust_s3_src")
+      s.sql("CREATE TABLE graft_s3.db.cust_s3 AS SELECT * FROM cust_s3_src")
+      s.sql("DELETE FROM graft_s3.db.cust_s3 WHERE c_custkey % 3 = 0")
       s.table("graft_s3.db.cust_s3")
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"),

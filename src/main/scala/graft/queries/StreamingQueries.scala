@@ -110,31 +110,29 @@ object StreamingQueries {
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
       val ckpt = graft.TempDirs.create("graft-s01-ckpt").toString
       val out = graft.TempDirs.create("graft-s01-out").toString
-      graft.BenchPhases.timed("s01_streaming_dedup.build") {
-        s.sql("DROP TABLE IF EXISTS graft.db.s01_crawl")
-        docs.filter(col("doc_id") <= mid)
-          .createOrReplaceTempView("s01_b1")
-        s.sql("CREATE TABLE graft.db.s01_crawl AS SELECT * FROM s01_b1")
-        def drain(): Unit = {
-          val q = startWithStreamShuffle(s) {
-            graft.streaming.StreamingDedup.firstSeen(
-              s.readStream.table("graft.db.s01_crawl"), "doc_id", "text")
-              .writeStream.format("parquet")
-              .option("path", out).option("checkpointLocation", ckpt)
-              .trigger(Trigger.AvailableNow()).start()
-          }
-          if (!q.awaitTermination(300000)) {
-            q.stop() // never start a second query on a live checkpoint
-            throw new IllegalStateException(
-              "s01 micro-batch drain did not finish within 300s")
-          }
+      s.sql("DROP TABLE IF EXISTS graft.db.s01_crawl")
+      docs.filter(col("doc_id") <= mid)
+        .createOrReplaceTempView("s01_b1")
+      s.sql("CREATE TABLE graft.db.s01_crawl AS SELECT * FROM s01_b1")
+      def drain(): Unit = {
+        val q = startWithStreamShuffle(s) {
+          graft.streaming.StreamingDedup.firstSeen(
+            s.readStream.table("graft.db.s01_crawl"), "doc_id", "text")
+            .writeStream.format("parquet")
+            .option("path", out).option("checkpointLocation", ckpt)
+            .trigger(Trigger.AvailableNow()).start()
         }
-        drain()
-        docs.filter(col("doc_id") > mid).unionByName(copies)
-          .createOrReplaceTempView("s01_b2")
-        s.sql("INSERT INTO graft.db.s01_crawl SELECT * FROM s01_b2")
-        drain()
+        if (!q.awaitTermination(300000)) {
+          q.stop() // never start a second query on a live checkpoint
+          throw new IllegalStateException(
+            "s01 micro-batch drain did not finish within 300s")
+        }
       }
+      drain()
+      docs.filter(col("doc_id") > mid).unionByName(copies)
+        .createOrReplaceTempView("s01_b2")
+      s.sql("INSERT INTO graft.db.s01_crawl SELECT * FROM s01_b2")
+      drain()
       s.read.parquet(out)
         .select(col("doc_id"), col("content_hash"))
         .orderBy("doc_id")
@@ -170,40 +168,34 @@ object StreamingQueries {
         .head().getLong(0)
       val ckpt = graft.TempDirs.create("graft-s02-ckpt").toString
       val out = graft.TempDirs.create("graft-s02-out").toString
-      graft.BenchPhases.timed("s02_streaming_window.build") {
-        graft.BenchPhases.timed("s02_streaming_window.ctas") {
-          s.sql("DROP TABLE IF EXISTS graft.db.s02_events")
-          ev.filter(col("event_id") <= mid)
-            .createOrReplaceTempView("s02_b1")
-          s.sql("CREATE TABLE graft.db.s02_events AS SELECT * FROM s02_b1")
+      s.sql("DROP TABLE IF EXISTS graft.db.s02_events")
+      ev.filter(col("event_id") <= mid)
+        .createOrReplaceTempView("s02_b1")
+      s.sql("CREATE TABLE graft.db.s02_events AS SELECT * FROM s02_b1")
+      def drain(): Unit = {
+        val q = startWithStreamShuffle(s) {
+          s.readStream.table("graft.db.s02_events")
+            .withWatermark("ts", "1 minute")
+            .groupBy(window(col("ts"), "1 day"), col("event_type"))
+            .agg(count(lit(1)).as("n"), sum(col("value")).as("total_raw"))
+            .writeStream.format("parquet")
+            .option("path", out).option("checkpointLocation", ckpt)
+            .trigger(Trigger.AvailableNow()).start()
         }
-        def drain(): Unit = {
-          val q = startWithStreamShuffle(s) {
-            s.readStream.table("graft.db.s02_events")
-              .withWatermark("ts", "1 minute")
-              .groupBy(window(col("ts"), "1 day"), col("event_type"))
-              .agg(count(lit(1)).as("n"), sum(col("value")).as("total_raw"))
-              .writeStream.format("parquet")
-              .option("path", out).option("checkpointLocation", ckpt)
-              .trigger(Trigger.AvailableNow()).start()
-          }
-          if (!q.awaitTermination(300000)) {
-            q.stop() // never start a second query on a live checkpoint
-            throw new IllegalStateException(
-              "s02 micro-batch drain did not finish within 300s")
-          }
+        if (!q.awaitTermination(300000)) {
+          q.stop() // never start a second query on a live checkpoint
+          throw new IllegalStateException(
+            "s02 micro-batch drain did not finish within 300s")
         }
-        graft.BenchPhases.timed("s02_streaming_window.drain1") { drain() }
-        graft.BenchPhases.timed("s02_streaming_window.insert") {
-          val sentinel = s.sql("SELECT CAST(-1 AS BIGINT) AS event_id, " +
-            "TIMESTAMP'2030-01-01 00:00:00' AS ts, " +
-            "'sentinel' AS event_type, CAST(0 AS DOUBLE) AS value")
-          ev.filter(col("event_id") > mid).unionByName(sentinel)
-            .createOrReplaceTempView("s02_b2")
-          s.sql("INSERT INTO graft.db.s02_events SELECT * FROM s02_b2")
-        }
-        graft.BenchPhases.timed("s02_streaming_window.drain2") { drain() }
       }
+      drain()
+      val sentinel = s.sql("SELECT CAST(-1 AS BIGINT) AS event_id, " +
+        "TIMESTAMP'2030-01-01 00:00:00' AS ts, " +
+        "'sentinel' AS event_type, CAST(0 AS DOUBLE) AS value")
+      ev.filter(col("event_id") > mid).unionByName(sentinel)
+        .createOrReplaceTempView("s02_b2")
+      s.sql("INSERT INTO graft.db.s02_events SELECT * FROM s02_b2")
+      drain()
       s.read.parquet(out)
         .filter(col("event_type") =!= "sentinel")
         .select(col("window.start").cast("date").as("wday"), col("event_type"),

@@ -103,8 +103,8 @@ def main():
     result["total_ratio"] = round(
         result["scaled_total_sec"] / max(result["base_total_sec"], 1e-9), 2)
     # a 4x refresh must not erase sections owned by the OTHER probes —
-    # scale_probe_deep.py owns deep/deep64, balanced_probe.py owns
-    # balanced (r16: a refresh silently dropped it once)
+    # scale_probe_deep.py owns deep/deep64, and the committed balanced
+    # section is kept as a record (r16: a refresh silently dropped it once)
     if os.path.exists("BENCH_SCALE.json"):
         try:
             with open("BENCH_SCALE.json") as f:
